@@ -3880,7 +3880,7 @@ def q_corpus_curation(spark, sf_dir):
 
     docs = _tp(spark, sf_dir, "documents")
     mh = MinHashDedup(**_MINHASH)
-    ng = NGramJaccardDedup(shingle_k=3)
+    ng = NGramJaccardDedup(shingle_k=mh.shingle_k)
     # r13 (guide §2.4): shared pinned shingle relation — see
     # _verified_dedup_pairs for the equivalence argument
     sh = ng.shingle_relation(docs)
@@ -4342,7 +4342,7 @@ def _verified_dedup_pairs(spark, sf_dir):
     definition so the graded queries can never drift apart."""
     docs = _t(spark, sf_dir, "documents")
     mh = MinHashDedup(**_MINHASH)
-    ng = NGramJaccardDedup(shingle_k=3)
+    ng = NGramJaccardDedup(shingle_k=mh.shingle_k)
     # r13 (guide §2.4): ONE pinned distinct-shingle relation feeds both the
     # signature build and the exact verify — identical feature space
     # (same tokens(), same k=3), so the second corpus tokenize+shingle
@@ -4960,7 +4960,7 @@ def q_dedup_verified(spark, sf_dir):
     and it is still fully oracle-checked here."""
     docs = _t(spark, sf_dir, "documents")
     mh = MinHashDedup(**_MINHASH)
-    ng = NGramJaccardDedup(shingle_k=3)
+    ng = NGramJaccardDedup(shingle_k=mh.shingle_k)
     # r13 (guide §2.4): shared pinned shingle relation — see
     # _verified_dedup_pairs for the equivalence argument
     sh = ng.shingle_relation(docs)

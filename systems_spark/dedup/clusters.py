@@ -8,21 +8,27 @@ cluster). This is the stage between "found the pairs" and "wrote the
 deduplicated corpus".
 
 Scale design — no driver-side union-find, no recursion over collected
-edges:
+edges: ``connected_components`` is the graph family's one min-label
+fixpoint loop (``operators/graph.py::min_label``, the loop strongly
+connected components colors with) run over the SYMMETRIC edge set, where
+forward reach is exactly the connected component:
 
-- **min-label propagation + pointer jumping**, the classic O(log n)-round
-  MapReduce scheme: each round (1) every node takes the min label over its
-  neighbors' labels (one equi-join + one map-side-combined min agg), then
-  (2) labels jump through themselves (``lbl ← lbl(lbl)``, one self-join),
-  which halves chain depth — so path-shaped clusters converge in
-  O(log diameter) rounds, not O(diameter).
-- each round's result is ``localCheckpoint``-ed: the loop would otherwise
-  build an exponentially deep lineage that re-executes from scratch on
-  every convergence check. On a real cluster with flaky executors, switch
-  to reliable ``checkpoint()`` with a checkpoint dir — same call site.
+- **min-label propagation + pointer jumping**, the classic
+  O(log n)-round MapReduce scheme: each round every node takes the min
+  label over its neighbors' labels (one equi-join + one map-side-combined
+  min agg); from round 4 labels also jump through themselves
+  (``lbl ← lbl(lbl)``, one self-join), which halves chain depth — so
+  path-shaped clusters converge in O(log diameter) rounds, while the
+  dense near-dup clusters converge in 1-2 rounds without paying the jump.
+- each round's labels are pinned through ``pinning.pin(corpus_scale=
+  True)``: the loop would otherwise build an exponentially deep lineage
+  that re-executes on every convergence check. When the session has a
+  checkpoint dir the pins are RELIABLE checkpoints (they survive executor
+  loss on a real cluster), with no option to set; otherwise they are lazy
+  local checkpoints.
 - convergence = the label-sum monotone invariant: one decimal-exact
-  aggregate (never collects the frame); checked every round early, every
-  second round after round 3 (two rounds fuse into one job).
+  aggregate (never collects the frame); checked every round for rounds
+  1-3, then three rounds' sums per driver job.
 
 The reference has no graph stage (its dedup surface stops at pair scoring)
 — this is engine-side capability for the 100 TB training-data pipeline
@@ -34,176 +40,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.operators.graph import BROADCAST_NODES_MAX, min_label
+from systems_spark.pinning import pin
+
 
 def connected_components(pairs: DataFrame, a_col: str = "a", b_col: str = "b",
                          node_col: str = "node",
                          component_col: str = "component",
-                         max_iterations: int = 50,
-                         checkpoint: str = "local",
-                         salt: int = 0,
-                         broadcast_nodes_max: int = 1_000_000) -> DataFrame:
-    """One row per node appearing in ``pairs``: (node, component) where
-    component is the MINIMUM node id in the node's connected component —
-    deterministic, so the component id doubles as the canonical survivor.
+                         max_iterations: int = 50) -> DataFrame:
+    """One row per node appearing in ``pairs`` (self-loops included):
+    (node, component) where component is the MINIMUM node id in the
+    node's connected component — deterministic, so the component id
+    doubles as the canonical survivor.
 
     ``max_iterations`` is a diverged-loop guard, not a tuning knob: with
-    pointer jumping, rounds needed ≈ log2(largest cluster diameter) + 2;
+    pointer jumping, rounds needed ≈ log2(largest cluster diameter) + 4;
     50 covers any graph that fits on a cluster.
 
-    ``checkpoint``: ``'local'`` (default) truncates lineage via executor
-    block storage — fast, but a lost executor forces a full recompute of
-    that partition's lineage, which after N rounds no longer exists.
-    ``'reliable'`` writes round results to the Spark checkpoint dir
-    (``spark.sparkContext.setCheckpointDir(...)`` must be set) — the right
-    mode for long multi-round runs on real clusters where executor loss is
-    routine.
-
-    ``broadcast_nodes_max`` (r13 — the scc.py pattern): the per-round
-    label state is (node, long) rows behind stats-free checkpoint pins,
-    so Catalyst plans EVERY label-sided join as a full-shuffle SMJ —
-    measured ~4-6 s per round for a 1,778-edge match graph at 32 cores,
-    all exchange/stage floor, no data. The node set is counted ONCE
-    (the labels pin is materialized by the count, which round 0 needed
-    anyway); at or under the bound (~16 B/row ⇒ ≤ ~16 MB) the label,
-    neighbor-min and pointer-jump frames get explicit broadcast hints —
-    none of them ever exceeds the node count. Above the bound the hints
-    stay off and the shuffle plan is the correct billion-node fallback.
-
-    ``salt``: >1 spreads the pointer-jump self-join's hot key (the
-    component min, which most rows of a converged giant cluster carry)
-    across ``salt`` shuffle partitions: the left side salts by
-    ``hash(node) % salt``, the right side replicates each (node, label)
-    row ``salt`` ways. Same answer, ``salt``× right-side traffic. Leave 0
-    (off) when AQE skew-join is enabled — the right side is unique per
-    key, so AQE's split-and-replicate is already lossless and cheaper;
-    this is the explicit fallback for AQE-off clusters with ≫10M-member
-    clusters.
-    """
-    if checkpoint not in ("local", "reliable"):
-        raise ValueError("checkpoint must be 'local' or 'reliable'")
-    salt = int(salt)
-
-    def _ckpt(df: DataFrame) -> DataFrame:
-        if checkpoint == "reliable":
-            return df.checkpoint(eager=False)
-        return df.localCheckpoint(eager=False)
-
-    sym = pairs.select(
-        F.col(a_col).alias("src"), F.col(b_col).alias("dst")
-    ).union(
-        pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-    ).distinct()
-    edges = _ckpt(sym)
-
-    labels = _ckpt(
-        edges.select(F.col("src").alias("node")).distinct()
-        .withColumn("lbl", F.col("node"))
-    )
-    # one count materializes the labels pin (round 0 reads it anyway) and
-    # sizes the broadcast decision; the label frame can only shrink-or-hold
-    n_nodes = labels.count()
-    maybe_b = (F.broadcast if n_nodes <= int(broadcast_nodes_max)
-               else (lambda df: df))
-
-    _unset = object()
-    prev_sum = _unset  # label-sum from the last CHECKED round (monotone invariant)
-    pending = []  # per-round 1-row label-sum aggregates awaiting one fused check
-    for i in range(max_iterations):
-        # (1) min over neighbor labels (map-side combined; shuffles only
-        # (node, candidate-label) longs, never payloads)
-        nbr = (
-            edges.join(maybe_b(labels.withColumnRenamed("node", "src")),
-                       on="src")
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("lbl").alias("_nbr"))
-        )
-        stepped = (
-            labels.join(maybe_b(nbr), on="node", how="left")
-            .select("node", F.least(F.col("lbl"), F.coalesce("_nbr", "lbl")).alias("lbl"))
-        )
-        # (2) pointer jump: lbl ← lbl(lbl); the component minimum reaches
-        # every member in logarithmic rounds even on chain graphs.
-        # r13 (scc.py's accepted trade, deferred from the r12 audit): the
-        # jump only engages from round 3 — near-dup cluster graphs are
-        # dense/cliquey and converge in 1-2 one-hop rounds, where the
-        # jump's self-join is pure per-round overhead (a join + its
-        # exchange); a chain still shortcuts in 3 + O(log diameter)
-        # rounds once doubling starts, and rounds 0-2 cost one join less.
-        # SKEW NOTE: as clusters converge, most rows of a giant cluster
-        # carry the same _p (the component min), so the left side of this
-        # self-join is maximally skewed exactly on the clusters the
-        # operator exists for. The right side is UNIQUE per _p (one row
-        # per node), so AQE skew-join handles it perfectly: splitting the
-        # hot left partition replicates a single right-side row, never a
-        # group. Keep spark.sql.adaptive.skewJoin.enabled=true (default)
-        # on real runs; see SCALE.md for the salted fallback if AQE is
-        # unavailable.
-        if i >= 3:
-            lookup = stepped.select(F.col("node").alias("_p"),
-                                    F.col("lbl").alias("_pl"))
-            if salt > 1:
-                left = stepped.withColumnRenamed("lbl", "_p").withColumn(
-                    "_salt", F.pmod(F.xxhash64("node"), F.lit(salt)).cast("int")
-                )
-                lookup = lookup.withColumn(
-                    "_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1)))
-                )
-                join_on = ["_p", "_salt"]
-            else:
-                left = stepped.withColumnRenamed("lbl", "_p")
-                join_on = ["_p"]
-            jumped = (
-                left.join(maybe_b(lookup), on=join_on, how="left")
-                .select("node",
-                        F.least(F.col("_p"), F.coalesce("_pl", "_p")).alias("lbl"))
-            )
-        else:
-            jumped = stepped
-        labels = _ckpt(jumped)
-
-        # Convergence via the label-sum invariant: every step takes a
-        # least(...) of the old label, so per-node labels are monotonically
-        # non-increasing and the total strictly decreases until fixpoint.
-        # One decimal-exact aggregate replaces a join + count
-        # (decimal(38,0): an int64 sum of billions of int64 ids would
-        # overflow). r13 (VERDICT r12 item 2 — the anti-scaling lanes are
-        # job-count bound, ~0.35 s fixed overhead per driver action): each
-        # round's sum is a lazy 1-row aggregate; rounds 0-2 flush every
-        # round (star-shaped clusters converge in 1-2), later rounds flush
-        # THREE per action — one union-collect materializes the three
-        # pinned rounds and reads all three sums, so the driver pays one
-        # job per three rounds instead of one per round (the r4 cadence
-        # skipped every second CHECK but still detected late; this batches
-        # the checks without losing per-round resolution). Rounds built
-        # past the fixpoint before the flush are no-op stages over
-        # converged labels — idempotent by the monotone invariant, so the
-        # returned (latest) frame IS the fixpoint labeling.
-        pending.append(labels.agg(
-            F.sum(F.col("lbl").cast("decimal(38,0)")).alias("s"))
-            .select(F.lit(len(pending)).alias("_k"), "s"))
-        if i >= 3 and len(pending) < 3 and i < max_iterations - 1:
-            continue
-        flushed = pending[0]
-        for p in pending[1:]:
-            flushed = flushed.union(p)
-        rows = sorted(flushed.collect(), key=lambda r: r["_k"])
-        sums = [r["s"] for r in rows]
-        # None == None is a REAL fixpoint (sum over an empty label frame
-        # — e.g. an empty input graph stays empty every round)
-        seq = ([prev_sum] if prev_sum is not _unset else []) + sums
-        if any(a == b for a, b in zip(seq, seq[1:])):
-            break
-        prev_sum = sums[-1]
-        pending = []
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} "
-            "iterations — graph deeper than 2^iterations or labels cycling"
-        )
-
-    return labels.select(
-        F.col("node").alias(node_col), F.col("lbl").alias(component_col)
-    )
+    The node set is counted ONCE (the count materializes its pin, which
+    round 1 reads anyway); at or under ``graph.BROADCAST_NODES_MAX`` every
+    label-sided join carries a broadcast hint."""
+    e = pin(pairs.select(F.col(a_col).alias("_s"), F.col(b_col).alias("_d"))
+            .union(pairs.select(F.col(b_col).alias("_s"),
+                                F.col(a_col).alias("_d")))
+            .distinct(), corpus_scale=True)
+    nodes = pin(e.select(F.col("_s").alias("n")).distinct(),
+                corpus_scale=True)
+    bcast = nodes.count() <= BROADCAST_NODES_MAX
+    labels = min_label(nodes, e, "_d", "_s", max_iterations,
+                       "connected_components", bcast=bcast)
+    return labels.select(F.col("n").alias(node_col),
+                         F.col("c").alias(component_col))
 
 
 #: Edge cap for resolving a TOUCHED SUBGRAPH on the driver instead of
@@ -223,7 +90,7 @@ LOCAL_RESOLVE_MAX_EDGES = 250_000
 
 def _resolve_subgraph(sub: DataFrame, a_col: str, b_col: str,
                       node_col: str, component_col: str,
-                      local_max_edges: int, **cc_kwargs) -> DataFrame:
+                      local_max_edges: int) -> DataFrame:
     """``connected_components(sub)`` with a driver-local fast path for
     provably small subgraphs: identical output contract (one row per node
     appearing in any pair, component = min node id of its component —
@@ -263,7 +130,7 @@ def _resolve_subgraph(sub: DataFrame, a_col: str, b_col: str,
             return sub.sparkSession.createDataFrame(out, schema=schema)
     return connected_components(
         sub, a_col=a_col, b_col=b_col,
-        node_col=node_col, component_col=component_col, **cc_kwargs)
+        node_col=node_col, component_col=component_col)
 
 
 def incremental_components(labels: DataFrame, new_pairs: DataFrame,
@@ -271,8 +138,8 @@ def incremental_components(labels: DataFrame, new_pairs: DataFrame,
                            node_col: str = "node",
                            component_col: str = "component",
                            check_labels: bool = True,
-                           local_max_edges: int = LOCAL_RESOLVE_MAX_EDGES,
-                           **cc_kwargs) -> DataFrame:
+                           local_max_edges: int = LOCAL_RESOLVE_MAX_EDGES
+                           ) -> DataFrame:
     """Update a connected-components labeling with NEW edges without
     re-resolving the whole graph — the maintenance shape of a
     continuously-growing corpus (`streaming_ingest_dedup` admits new
@@ -334,7 +201,7 @@ def incremental_components(labels: DataFrame, new_pairs: DataFrame,
     # every incremental dedup fold), distributed loop above the cap
     resolved = _resolve_subgraph(
         sub, a_col, b_col, node_col, component_col,
-        local_max_edges, **cc_kwargs)
+        local_max_edges)
     # old components double as subgraph NODES (star endpoints); a
     # component id is always a member node, so its row is already present
     # as a node row — no synthetic ids leak out
@@ -351,8 +218,8 @@ def decremental_components(labels: DataFrame, pairs: DataFrame,
                            node_col: str = "node",
                            component_col: str = "component",
                            check_labels: bool = True,
-                           local_max_edges: int = LOCAL_RESOLVE_MAX_EDGES,
-                           **cc_kwargs) -> DataFrame:
+                           local_max_edges: int = LOCAL_RESOLVE_MAX_EDGES
+                           ) -> DataFrame:
     """Remove DELETED nodes from a standing labeling — the
     right-to-be-forgotten maintenance shape (a takedown/GDPR batch
     leaves the corpus; its documents must leave the dup clusters, and
@@ -415,7 +282,7 @@ def decremental_components(labels: DataFrame, pairs: DataFrame,
     resolved = _resolve_subgraph(
         sub.select(F.col("_a").alias(a_col), F.col("_b").alias(b_col)),
         a_col, b_col, node_col, component_col,
-        local_max_edges, **cc_kwargs)
+        local_max_edges)
     singles = (members
                .join(resolved.select(F.col(node_col).alias("_n")),
                      on="_n", how="anti")

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.dedup.ngram import NGramJaccardDedup
 from systems_spark.functions.hashing import (
     MERSENNE_31,
     hash64,
@@ -93,11 +94,27 @@ class MinHashDedup(Operator):
         so such docs are ABSENT from the output instead of carrying M31
         sentinels — pass it only where the caller filters sentinel
         signatures anyway (a non-empty doc can never hit the sentinel:
-        ``(a·h+b) mod M31 < M31``)."""
+        ``(a·h+b) mod M31 < M31``).
+
+        The relation must come from ``shingle_relation`` of an
+        NGramJaccardDedup with this operator's ``shingle_k`` and
+        ``content_col`` and ``max_shingle_freq=0`` (a frequency cap drops
+        shingles, which changes the signatures): its ``shingle`` column
+        metadata is checked, and any other relation raises ValueError."""
         from systems_spark.functions.fence import fence_columns
 
         consts = permutation_constants(self.num_perm, self.seed)
         if shingle_rows is not None:
+            want = NGramJaccardDedup(content_col=self.content_col,
+                                     shingle_k=self.shingle_k).feature_space()
+            meta = shingle_rows.schema["shingle"].metadata
+            got = {k: meta.get(k) for k in want}
+            if got != want:
+                raise ValueError(
+                    f"signatures: shingle_rows feature space {got} does not "
+                    f"match this operator's {want}; build it with "
+                    "NGramJaccardDedup(shingle_k=..., content_col=..., "
+                    "max_shingle_freq=0).shingle_relation")
             sh = shingle_rows.select(
                 F.col(self.id_col), F.col("shingle").alias("_sh")
             ).withColumn("_h", hash64(F.col("_sh")))

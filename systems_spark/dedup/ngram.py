@@ -144,8 +144,21 @@ class NGramJaccardDedup(Operator):
         ``MinHashDedup.signatures`` and again here; min-over-distinct equals
         min-over-all, so both stages can read this one pin). Pass the
         result to ``verify_pairs(..., shingles=...)`` and to
-        ``MinHashDedup.signatures(..., shingle_rows=...)``."""
-        return pin(self._shingle_rows(df), corpus_scale=True)
+        ``MinHashDedup.signatures(..., shingle_rows=...)``.
+
+        The ``shingle`` column carries :meth:`feature_space` as column
+        metadata, so a consumer can refuse a relation built over a
+        different one (``MinHashDedup.signatures`` does)."""
+        sh = self._shingle_rows(df).withMetadata("shingle",
+                                                 self.feature_space())
+        return pin(sh, corpus_scale=True)
+
+    def feature_space(self) -> dict:
+        """The shingle definition a :meth:`shingle_relation` is built
+        over: same tokenization, ``shingle_k``, ``content_col`` and
+        ``max_shingle_freq`` ⇒ the same (id, shingle) rows."""
+        return {"shingle_k": self.shingle_k, "content_col": self.content_col,
+                "max_shingle_freq": self.max_shingle_freq}
 
     def verify_pairs(self, df: DataFrame, pairs: DataFrame,
                      shingles: "DataFrame | None" = None) -> DataFrame:
@@ -158,10 +171,11 @@ class NGramJaccardDedup(Operator):
 
         ``shingles``: a pre-built ``shingle_relation(df)`` frame to reuse
         (skips re-pinning when the caller already shares it with the
-        signature stage)."""
-        # r12 perf: pin the shingle relation — it is referenced FOUR times
-        # here (a side, b side, and sizes joined on both pair ends), and
-        # each lazy reference re-ran the corpus tokenize+shingle pass.
+        signature stage). It must already be PINNED — pass the
+        ``shingle_relation`` result itself, not a lazy frame of the same
+        shape: it is referenced four times here (a side, b side, and the
+        sizes joined on both pair ends), and each lazy reference re-runs
+        the corpus tokenize+shingle pass."""
         sh = shingles if shingles is not None else self.shingle_relation(df)
         a_sh = sh.withColumnRenamed(self.id_col, "a")
         b_sh = sh.withColumnRenamed(self.id_col, "b")

@@ -13,7 +13,7 @@ joins the frontier against the edge list and anti-joins the already
 first (= minimum) hop — no per-node min aggregation over all walks is
 ever needed. Rounds are driver-paced like pagerank/kcore: one action
 per round (the frontier count doubles as the early-stop probe). Only
-each round's NEW frontier is pinned (localCheckpoint); the visited set
+each round's NEW frontier is pinned (eagerly); the visited set
 and the result are flat unions over those already-pinned per-hop
 frontiers — a union of checkpointed children cannot deepen, and the
 growing set is never re-materialized (the hyperball per-round-pin
@@ -23,12 +23,20 @@ lesson, minus the redundant re-pin of old rows).
 — frontier ∪ visited, never the edge payload; the edge list partitions
 once on src and is reused every round. Directed semantics; symmetrize
 first (operators/graph.py) for undirected graphs.
+
+Pins: the edge table and the per-hop frontiers are graph-sized, so they
+go through ``pinning.pin(corpus_scale=True)`` — reliable checkpoints
+when the session has a checkpoint dir, local checkpoints otherwise. The
+seed set is caller-sized (typically a handful of anchors) and stays a
+plain local pin.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from systems_spark.pinning import pin
 
 
 def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int,
@@ -44,19 +52,19 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, max_hops: int,
     # exchange reuse does not span actions — without the pin each round
     # would re-run the full edge scan + distinct shuffle (the
     # pagerank/kcore/hyperball cache_edges discipline)
-    e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")) \
-        .distinct().localCheckpoint(eager=False)
-    frontier = seeds.select(F.col(node_col).alias("_n")).distinct() \
-        .localCheckpoint(eager=True)
+    e = pin(edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"))
+            .distinct(), corpus_scale=True)
+    frontier = pin(seeds.select(F.col(node_col).alias("_n")).distinct(),
+                   eager=True)
     # visited = flat union over the per-hop frontiers, each already
     # pinned — never re-materialized as one growing checkpoint
     levels = [frontier.withColumn("dist", F.lit(0).cast("long"))]
     visited_nodes = frontier
     for h in range(1, max_hops + 1):
-        nxt = (frontier.join(e, frontier["_n"] == e["_s"])
-               .select(F.col("_d").alias("_n")).distinct()
-               .join(visited_nodes, on="_n", how="anti")
-               .localCheckpoint(eager=True))
+        nxt = pin(frontier.join(e, frontier["_n"] == e["_s"])
+                  .select(F.col("_d").alias("_n")).distinct()
+                  .join(visited_nodes, on="_n", how="anti"),
+                  corpus_scale=True, eager=True)
         if nxt.count() == 0:
             break
         levels.append(nxt.withColumn("dist", F.lit(h).cast("long")))

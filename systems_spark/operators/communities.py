@@ -34,6 +34,11 @@ combined aggregations — (node, label) counts, then the per-node argmax
 via one ``min(struct(-count, label))`` agg; no windows, no single-task
 stage. ``checkpoint_every`` truncates lineage like the CC resolver;
 ``stop_when_stable`` adds one count action per checked round.
+
+Pins: every pinned frame (symmetric edges, node set, per-node labels)
+is graph-sized, so all go through ``pinning.pin(corpus_scale=True)`` —
+reliable checkpoints when the session has a checkpoint dir, lazy local
+checkpoints otherwise.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from systems_spark.operators.graph import symmetrize
+from systems_spark.pinning import pin
 
 
 def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
@@ -51,12 +57,12 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
     updates; ``community`` is the propagated label (a node id)."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    und = symmetrize(edges, src, dst).localCheckpoint(eager=False)
+    und = pin(symmetrize(edges, src, dst), corpus_scale=True)
     nodes = und.select(F.col("a").alias("node")).union(
         edges.select(F.col(src).alias("node"))
         .union(edges.select(F.col(dst).alias("node")))
         .where(F.col("node").isNotNull())).distinct()
-    nodes = nodes.localCheckpoint(eager=False)
+    nodes = pin(nodes, corpus_scale=True)
     labels = nodes.withColumn("community", F.col("node"))
     for r in range(rounds):
         prev = labels
@@ -83,13 +89,13 @@ def label_propagation(edges: DataFrame, src: str = "src", dst: str = "dst",
                           .alias("community")))
         checkpointed = False
         if checkpoint_every and (r + 1) % checkpoint_every == 0 and r + 1 < rounds:
-            labels = labels.localCheckpoint(eager=False)
+            labels = pin(labels, corpus_scale=True)
             checkpointed = True
         if stop_when_stable and r + 1 < rounds:
             # one checkpoint per round: skip if the cadence branch above
             # already pinned this labeling (review r5)
             if not checkpointed:
-                labels = labels.localCheckpoint(eager=False)
+                labels = pin(labels, corpus_scale=True)
             changed = (labels.join(
                 prev.select("node", F.col("community").alias("_p")),
                 on="node")

@@ -33,19 +33,26 @@ edge list plus one map-side-combined sum; the round max is a 1-row
 aggregate attached by BroadcastNestedLoopJoin (the bm25 scalar-stats
 pattern — correct and cheap for 1-row broadcasts); nothing ever
 collects to the driver. Every half-round's score frame is pinned
-(lazy localCheckpoint): raw scores feed both the max and the join,
+(a lazy pin): raw scores feed both the max and the join,
 and each score frame feeds the next half-round and the final output —
 without the pins the lineage re-executes exponentially in the round
 count. Parallel edges count twice — pass distinct edges if that is
 not the intent. ``cache_edges`` pins a derived edge table once (the
 pagerank lesson: an operator reading its edges 2R times must not
 re-derive them 2R times).
+
+Pins: every pinned frame (edge table, node set, per-node raw scores)
+is graph-sized, so all go through ``pinning.pin(corpus_scale=True)`` —
+reliable checkpoints when the session has a checkpoint dir, lazy local
+checkpoints otherwise.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from systems_spark.pinning import pin
 
 _M = 1_000_000
 
@@ -63,7 +70,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     ``StateStore.materialize_bucketed`` copies (bucketed by ``src`` /
     ``dst`` respectively) and every half-round join shuffles only the
     1-column score side — the static edge table is never exchanged.
-    When set, the localCheckpoint pin on the EDGE frame is skipped (a
+    When set, the pin on the EDGE frame is skipped (a
     bucketed-table scan is already storage-pinned, and the pin would
     ERASE the bucket partitioning Catalyst elides the exchange with);
     the derived nodes frame is still pinned — it feeds every round's
@@ -73,14 +80,14 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     pre_bucketed = edges_by_dst is not None
     e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst"))
     if cache_edges and not pre_bucketed:
-        e = e.localCheckpoint(eager=False)
+        e = pin(e, corpus_scale=True)
     e_dst = (edges_by_dst.select(F.col(src).alias("_src"),
                                  F.col(dst).alias("_dst"))
              if pre_bucketed else e)
     nodes = (e.select(F.col("_src").alias("node"))
              .union(e.select(F.col("_dst").alias("node"))).distinct())
     if cache_edges:
-        nodes = nodes.localCheckpoint(eager=False)
+        nodes = pin(nodes, corpus_scale=True)
 
     def _normalize(raw: DataFrame, out: str) -> DataFrame:
         # raw: (node, _v) over the nodes reachable by this half-round's
@@ -97,7 +104,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # nodes-LEFT-join expansion per half-round moved to the single
         # final-output join, halving both the joins and the pins per
         # round with bit-identical scores.
-        raw = raw.localCheckpoint(eager=False)
+        raw = pin(raw, corpus_scale=True)
         mx = raw.agg(F.greatest(F.max("_v"), F.lit(1)).alias("_mx"))
         return (raw.crossJoin(mx)
                 .select("node", F.expr(

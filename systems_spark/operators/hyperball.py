@@ -29,6 +29,11 @@ hop-plot/effective-diameter shape; p=8 (256, σ≈6.5%) for per-node
 numbers. State is m·|V| rows of longs either way — at 1e9 nodes and
 p=4, 16e9 skinny rows, comfortably shuffle-able; exact per-node BFS
 frontiers would be |reachable-set| per node instead.
+
+Pins: every pinned frame (edge table, node set, m registers per node)
+is graph-sized, so all go through ``pinning.pin(corpus_scale=True)`` —
+reliable checkpoints when the session has a checkpoint dir, lazy local
+checkpoints otherwise.
 """
 
 from __future__ import annotations
@@ -42,6 +47,7 @@ from systems_spark.functions.sketches import (
     hll_registers,
     hll_registers_sql,
 )
+from systems_spark.pinning import pin
 
 
 def hyperball(edges: DataFrame, rounds: int, p: int = 4,
@@ -59,22 +65,22 @@ def hyperball(edges: DataFrame, rounds: int, p: int = 4,
     rounds re-executed their union+max-agg once per consumer."""
     if rounds < 1:
         raise ValueError("rounds must be >= 1")
-    e = edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")) \
-             .localCheckpoint(eager=False)
-    nodes = (e.select(F.col("_src").alias("node"))
-             .union(e.select(F.col("_dst").alias("node"))).distinct()
-             .localCheckpoint(eager=False))
+    e = pin(edges.select(F.col(src).alias("_src"), F.col(dst).alias("_dst")),
+            corpus_scale=True)
+    nodes = pin(e.select(F.col("_src").alias("node"))
+                .union(e.select(F.col("_dst").alias("node"))).distinct(),
+                corpus_scale=True)
     # B(v, 0) = {v}: each node's own key seeds its sketch
-    regs = hll_registers(nodes.withColumn("_k", F.col("node")),
-                         "_k", ["node"], p).localCheckpoint(eager=False)
+    regs = pin(hll_registers(nodes.withColumn("_k", F.col("node")),
+                             "_k", ["node"], p), corpus_scale=True)
     out = None
     for t in range(1, rounds + 1):
         pulled = (e.join(regs.withColumnRenamed("node", "_dst"), on="_dst")
                   .select(F.col("_src").alias("node"), "bucket", "register"))
-        regs = (regs.unionByName(pulled)
-                .groupBy("node", "bucket")
-                .agg(F.max("register").alias("register"))
-                .localCheckpoint(eager=False))
+        regs = pin(regs.unionByName(pulled)
+                   .groupBy("node", "bucket")
+                   .agg(F.max("register").alias("register")),
+                   corpus_scale=True)
         est = (hll_estimate(regs, ["node"], p, out_col="approx_within")
                .select("node", F.lit(t).cast("long").alias("hops"),
                        "n_buckets_used", "s_int", "approx_within"))

@@ -12,7 +12,7 @@ the surviving subgraph is < k until none remain. Each round is one
 degree aggregation + one anti-join, both on (long, long) pairs; the
 driver loop stops on a convergence count exactly like the
 connected-components resolver (dedup/clusters.py), with periodic
-``localCheckpoint`` lineage truncation. Counts are exact integers, so
+lineage-truncating pins. Counts are exact integers, so
 the surviving set is a pure function of the graph.
 
 Oracle strategy: peeling is a GREATEST fixpoint, which a recursive CTE
@@ -30,7 +30,12 @@ round's surviving edges down to the new survivor set, so late rounds
 scan (and shuffle) only the surviving subgraph — both the (node, degree)
 aggregation input and the edge-join input shrink monotonically, not just
 the survivor list. ``checkpoint_every`` truncates the growing join
-lineage with ``localCheckpoint``.
+lineage with a pin.
+
+Pins: the one pinned frame, the live symmetric edge set, is
+graph-sized, so it goes through ``pinning.pin(corpus_scale=True)`` —
+a reliable checkpoint when the session has a checkpoint dir, a lazy
+local checkpoint otherwise.
 """
 
 from __future__ import annotations
@@ -39,6 +44,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from systems_spark.operators.graph import symmetrize as _und
+from systems_spark.pinning import pin
 
 
 def kcore(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
@@ -53,7 +59,7 @@ def kcore(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
     with it)."""
     if k < 1:
         raise ValueError("k must be >= 1")
-    live = _und(edges, src, dst).localCheckpoint(eager=False)
+    live = pin(_und(edges, src, dst), corpus_scale=True)
     n_alive = None  # previous round's survivor count doubles as |alive|
     for r in range(max_rounds):
         deg = live.groupBy("a").agg(F.count(F.lit(1)).alias("_deg"))
@@ -85,7 +91,7 @@ def kcore(edges: DataFrame, k: int, src: str = "src", dst: str = "dst",
                 .join(alive.withColumnRenamed("node", "b"), on="b", how="semi"))
         n_alive = n_surv
         if checkpoint_every and (r + 1) % checkpoint_every == 0:
-            live = live.localCheckpoint(eager=False)
+            live = pin(live, corpus_scale=True)
     raise RuntimeError(f"k-core peeling did not converge in {max_rounds} rounds")
 
 

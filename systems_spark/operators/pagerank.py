@@ -28,18 +28,25 @@ the oracle comparison is EXACT, and ranks are retry/partition-invariant.
 
 100 TB shape: each round is one equi-join of ranks against edges on src
 (shuffle: (node, long) pairs + the edge list) and one map-side-combined
-sum by dst. ``checkpoint_every`` truncates the growing lineage with
-``localCheckpoint`` exactly like the CC resolver; at real scale pass the
-same knob a few rounds apart. Skew: a celebrity node's in-edges all land
+sum by dst. ``checkpoint_every`` truncates the growing lineage with a
+pin exactly like the CC resolver; at real scale pass the same knob a few
+rounds apart. Skew: a celebrity node's in-edges all land
 on one reducer key — AQE skew-split handles the join side; the sum is
 map-side combined (see SCALE.md's pointer-jump row for the same
 pattern).
+
+Pins: every pinned frame (edge table, node set, per-node ranks) is
+graph-sized, so all go through ``pinning.pin(corpus_scale=True)`` —
+reliable checkpoints when the session has a checkpoint dir, lazy local
+checkpoints otherwise.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from systems_spark.pinning import pin
 
 _M = 1_000_000
 
@@ -57,7 +64,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     non-teleporting dangling treatment, identical in the oracle).
 
     ``cache_edges`` (default on) materializes the (src, dst, out-degree)
-    table once via lazy localCheckpoint: an operator that reads its edges
+    table once via a lazy pin: an operator that reads its edges
     ``rounds`` times must not re-derive them ``rounds`` times — with a
     derived edge table (e.g. a co-occurrence self-join) the upstream plan
     would otherwise re-execute every round.
@@ -130,11 +137,11 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                         " div _deg as bigint)")
     ed = e.join(deg, on="_src")  # (src, dst[, w], out-degree), reused
     if cache_edges:
-        ed = ed.localCheckpoint(eager=False)
+        ed = pin(ed, corpus_scale=True)
     nodes = (ed.select(F.col("_src").alias("node"))
              .union(ed.select(F.col("_dst").alias("node"))).distinct())
     if cache_edges:
-        nodes = nodes.localCheckpoint(eager=False)
+        nodes = pin(nodes, corpus_scale=True)
     base = _M - damping_micros
     if personalize is None:
         base_expr = f"{base}"
@@ -159,12 +166,12 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                      f" * coalesce(_s, 0)) div {_M} as bigint)"
                  ).alias("rank_micros")))
         if checkpoint_every and (i + 1) % checkpoint_every == 0 and i + 1 < rounds:
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin(ranks, corpus_scale=True)
         if tol_micros is not None and (i + 1) % check_every == 0 and i + 1 < rounds:
             # cache before the delta action: the SAME materialized ranks
             # must feed both the convergence check and the next round, or
             # the check would pay the round's plan twice
-            ranks = ranks.localCheckpoint(eager=False)
+            ranks = pin(ranks, corpus_scale=True)
             delta = (ranks.join(
                 prev.select("node", F.col("rank_micros").alias("_prev")),
                 on="node")

@@ -40,16 +40,23 @@ Why this is exact:
   the partition reaches the SCC partition the next pass settles
   everything (μ = class min = comp for every node).
 
-Each coloring pass is the CC-style label loop PLUS pointer jumping
+Each coloring pass is the family's one min-label loop
+(``operators/graph.py::min_label``, the same loop undirected
+``connected_components`` runs) — edge relaxation PLUS pointer jumping
 (comp(v) ← min(comp(v), comp(comp(v))) — valid because a label is
 always the id of a node reachable from v in the pass direction, so
 labels shortcut in O(log diameter) rounds instead of one hop per
 round: the r8 version needed one outer round per node on a descending
 2,000-node chain; this settles it in two passes). All state is
 (node, long) rows; per inner round two narrow equi-joins + one
-map-side min-agg; every round's frame is an eager stats-free pin
-(``_pin_fresh`` — see its docstring for the self-join stats
+map-side min-agg; every round's frame is a stats-free pin
+(``graph.pin_fresh`` — see its docstring for the self-join stats
 pathology).
+
+Pins: every pin here holds graph-sized state (the edge table, the node
+set, per-node labels, within-class edges), so all of them are
+``pin(corpus_scale=True)`` — reliable checkpoints when the session has
+a checkpoint dir, lazy local checkpoints otherwise.
 
 Determinism: the SCC label is the component's minimum node id — a
 property of the graph, not the algorithm — so the result is
@@ -62,133 +69,31 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.operators.graph import BROADCAST_NODES_MAX, min_label
+from systems_spark.pinning import pin
+
 __all__ = ["strongly_connected_components", "scc_sql"]
 
 
 def _pin(df: DataFrame) -> DataFrame:
-    return df.localCheckpoint(eager=False)
-
-
-def _pin_fresh(df: DataFrame) -> DataFrame:
-    """Eager localCheckpoint + re-wrap over the SAME persisted RDD as a
-    stats-free LogicalRDD. Needed because the pointer jump is a
-    SELF-join: Catalyst's sizeInBytes estimate SQUARES per round, and
-    localCheckpoint PROPAGATES the pre-checkpoint estimate into its
-    leaf — after k rounds the estimate is a ~2^k-digit BigInteger and
-    every join-strategy stats lookup grinds arbitrary-precision
-    arithmetic into a driver OOM (measured: stall at ~24 rounds,
-    SizeInBytesOnlyStatsPlanVisitor heap exhaustion). Recreating the
-    Dataset over the checkpointed RDD resets the leaf estimate to the
-    constant defaultSizeInBytes; no data is recomputed or moved. The
-    checkpoint is LAZY — the rewrap carries the persist-on-first-use
-    mark, and the round's convergence-sum job is what materializes it,
-    so each round costs ONE job."""
-    ds = df.localCheckpoint(eager=False)
-    spark = ds.sparkSession
-    jdf = ds._jdf
-    j_new = spark._jsparkSession.internalCreateDataFrame(
-        jdf.queryExecution().toRdd(), jdf.schema(), False)
-    return type(ds)(j_new, spark)
-
-
-def _min_color(nodes: DataFrame, e: DataFrame, pull_col: str,
-               assign_col: str, max_rounds: int, what: str,
-               bcast: bool = False) -> DataFrame:
-    """(n, c): c = min node id reachable from n by walking edges in the
-    ``assign_col`` → ``pull_col`` direction (forward reach for
-    ``pull_col="_d"``, backward for ``"_s"``), to fixpoint. One
-    edge-relaxation + one pointer jump per round; labels decrease
-    monotonically and are always ids of nodes n can reach, so the
-    checksum-equal stop is exact and jumps are sound.
-
-    Pins are STATS-FREE here (``_pin_fresh``), unlike the repo's other
-    label loops — the self-join of the pointer jump makes plain
-    checkpoints square their size estimates per round (see
-    ``_pin_fresh``). The jump only engages from round 4: a low-diameter
-    graph converges in a handful of one-hop rounds and the jump's
-    self-join is pure overhead there (~30% of the graded lane's
-    coloring cost, measured), while a chain still shortcuts in
-    3 + O(log diameter) rounds once doubling starts.
-
-    ``bcast``: stats-free pins cost Catalyst its plan-time broadcast
-    selection — every label-sided join defaults to SMJ and only AQE's
-    runtime re-plan claws some back. When the CALLER has measured the
-    node count and knows the (n, c) label frame is broadcast-small, it
-    sets ``bcast=True`` and every lab/pulled join side gets an explicit
-    ``F.broadcast`` hint, skipping the shuffle up front. Off by default:
-    the hint would be wrong on billion-node graphs."""
-    maybe_b = F.broadcast if bcast else (lambda df: df)
-    lab = _pin_fresh(nodes.select("n", F.col("n").alias("c")))
-    _unset = object()
-    prev = _unset
-    pending = []  # per-round 1-row label-sum aggs awaiting one fused check
-    for i in range(max_rounds):
-        pulled = (e.join(maybe_b(lab.select(F.col("n").alias(pull_col),
-                                            F.col("c").alias("_ec"))),
-                         on=pull_col)
-                  .groupBy(F.col(assign_col).alias("n"))
-                  .agg(F.min("_ec").alias("_ec")))
-        base, cand = lab, [F.col("c"), F.coalesce("_ec", "c")]
-        if i >= 3:
-            base = lab.join(
-                maybe_b(lab.select(F.col("n").alias("c"),
-                                   F.col("c").alias("_jc"))),
-                on="c", how="left")
-            cand.append(F.coalesce("_jc", "c"))
-        lab = _pin_fresh(base.join(maybe_b(pulled), on="n", how="left")
-                         .select("n", F.least(*cand).alias("c")))
-        # r13 fused convergence cadence (VERDICT r12 item 2): the r12
-        # loop paid ONE driver action per round; part_scc runs dozens of
-        # rounds across its coloring passes and the lanes are job-count
-        # bound at high core counts. Rounds 0-2 still check every round
-        # (low-diameter graphs converge immediately); later rounds batch
-        # THREE lazy 1-row sums into one union-collect — labels are
-        # monotone non-increasing, so an equal ADJACENT pair anywhere in
-        # the checked sequence proves fixpoint, and rounds built past it
-        # are idempotent no-ops, so returning the latest frame is exact.
-        pending.append(lab.agg(
-            F.sum(F.col("c").cast("decimal(38,0)")).alias("s"))
-            .select(F.lit(len(pending)).alias("_k"), "s"))
-        if i >= 3 and len(pending) < 3 and i < max_rounds - 1:
-            continue
-        flushed = pending[0]
-        for p in pending[1:]:
-            flushed = flushed.union(p)
-        sums = [r["s"] for r in
-                sorted(flushed.collect(), key=lambda r: r["_k"])]
-        # None == None is a real fixpoint (empty rump/class — sum over
-        # zero rows), so compare plain equality from a non-sum sentinel
-        seq = ([prev] if prev is not _unset else []) + sums
-        if any(a == b for a, b in zip(seq, seq[1:])):
-            return lab
-        prev = sums[-1]
-        pending = []
-    raise RuntimeError(f"scc: {what} did not converge in {max_rounds} "
-                       f"rounds")
+    return pin(df, corpus_scale=True)
 
 
 def strongly_connected_components(edges: DataFrame, src: str = "src",
                                   dst: str = "dst",
                                   node_col: str = "node",
                                   component_col: str = "component",
-                                  max_rounds: int = 50,
-                                  broadcast_nodes_max: int = 1_000_000
-                                  ) -> DataFrame:
+                                  max_rounds: int = 50) -> DataFrame:
     """(node, component) for every node in ``edges`` (either endpoint);
     component = min node id of the node's SCC. A node on no cycle is its
     own singleton SCC. ``max_rounds`` caps BOTH loops (each coloring's
     inner fixpoint and the refinement passes) — a diverged-loop guard,
     not a knob.
 
-    ``broadcast_nodes_max``: the per-round label state is (node, long)
-    rows, but the stats-free pins (see ``_pin_fresh``) leave Catalyst no
-    size estimate, so every label join plans as SMJ. The node set is
-    counted ONCE up front (it is pinned anyway); at or under this bound
-    (~16 B/row → ≤ ~16 MB payload) every label-sided join gets an
+    The node set is counted ONCE up front (it is pinned anyway); at or
+    under ``graph.BROADCAST_NODES_MAX`` every label-sided join gets an
     explicit broadcast hint — the label frame never exceeds the node
-    count, and settling only shrinks it. Above the bound the hint stays
-    off and AQE's runtime re-plan is the (correct) fallback for
-    billion-node graphs."""
+    count, and settling only shrinks it."""
     e_all = _pin(edges.select(F.col(src).alias("_s"),
                               F.col(dst).alias("_d")).distinct())
     nodes = _pin(e_all.select(F.col("_s").alias("n"))
@@ -197,12 +102,12 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
     if n_nodes == 0:  # empty edge table
         return (e_all.select(F.col("_s").alias(node_col))
                 .withColumn(component_col, F.col(node_col)).limit(0))
-    bcast = n_nodes <= broadcast_nodes_max
+    bcast = n_nodes <= BROADCAST_NODES_MAX
     maybe_b = F.broadcast if bcast else (lambda df: df)
 
     # pass 0: forward coloring over ALL edges (one implicit class)
-    comp = _min_color(nodes, e_all, "_d", "_s", max_rounds,
-                      "forward coloring", bcast=bcast)
+    comp = min_label(nodes, e_all, "_d", "_s", max_rounds,
+                     "scc: forward coloring", bcast=bcast)
     settled = None
     forward = False  # pass 0 was forward; alternate from backward
     for _ in range(max_rounds):
@@ -218,9 +123,9 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
                   .where(F.col("_cs") == F.col("_cd"))
                   .select("_s", "_d"))
         pull, assign = ("_d", "_s") if forward else ("_s", "_d")
-        new = _min_color(comp.select("n"), ec, pull, assign, max_rounds,
-                         "forward coloring" if forward
-                         else "backward coloring", bcast=bcast)
+        new = min_label(comp.select("n"), ec, pull, assign, max_rounds,
+                        "scc: forward coloring" if forward
+                        else "scc: backward coloring", bcast=bcast)
         # SETTLE: a label reproduced across two OPPOSITE-direction
         # passes proves mutual reachability with its class min c — the
         # previous pass showed the A-direction path, this pass the B

@@ -31,12 +31,20 @@ MATERIALIZED CTEs (each dist CTE feeds the relax join AND the min
 fold — the hits_sql inlining lesson). A Spark early-stop cannot
 diverge from the twin's full unroll: once stable, further rounds are
 identity.
+
+Pins: the edge table and each round's distance table are graph-sized,
+so they go through ``pinning.pin(corpus_scale=True)`` — reliable
+checkpoints when the session has a checkpoint dir, local checkpoints
+otherwise. The round-0 table holds only the seeds (caller-sized,
+typically a handful) and stays a plain local pin.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from systems_spark.pinning import pin
 
 
 def sssp(edges: DataFrame, seeds: DataFrame, rounds: int,
@@ -47,16 +55,15 @@ def sssp(edges: DataFrame, seeds: DataFrame, rounds: int,
     non-negative int64; parallel edges are fine (min wins)."""
     if rounds < 0:
         raise ValueError("rounds must be >= 0")
-    e = (edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"),
-                      F.col(weight).cast("long").alias("_w"))
-         .localCheckpoint(eager=False))
+    e = pin(edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d"),
+                         F.col(weight).cast("long").alias("_w")),
+            corpus_scale=True)
     # one validation action, up front (it also materializes the edge
     # pin the rounds reuse) — not a per-round probe
     if e.where(F.col("_w") < 0).limit(1).count() > 0:
         raise ValueError("negative edge weight encountered")
-    dist = (seeds.select(F.col(node_col).alias("_n")).distinct()
-            .withColumn("dist", F.lit(0).cast("long"))
-            .localCheckpoint(eager=True))
+    dist = pin(seeds.select(F.col(node_col).alias("_n")).distinct()
+               .withColumn("dist", F.lit(0).cast("long")), eager=True)
     probe = dist.agg(
         F.count(F.lit(1)).alias("c"),
         F.sum(F.col("dist").cast("decimal(38,0)")).alias("s")).collect()[0]
@@ -65,9 +72,9 @@ def sssp(edges: DataFrame, seeds: DataFrame, rounds: int,
         relaxed = (dist.join(e, dist["_n"] == e["_s"])
                    .select(F.col("_d").alias("_n"),
                            (F.col("dist") + F.col("_w")).alias("dist")))
-        nxt = (dist.unionByName(relaxed)
-               .groupBy("_n").agg(F.min("dist").alias("dist"))
-               .localCheckpoint(eager=True))
+        nxt = pin(dist.unionByName(relaxed)
+                  .groupBy("_n").agg(F.min("dist").alias("dist")),
+                  corpus_scale=True, eager=True)
         probe = nxt.agg(
             F.count(F.lit(1)).alias("c"),
             F.sum(F.col("dist").cast("decimal(38,0)")).alias("s")

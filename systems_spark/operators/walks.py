@@ -23,6 +23,11 @@ indexed neighbors. Shuffles carry (start, walk, cur) longs; walks at
 dead-end nodes (no out-edges) terminate early, dropping out of the
 frontier — document direction by symmetrizing upstream if undirected
 walks are wanted.
+
+Pins: the indexed neighbor table and each step's walk frontier (one row
+per live walk) are graph-sized, so they go through
+``pinning.pin(corpus_scale=True)`` — reliable checkpoints when the
+session has a checkpoint dir, lazy local checkpoints otherwise.
 """
 
 from __future__ import annotations
@@ -31,6 +36,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from systems_spark.functions.hashing import hash64, hash64_sql
+from systems_spark.pinning import pin
 
 
 def random_walks(edges: DataFrame, length: int, n_walks: int = 1,
@@ -47,8 +53,8 @@ def random_walks(edges: DataFrame, length: int, n_walks: int = 1,
     e = edges.select(F.col(src).alias("_s"), F.col(dst).alias("_d")) \
              .distinct()
     w = Window.partitionBy("_s").orderBy("_d")
-    nbr = e.withColumn("_i", F.row_number().over(w) - 1) \
-           .localCheckpoint(eager=False)
+    nbr = pin(e.withColumn("_i", F.row_number().over(w) - 1),
+              corpus_scale=True)
     # deg AND nodes derive from the PINNED nbr frame — a derived edge
     # table (e.g. a co-occurrence self-join) must execute once, not once
     # per consumer
@@ -67,16 +73,15 @@ def random_walks(edges: DataFrame, length: int, n_walks: int = 1,
         choice = hash64(F.concat_ws(
             ":", F.lit(seed), F.col("start").cast("string"),
             F.col("walk").cast("string"), F.lit(str(t)))) % F.col("_deg")
-        state = (state.join(deg, state["cur"] == deg["_s"])
-                 .withColumn("_i", choice)
-                 .join(nbr, on=["_s", "_i"])
-                 .select("start", "walk", F.col("_d").alias("cur"))
-                 # pinned BEFORE the append: the frame feeds both its
-                 # output branch of the final union AND the next step's
-                 # join — un-pinned, each union branch re-executes the
-                 # whole join-chain prefix (the funnel cache_steps
-                 # hazard; review r6)
-                 .localCheckpoint(eager=False))
+        # pinned BEFORE the append: the frame feeds both its output
+        # branch of the final union AND the next step's join — un-pinned,
+        # each union branch re-executes the whole join-chain prefix (the
+        # funnel cache_steps hazard; review r6)
+        state = pin(state.join(deg, state["cur"] == deg["_s"])
+                    .withColumn("_i", choice)
+                    .join(nbr, on=["_s", "_i"])
+                    .select("start", "walk", F.col("_d").alias("cur")),
+                    corpus_scale=True)
         frames.append(state.select(
             "start", "walk", F.lit(t).cast("long").alias("step"),
             F.col("cur").alias("node")))

@@ -90,8 +90,9 @@ def normalize_epoch_nanos(df: DataFrame, col: str = "ts") -> DataFrame:
     return df
 
 
-#: (path, mtime) → estimated scan-split count; footer reads are a few ms
-#: but load_table is called per lane build, so memoize per file state.
+#: path → (mtime, row-group count); footer reads are a few ms but
+#: load_table is called per lane build, so memoize per file. A rewrite
+#: (new mtime) overwrites the entry, so the cache holds one entry per file.
 _SPLIT_CACHE: dict = {}
 
 
@@ -101,7 +102,8 @@ def _estimated_scan_splits(path: str) -> "int | None":
     parallel than its row-group count regardless of
     ``spark.sql.files.maxPartitionBytes``. Filesystem + footer metadata
     only — no Spark jobs. Returns None when the layout can't be read
-    (non-local path, exotic dir) — callers must treat None as 'plenty'."""
+    (non-local path, exotic dir, a directory with no parquet files) —
+    callers must treat None as 'plenty'."""
     import os
 
     try:
@@ -114,14 +116,18 @@ def _estimated_scan_splits(path: str) -> "int | None":
             files = [path]
         else:
             return None
+        if not files:
+            return None
         total = 0
         for f in files:
-            key = (f, os.path.getmtime(f))
-            if key not in _SPLIT_CACHE:
+            mtime = os.path.getmtime(f)
+            hit = _SPLIT_CACHE.get(f)
+            if hit is None or hit[0] != mtime:
                 import pyarrow.parquet as pq
 
-                _SPLIT_CACHE[key] = pq.ParquetFile(f).metadata.num_row_groups
-            total += _SPLIT_CACHE[key]
+                hit = (mtime, pq.ParquetFile(f).metadata.num_row_groups)
+                _SPLIT_CACHE[f] = hit
+            total += hit[1]
         return total
     except Exception:  # noqa: BLE001 - estimation only, never break a read
         return None

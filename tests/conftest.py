@@ -36,6 +36,18 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def checkpoint_dir(spark, tmp_path):
+    """A session checkpoint dir for one test; the previous setting (usually
+    none) is restored afterwards, so reliable pins never leak into later
+    tests."""
+    sc = spark.sparkContext._jsc.sc()
+    prev = sc.getCheckpointDir()
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    yield tmp_path / "ckpt"
+    getattr(sc, "checkpointDir_$eq")(prev)  # the Scala var's setter
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

@@ -271,39 +271,19 @@ def test_incremental_components_bridge_and_untouched(spark):
     assert first_run == {r.node: r.component for r in labels.collect()}
 
 
-def test_connected_components_salted_jump_same_answer(spark):
-    """salt>1 spreads the pointer-jump hot key (AQE-off fallback) and must
-    be answer-identical to the unsalted path on skewed and multi-cluster
-    graphs."""
-    from pyspark.sql import functions as F
-
+def test_connected_components_reliable_checkpoint(spark, checkpoint_dir):
+    """With a checkpoint dir set, the label loop's round pins become
+    RELIABLE checkpoints (files in the dir — they survive executor loss on
+    a real cluster) with no option to pass, and the answer is unchanged."""
     from systems_spark.dedup import connected_components
 
-    star = spark.range(1, 5000).select(F.lit(0).alias("a"), F.col("id").alias("b"))
-    chain = spark.range(99).select(
-        (F.col("id") + 100_000).alias("a"), (F.col("id") + 100_001).alias("b")
-    )
-    edges = star.union(chain)
-    plain = {r.node: r.component for r in connected_components(edges).collect()}
-    salted = {r.node: r.component
-              for r in connected_components(edges, salt=8).collect()}
-    assert salted == plain
-    assert set(plain.values()) == {0, 100_000}
-
-
-def test_connected_components_reliable_checkpoint(spark, tmp_path):
-    """'reliable' mode checkpoints rounds to the Spark checkpoint dir —
-    same answer, survives executor loss on a real cluster."""
-    from systems_spark.dedup import connected_components
-
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
-    edges = [(1, 2), (2, 3), (10, 11)]
+    edges = [(1, 2), (2, 3), (10, 11), (20, 20)]
     df = spark.createDataFrame(edges, "a long, b long")
     got = {r.node: r.component
-           for r in connected_components(df, checkpoint="reliable").collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
-    with pytest.raises(ValueError, match="local.*reliable|'local' or 'reliable'"):
-        connected_components(df, checkpoint="bogus")
+           for r in connected_components(df).collect()}
+    assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10, 20: 20}
+    written = [p for p in checkpoint_dir.rglob("rdd-*") if p.is_dir()]
+    assert written, "no reliable checkpoint files were written"
 
 
 @settings(max_examples=6, deadline=None)
@@ -628,3 +608,46 @@ def test_signatures_from_shared_shingle_relation_identical(spark, docs):
               mh.signatures(df, shingle_rows=sh)
               .where(F.col("m0") != sent).collect()}
     assert shared == base
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(
+    st.tuples(st.integers(0, 30), st.integers(0, 30)),
+    min_size=1, max_size=40,
+))
+def test_connected_components_equals_scc_of_symmetrized(spark, edges):
+    """Undirected CC is SCC over the symmetrized edge set: both run the one
+    min-label loop, and on symmetric edges mutual reachability is plain
+    reachability. Self-loops included (each endpoint is still a node)."""
+    from systems_spark.dedup import connected_components
+    from systems_spark.operators.scc import strongly_connected_components
+
+    df = spark.createDataFrame(edges, "a long, b long")
+    sym = df.union(df.select("b", "a"))
+    cc = {r.node: r.component for r in connected_components(df).collect()}
+    scc = {r.node: r.component for r in strongly_connected_components(
+        sym, src="a", dst="b").collect()}
+    assert cc == scc
+
+
+def test_signatures_reject_mismatched_shingle_relation(spark):
+    """signatures(shingle_rows=...) refuses a relation built over another
+    feature space (shingle k, content column, or a max_shingle_freq cap
+    that drops shingles), and one that did not come from shingle_relation
+    at all — each would silently yield wrong signatures."""
+    rows = [(0, "a b c d e"), (1, "a b c d f"), (2, "x y z")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    mh = MinHashDedup(shingle_k=2)
+    ok = NGramJaccardDedup(shingle_k=2).shingle_relation(df)
+    assert mh.signatures(df, shingle_rows=ok).count() == 3
+    bad = [
+        NGramJaccardDedup(shingle_k=3).shingle_relation(df),
+        NGramJaccardDedup(shingle_k=2, max_shingle_freq=1)
+        .shingle_relation(df),
+        NGramJaccardDedup(shingle_k=2, content_col="body")
+        .shingle_relation(df.withColumnRenamed("text", "body")),
+        spark.createDataFrame([(0, "a b")], "doc_id long, shingle string"),
+    ]
+    for rel in bad:
+        with pytest.raises(ValueError, match="feature space"):
+            mh.signatures(df, shingle_rows=rel)

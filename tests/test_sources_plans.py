@@ -701,3 +701,33 @@ def test_r8_lane_plan_shapes(spark, tables):
     # batch window + anti join + union: a bounded handful of exchanges,
     # none of them a second scan of the snapshot
     assert count_exchanges(merged) <= 5
+
+
+def test_scan_split_cache_overwrites_on_rewrite(tmp_path):
+    """The footer cache is keyed by file path: a rewrite (new mtime)
+    overwrites the entry instead of adding a second one, and the new
+    row-group count is what the estimate reports."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from systems_spark import sources
+
+    f = str(tmp_path / "t.parquet")
+    tbl = pa.table({"x": list(range(100))})
+    pq.write_table(tbl, f, row_group_size=100)
+    os.utime(f, (1_000_000, 1_000_000))
+    assert sources._estimated_scan_splits(f) == 1
+    pq.write_table(tbl, f, row_group_size=25)
+    os.utime(f, (2_000_000, 2_000_000))
+    assert sources._estimated_scan_splits(f) == 4
+    assert sources._SPLIT_CACHE[f] == (2_000_000, 4)
+    assert [k for k in sources._SPLIT_CACHE if f in str(k)] == [f]
+
+
+def test_scan_split_estimate_is_none_without_parquet_files(tmp_path):
+    """A directory holding no parquet files is an unknown layout: the
+    estimate is None ('plenty' — no repartition), not 0 splits."""
+    from systems_spark import sources
+
+    (tmp_path / "notes.txt").write_text("not a table")
+    assert sources._estimated_scan_splits(str(tmp_path)) is None
