@@ -7,11 +7,26 @@ pair graph's components as dup clusters and keep one canonical document per
 cluster). This is the stage between "found the pairs" and "wrote the
 deduplicated corpus".
 
-Scale design — no driver-side union-find, no recursion over collected
-edges: ``connected_components`` is the graph family's one min-label
-fixpoint loop (``operators/graph.py::min_label``, the loop strongly
-connected components colors with) run over the SYMMETRIC edge set, where
-forward reach is exactly the connected component:
+Scale design — one size gate, then either a bounded driver union-find or
+the distributed loop. ``connected_components`` first collects at most
+``LOCAL_RESOLVE_MAX_EDGES + 1`` pairs as Arrow (one job on a pinned
+input):
+
+- **at or under the cap, no NULL endpoint**: a driver union-find with
+  union-by-min-id (every root is its component's minimum node) resolves
+  the graph, and the labels go back to Spark as a ``pyarrow.Table``,
+  decoded in the JVM (no Python worker). One job in place of the loop's
+  ~20 on a batch-sized pair graph. The design's rule against single-node
+  collects (SURVEY.md §7.2 M7) still holds at scale: the collect is
+  bounded, so the driver never holds more than the cap, and larger
+  graphs take the loop.
+- **above the cap, or any NULL endpoint**: the graph family's one
+  min-label fixpoint loop (``operators/graph.py::min_label``, the loop
+  strongly connected components colors with) runs over the SYMMETRIC
+  edge set, where forward reach is exactly the connected component, with
+  no second collect.
+
+The loop:
 
 - **min-label propagation + pointer jumping**, the classic
   O(log n)-round MapReduce scheme: each round every node takes the min
@@ -25,10 +40,16 @@ forward reach is exactly the connected component:
   that re-executes on every convergence check. When the session has a
   checkpoint dir the pins are RELIABLE checkpoints (they survive executor
   loss on a real cluster), with no option to set; otherwise they are lazy
-  local checkpoints.
+  local checkpoints. Superseded round pins, the edge pin and the node pin
+  are released once the final labels are materialized; the result keeps
+  only its own pin.
 - convergence = the label-sum monotone invariant: one decimal-exact
   aggregate (never collects the frame); checked every round for rounds
   1-3, then three rounds' sums per driver job.
+
+Both paths return the same rows under the same schema (component = min
+node id is a graph property, not an algorithm artifact;
+tests/test_components_paths.py pins the equality).
 
 The reference has no graph stage (its dedup surface stops at pair scoring)
 — this is engine-side capability for the 100 TB training-data pipeline
@@ -41,7 +62,21 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from systems_spark.operators.graph import BROADCAST_NODES_MAX, min_label
-from systems_spark.pinning import pin
+from systems_spark.pinning import pin, unpin
+
+#: Edge cap for resolving a pair graph on the driver instead of through
+#: the iterative distributed loop. Under it, ONE bounded
+#: ``limit(cap + 1)`` Arrow collect plus a local union-find replaces the
+#: loop's rounds (each a join + agg + pin, with a fixed scheduling cost
+#: per driver job — ~0.35 s per round at 32 cores, r12 probe; 20 of the
+#: 28 jobs of a 1200-doc dedup op at local[2]). 250k edges collect to a
+#: few MB of Arrow — far under any sane driver heap — and anything larger
+#: takes the distributed loop, so giant graphs stay scale-safe (guide §5:
+#: the driver may do SMALL work, never unbounded work). Every caller gets
+#: the gate: ``canonical_documents``, the incremental/decremental folds
+#: (whose touched subgraphs are batch-proportional by construction) and
+#: full resolves alike. ``0`` sends every graph through the loop.
+LOCAL_RESOLVE_MAX_EDGES = 250_000
 
 
 def connected_components(pairs: DataFrame, a_col: str = "a", b_col: str = "b",
@@ -53,93 +88,88 @@ def connected_components(pairs: DataFrame, a_col: str = "a", b_col: str = "b",
     node's connected component — deterministic, so the component id
     doubles as the canonical survivor.
 
+    Graphs of at most ``LOCAL_RESOLVE_MAX_EDGES`` pair rows with no NULL
+    endpoint resolve on the driver (module docstring); the rest run the
+    min-label loop. Both paths give the same rows and schema: the id type
+    is that of the a/b union.
+
     ``max_iterations`` is a diverged-loop guard, not a tuning knob: with
     pointer jumping, rounds needed ≈ log2(largest cluster diameter) + 4;
     50 covers any graph that fits on a cluster.
 
-    The node set is counted ONCE (the count materializes its pin, which
-    round 1 reads anyway); at or under ``graph.BROADCAST_NODES_MAX`` every
-    label-sided join carries a broadcast hint."""
-    e = pin(pairs.select(F.col(a_col).alias("_s"), F.col(b_col).alias("_d"))
-            .union(pairs.select(F.col(b_col).alias("_s"),
-                                F.col(a_col).alias("_d")))
-            .distinct(), corpus_scale=True)
+    Loop path: the node set is counted ONCE (the count materializes its
+    pin, which round 1 reads anyway); at or under
+    ``graph.BROADCAST_NODES_MAX`` every label-sided join carries a
+    broadcast hint."""
+    sym = (pairs.select(F.col(a_col).alias("_s"), F.col(b_col).alias("_d"))
+           .union(pairs.select(F.col(b_col).alias("_s"),
+                               F.col(a_col).alias("_d"))))
+    id_field = sym.schema["_s"]
+    cap = LOCAL_RESOLVE_MAX_EDGES
+    if cap > 0:
+        t = pairs.select(a_col, b_col).limit(cap + 1).toArrow()
+        if t.num_rows <= cap and not any(c.null_count for c in t.columns):
+            return _union_find(t, pairs.sparkSession, id_field,
+                               node_col, component_col)
+    e = pin(sym.distinct(), corpus_scale=True)
     nodes = pin(e.select(F.col("_s").alias("n")).distinct(),
                 corpus_scale=True)
     bcast = nodes.count() <= BROADCAST_NODES_MAX
     labels = min_label(nodes, e, "_d", "_s", max_iterations,
                        "connected_components", bcast=bcast)
+    # min_label returned materialized labels, whose pin no longer reads
+    # the edge or node pins
+    unpin(e)
+    unpin(nodes)
     return labels.select(F.col("n").alias(node_col),
                          F.col("c").alias(component_col))
 
 
-#: Edge cap for resolving a TOUCHED SUBGRAPH on the driver instead of
-#: through the iterative distributed loop. The incremental/decremental
-#: subgraphs are batch-proportional BY CONSTRUCTION (star edges of the
-#: components a batch touches + the batch's own edges), so under this cap
-#: a bounded ``limit(cap + 1).collect()`` plus a local union-find replaces
-#: ~10 label-propagation rounds (each a join + agg + checkpoint job —
-#: measured ~0.35 s of fixed scheduling overhead per round at 32 cores,
-#: r12 probe) with ONE job. 250k edges collect to a few tens of MB —
-#: far under any sane driver heap — and anything larger falls back to the
-#: distributed loop, so giant batches and pathological hot components
-#: stay scale-safe (guide §5: the driver may do SMALL work, never
-#: unbounded work).
-LOCAL_RESOLVE_MAX_EDGES = 250_000
+def _union_find(t, spark, id_field, node_col: str,
+                component_col: str) -> DataFrame:
+    """(node, component) of the NULL-free pair table ``t`` by union-find
+    with union-by-min-id, so every root IS its component's minimum node;
+    handed back to Spark as Arrow under the loop's output schema."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+    from pyspark.sql.types import StructField, StructType
 
+    parent: dict = {}
 
-def _resolve_subgraph(sub: DataFrame, a_col: str, b_col: str,
-                      node_col: str, component_col: str,
-                      local_max_edges: int) -> DataFrame:
-    """``connected_components(sub)`` with a driver-local fast path for
-    provably small subgraphs: identical output contract (one row per node
-    appearing in any pair, component = min node id of its component —
-    a graph property, so the two paths are bit-equal), chosen by a
-    bounded collect. ``local_max_edges=0`` disables the local path."""
-    if local_max_edges:
-        rows = sub.select(a_col, b_col).limit(local_max_edges + 1).collect()
-        if len(rows) <= local_max_edges and all(
-                r[0] is not None and r[1] is not None for r in rows):
-            parent: dict = {}
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
 
-            def find(x):
-                root = x
-                while parent[root] != root:
-                    root = parent[root]
-                while parent[x] != root:  # path compression
-                    parent[x], x = root, parent[x]
-                return root
-
-            for a, b in rows:
-                if a not in parent:
-                    parent[a] = a
-                if b not in parent:
-                    parent[b] = b
-                ra, rb = find(a), find(b)
-                if ra != rb:
-                    # union by min id: the root IS the component minimum
-                    if rb < ra:
-                        ra, rb = rb, ra
-                    parent[rb] = ra
-            out = [(n, find(n)) for n in parent]
-            from pyspark.sql.types import StructField, StructType
-
-            id_type = sub.schema[a_col].dataType
-            schema = StructType([StructField(node_col, id_type, True),
-                                 StructField(component_col, id_type, True)])
-            return sub.sparkSession.createDataFrame(out, schema=schema)
-    return connected_components(
-        sub, a_col=a_col, b_col=b_col,
-        node_col=node_col, component_col=component_col)
+    for a, b in zip(t.column(0).to_pylist(), t.column(1).to_pylist()):
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by min id: the root IS the component minimum
+            if rb < ra:
+                ra, rb = rb, ra
+            parent[rb] = ra
+    nodes = list(parent)
+    arrow_type = to_arrow_type(id_field.dataType)
+    table = pa.table({
+        node_col: pa.array(nodes, type=arrow_type),
+        component_col: pa.array([find(n) for n in nodes], type=arrow_type),
+    })
+    schema = StructType([
+        StructField(node_col, id_field.dataType, id_field.nullable),
+        StructField(component_col, id_field.dataType, id_field.nullable)])
+    return spark.createDataFrame(table, schema)
 
 
 def incremental_components(labels: DataFrame, new_pairs: DataFrame,
                            a_col: str = "a", b_col: str = "b",
                            node_col: str = "node",
                            component_col: str = "component",
-                           check_labels: bool = True,
-                           local_max_edges: int = LOCAL_RESOLVE_MAX_EDGES
-                           ) -> DataFrame:
+                           check_labels: bool = True) -> DataFrame:
     """Update a connected-components labeling with NEW edges without
     re-resolving the whole graph — the maintenance shape of a
     continuously-growing corpus (`streaming_ingest_dedup` admits new
@@ -195,13 +225,11 @@ def incremental_components(labels: DataFrame, new_pairs: DataFrame,
             .select(F.col("_n").alias(a_col), F.col("_c").alias(b_col)))
     sub = star.unionByName(
         edges.select(F.col("_a").alias(a_col), F.col("_b").alias(b_col)))
-    # the subgraph is batch-proportional by construction — resolve it on
-    # the driver under LOCAL_RESOLVE_MAX_EDGES (r13, guide §2.6/§5: the
-    # eager CC loop's ~10 fixed-overhead rounds were the dominant cost of
-    # every incremental dedup fold), distributed loop above the cap
-    resolved = _resolve_subgraph(
-        sub, a_col, b_col, node_col, component_col,
-        local_max_edges)
+    # the subgraph is batch-proportional by construction, so it normally
+    # resolves under connected_components' driver-side size gate
+    resolved = connected_components(
+        sub, a_col=a_col, b_col=b_col,
+        node_col=node_col, component_col=component_col)
     # old components double as subgraph NODES (star endpoints); a
     # component id is always a member node, so its row is already present
     # as a node row — no synthetic ids leak out
@@ -217,9 +245,7 @@ def decremental_components(labels: DataFrame, pairs: DataFrame,
                            a_col: str = "a", b_col: str = "b",
                            node_col: str = "node",
                            component_col: str = "component",
-                           check_labels: bool = True,
-                           local_max_edges: int = LOCAL_RESOLVE_MAX_EDGES
-                           ) -> DataFrame:
+                           check_labels: bool = True) -> DataFrame:
     """Remove DELETED nodes from a standing labeling — the
     right-to-be-forgotten maintenance shape (a takedown/GDPR batch
     leaves the corpus; its documents must leave the dup clusters, and
@@ -277,12 +303,12 @@ def decremental_components(labels: DataFrame, pairs: DataFrame,
                   how="semi")
            .join(members.withColumnRenamed("_n", "_b"), on="_b",
                  how="semi"))
-    # touched-subgraph resolve: driver-local under the cap (see
-    # incremental_components), distributed above it
-    resolved = _resolve_subgraph(
+    # touched-subgraph resolve (batch-proportional, as in
+    # incremental_components)
+    resolved = connected_components(
         sub.select(F.col("_a").alias(a_col), F.col("_b").alias(b_col)),
-        a_col, b_col, node_col, component_col,
-        local_max_edges)
+        a_col=a_col, b_col=b_col,
+        node_col=node_col, component_col=component_col)
     singles = (members
                .join(resolved.select(F.col(node_col).alias("_n")),
                      on="_n", how="anti")

@@ -15,7 +15,8 @@ Pins: every round's label frame goes through ``pinning.pin(corpus_scale=
 True)`` (per-node label state is graph-sized), so a session with a
 checkpoint dir gets RELIABLE round pins — they survive executor loss on
 a real cluster — with no knob; without one the pins are lazy local
-checkpoints, exactly as before.
+checkpoints, exactly as before. A round's pin is released as soon as a
+later round is materialized, so a finished loop holds one label pin.
 """
 
 from __future__ import annotations
@@ -23,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from systems_spark.pinning import pin
+from systems_spark.pinning import pin, unpin
 
 #: Node-count bound for the label loop's broadcast hints: the label state
 #: is (node, long) rows (~16 B/row ⇒ ≤ ~16 MB at the bound). Stats-free
@@ -47,9 +48,10 @@ def symmetrize(edges: DataFrame, src: str, dst: str) -> DataFrame:
             .distinct())
 
 
-def pin_fresh(df: DataFrame) -> DataFrame:
-    """``pin(df, corpus_scale=True)`` re-wrapped over the SAME pinned RDD
-    as a stats-free LogicalRDD. Needed because the pointer jump is a
+def pin_fresh(df: DataFrame) -> "tuple[DataFrame, DataFrame]":
+    """``(pinned, fresh)``: ``pinned = pin(df, corpus_scale=True)`` and
+    ``fresh``, the same pinned RDD re-wrapped as a stats-free LogicalRDD.
+    Needed because the pointer jump is a
     SELF-join: Catalyst's sizeInBytes estimate SQUARES per round, and a
     checkpoint PROPAGATES the pre-checkpoint estimate into its leaf —
     after k rounds the estimate is a ~2^k-digit BigInteger and every
@@ -60,13 +62,15 @@ def pin_fresh(df: DataFrame) -> DataFrame:
     constant defaultSizeInBytes; no data is recomputed or moved. The
     pin is LAZY — the rewrap carries the checkpoint-on-first-use mark,
     and the round's convergence-sum job is what materializes it, so
-    each round costs ONE job."""
+    each round costs ONE job. Plan through ``fresh``; release through
+    ``pinned`` (``unpin`` is a no-op on the rewrap, whose plan root is
+    not the pinned RDD)."""
     ds = pin(df, corpus_scale=True)
     spark = ds.sparkSession
     jdf = ds._jdf
     j_new = spark._jsparkSession.internalCreateDataFrame(
         jdf.queryExecution().toRdd(), jdf.schema(), False)
-    return type(ds)(j_new, spark)
+    return ds, type(ds)(j_new, spark)
 
 
 def min_label(nodes: DataFrame, e: DataFrame, pull: str, assign: str,
@@ -106,12 +110,18 @@ def min_label(nodes: DataFrame, e: DataFrame, pull: str, assign: str,
 
     ``bcast``: set when the caller counted the nodes and the label frame
     is broadcast-small (see :data:`BROADCAST_NODES_MAX`); every
-    label-sided join then carries an explicit broadcast hint."""
+    label-sided join then carries an explicit broadcast hint.
+
+    Pins: each check job materializes every round built since the last
+    one, after which the newest round reads no earlier round's blocks, so
+    the superseded round pins are released right there. The returned
+    frame keeps its own pin; ``nodes`` and ``e`` stay the caller's."""
     maybe_b = F.broadcast if bcast else (lambda df: df)
     lab = nodes.select("n", F.col("n").alias("c"))
     _unset = object()
     prev = _unset
     pending = []  # per-round 1-row label-sum aggs awaiting one fused check
+    held = []  # round pins not yet released
     for i in range(max_rounds):
         pulled = (e.join(maybe_b(lab.select(F.col("n").alias(pull),
                                             F.col("c").alias("_ec"))),
@@ -125,8 +135,10 @@ def min_label(nodes: DataFrame, e: DataFrame, pull: str, assign: str,
                                    F.col("c").alias("_jc"))),
                 on="c", how="left")
             cand.append(F.coalesce("_jc", "c"))
-        lab = pin_fresh(base.join(maybe_b(pulled), on="n", how="left")
-                        .select("n", F.least(*cand).alias("c")))
+        pinned, lab = pin_fresh(base.join(maybe_b(pulled), on="n",
+                                          how="left")
+                                .select("n", F.least(*cand).alias("c")))
+        held.append(pinned)
         pending.append(lab.agg(
             F.sum(F.col("c").cast("decimal(38,0)")).alias("s"))
             .select(F.lit(len(pending)).alias("_k"), "s"))
@@ -137,6 +149,9 @@ def min_label(nodes: DataFrame, e: DataFrame, pull: str, assign: str,
             flushed = flushed.union(p)
         sums = [r["s"] for r in
                 sorted(flushed.collect(), key=lambda r: r["_k"])]
+        for p in held[:-1]:
+            unpin(p)
+        held = held[-1:]
         # None == None is a real fixpoint (empty node set — sum over
         # zero rows), so compare plain equality from a non-sum sentinel
         seq = ([prev] if prev is not _unset else []) + sums

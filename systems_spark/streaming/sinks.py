@@ -623,7 +623,13 @@ class CdcTable:
         physical names stay constant on disk forever. User-facing
         reads (``current``/``at_version``/feeds) apply the manifest's
         column map to show LOGICAL names."""
-        return self._read_snapshot(spark, self._latest_manifest(spark))
+        return self._view_at(spark, self._latest_manifest(spark))
+
+    def _view_at(self, spark: SparkSession, man: dict) -> DataFrame:
+        """The layout's snapshot AT ``man`` (tombstones, seq column,
+        PHYSICAL names): ``snapshot``, ``current`` and ``at_version``
+        read through it, each from the ONE manifest it read."""
+        return self._read_snapshot(spark, man)
 
     # -- column mapping (RENAME COLUMN without rewrite) ---------------------
     def _column_map(self, man: dict) -> "dict[str, str]":
@@ -818,7 +824,7 @@ class CdcTable:
         """The live view: tombstones hidden, bookkeeping columns
         dropped, LOGICAL column names."""
         man = self._latest_manifest(spark)
-        return (self._to_logical(man, self.snapshot(spark))
+        return (self._to_logical(man, self._view_at(spark, man))
                 .where(~F.col(self.DELETED))
                 .drop(self.seq_col, self.DELETED))
 
@@ -909,7 +915,7 @@ class CdcTable:
         column names AS OF that version — renaming history time-travels
         with the data, like Delta's column mapping."""
         man = self._manifest_at(spark, version)
-        return self._to_logical(man, self._read_snapshot(spark, man))
+        return self._to_logical(man, self._view_at(spark, man))
 
     def register_views(self, spark: SparkSession, name: str,
                        version: "int | None" = None) -> None:
@@ -2947,13 +2953,8 @@ class PartitionedCdcTable(CdcTable):
             return  # lost the seed race — same idempotent no-op
         self._update_latest_hint(spark, -1)
 
-    def snapshot(self, spark: SparkSession) -> DataFrame:
-        return self._materialize_view(spark,
-                                      self._latest_manifest(spark))
-
-    def at_version(self, spark: SparkSession, version: int) -> DataFrame:
-        man = self._manifest_at(spark, version)
-        return self._to_logical(man, self._materialize_view(spark, man))
+    def _view_at(self, spark: SparkSession, man: dict) -> DataFrame:
+        return self._materialize_view(spark, man)
 
     # -- OCC conflict resolution ---------------------------------------------
     def _fast_compatible(self, new_man: dict, base_man: dict,

@@ -126,3 +126,29 @@ def test_cdf_source_latest_uses_hint(spark, tmp_path, monkeypatch):
     with open(_hint(base), "w") as fh:
         fh.write("nope")
     assert cdf._latest_version(base) == 1
+
+
+@pytest.mark.parametrize("layout", ["flat", "partitioned"])
+def test_live_reads_take_one_manifest(spark, tmp_path, monkeypatch, layout):
+    """current() and the flat lookup() read the latest manifest ONCE and
+    build the view from it: a second read could pair one version's column
+    map and dropped columns with a later commit's data."""
+    base = str(tmp_path / "t")
+    t = (CdcTable(base, "k", app_id="w") if layout == "flat" else
+         PartitionedCdcTable(base, "k", app_id="w", num_buckets=4))
+    t.initialize(_seed(spark))
+    t(_ch(spark, [(1, "a1", 11, 1, "update")]), 0)
+    reads = []
+    real = CdcTable._latest_manifest
+
+    def counted(self, spark_):
+        reads.append(1)
+        return real(self, spark_)
+
+    monkeypatch.setattr(CdcTable, "_latest_manifest", counted)
+    assert {r.k: r.s for r in t.current(spark).collect()} \
+        == {1: "a1", 2: "b", 3: "c"}
+    assert len(reads) == 1
+    reads.clear()
+    assert [r.s for r in t.lookup(spark, [1]).collect()] == ["a1"]
+    assert len(reads) == 1

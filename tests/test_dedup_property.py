@@ -164,11 +164,14 @@ def test_connected_components_matches_union_find(spark, edges):
     assert got == _uf_components(edges)
 
 
-def test_connected_components_chain_converges_fast(spark):
+def test_connected_components_chain_converges_fast(spark, monkeypatch):
     """A 64-node path graph needs O(log n) rounds with pointer jumping —
     max_iterations=10 would fail a one-hop-per-round propagation (which
-    needs 63) but must succeed here."""
-    from systems_spark.dedup import canonical_documents, connected_components
+    needs 63) but must succeed here. The loop is forced: a graph this
+    small otherwise resolves on the driver."""
+    from systems_spark.dedup import canonical_documents, clusters, connected_components
+
+    monkeypatch.setattr(clusters, "LOCAL_RESOLVE_MAX_EDGES", 0)
 
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(63)], "a long, b long"
@@ -182,17 +185,20 @@ def test_connected_components_chain_converges_fast(spark):
     assert sorted(r.doc_id for r in cd) == list(range(64))
 
 
-def test_connected_components_giant_skewed_cluster(spark):
+def test_connected_components_giant_skewed_cluster(spark, monkeypatch):
     """VERDICT r3 item 4: one giant cluster means the pointer-jump
     self-join key concentrates on the component min — the maximally
     skewed case. A 100k-member star (all edges share node 0: hot key from
     round one) plus a 4096-node chain (needs the full log2 pointer-jump
     depth, and its converged rows all carry the chain min) must both
     resolve correctly within the log-round budget, with AQE skew-join
-    enabled as it is in the shared session."""
+    enabled as it is in the shared session. The loop is forced: 104k
+    edges are under the driver-resolve cap."""
     from pyspark.sql import functions as F
 
-    from systems_spark.dedup import connected_components
+    from systems_spark.dedup import clusters, connected_components
+
+    monkeypatch.setattr(clusters, "LOCAL_RESOLVE_MAX_EDGES", 0)
 
     star_n, chain_n, base = 100_000, 4096, 10_000_000
     star = spark.range(1, star_n).select(
@@ -271,11 +277,15 @@ def test_incremental_components_bridge_and_untouched(spark):
     assert first_run == {r.node: r.component for r in labels.collect()}
 
 
-def test_connected_components_reliable_checkpoint(spark, checkpoint_dir):
+def test_connected_components_reliable_checkpoint(spark, checkpoint_dir,
+                                                  monkeypatch):
     """With a checkpoint dir set, the label loop's round pins become
     RELIABLE checkpoints (files in the dir — they survive executor loss on
-    a real cluster) with no option to pass, and the answer is unchanged."""
-    from systems_spark.dedup import connected_components
+    a real cluster) with no option to pass, and the answer is unchanged.
+    The loop is forced: the driver-side path writes no checkpoint."""
+    from systems_spark.dedup import clusters, connected_components
+
+    monkeypatch.setattr(clusters, "LOCAL_RESOLVE_MAX_EDGES", 0)
 
     edges = [(1, 2), (2, 3), (10, 11), (20, 20)]
     df = spark.createDataFrame(edges, "a long, b long")
@@ -545,15 +555,21 @@ def test_decremental_split_bridge(spark):
     assert got == {2: 2, 10: 10, 11: 10}
 
 
-def test_incremental_local_and_distributed_resolve_identical(spark):
-    """r13: incremental/decremental folds resolve their batch-proportional
-    touched subgraph on the driver (bounded collect + union-find) under
-    LOCAL_RESOLVE_MAX_EDGES and through the distributed loop above it.
-    Both paths must be bit-equal — component = min node id is a graph
-    property, not an algorithm artifact — including bridges, new nodes,
-    and the decremental split-back case."""
-    from systems_spark.dedup import connected_components, incremental_components
+def test_incremental_local_and_distributed_resolve_identical(spark,
+                                                              monkeypatch):
+    """Incremental/decremental folds resolve their batch-proportional
+    touched subgraph through connected_components: on the driver (bounded
+    collect + union-find) under LOCAL_RESOLVE_MAX_EDGES and through the
+    distributed loop above it. Both paths must be bit-equal — component =
+    min node id is a graph property, not an algorithm artifact —
+    including bridges, new nodes, and the decremental split-back case."""
+    from systems_spark.dedup import clusters, connected_components, incremental_components
     from systems_spark.dedup.clusters import decremental_components
+
+    def folded(cap, fold, *args):
+        with monkeypatch.context() as m:
+            m.setattr(clusters, "LOCAL_RESOLVE_MAX_EDGES", cap)
+            return {(r.node, r.component) for r in fold(*args).collect()}
 
     base = spark.createDataFrame(
         [(0, 1), (1, 2), (10, 11), (20, 21), (21, 22), (22, 23)],
@@ -563,12 +579,9 @@ def test_incremental_local_and_distributed_resolve_identical(spark):
                                   "a long, b long")
     local = {(r.node, r.component)
              for r in incremental_components(labels, delta).collect()}
-    dist = {(r.node, r.component)
-            for r in incremental_components(
-                labels, delta, local_max_edges=0).collect()}
-    forced_fallback = {(r.node, r.component)
-                       for r in incremental_components(
-                           labels, delta, local_max_edges=2).collect()}
+    dist = folded(0, incremental_components, labels, delta)
+    # a cap under the subgraph's edge count: collected, then the loop
+    forced_fallback = folded(2, incremental_components, labels, delta)
     assert local == dist == forced_fallback
 
     merged = connected_components(base.unionByName(delta))
@@ -576,9 +589,7 @@ def test_incremental_local_and_distributed_resolve_identical(spark):
     deleted = spark.createDataFrame([(21,)], "node long")
     dl = {(r.node, r.component)
           for r in decremental_components(merged, pairs, deleted).collect()}
-    dd = {(r.node, r.component)
-          for r in decremental_components(
-              merged, pairs, deleted, local_max_edges=0).collect()}
+    dd = folded(0, decremental_components, merged, pairs, deleted)
     assert dl == dd
     # 21 removed: 20 singles out, 22-23 re-pair under min 22
     assert (20, 20) in dl and (22, 22) in dl and (23, 22) in dl
