@@ -3879,17 +3879,7 @@ def q_corpus_curation(spark, sf_dir):
     from systems_spark.functions.fence import fence_columns
 
     docs = _tp(spark, sf_dir, "documents")
-    mh = MinHashDedup(**_MINHASH)
-    ng = NGramJaccardDedup(shingle_k=mh.shingle_k)
-    # r13 (guide §2.4): shared pinned shingle relation — see
-    # _verified_dedup_pairs for the equivalence argument
-    sh = ng.shingle_relation(docs)
-    sigs = mh.signatures(docs, shingle_rows=sh).where(F.col("m0") != 2147483647)
-    cands = mh.candidate_pairs(sigs).select("a", "b")
-    verified = ng.verify_pairs(docs, cands, shingles=sh)
-    pairs = verified.where(
-        F.col("inter") * 10 >= 4 * (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    ).select("a", "b")
+    pairs = _verified_dedup_pairs(docs).select("a", "b")
     # non-canonical cluster members are the dropped duplicates
     losers = (
         canonical_documents(pairs)
@@ -4335,26 +4325,29 @@ FROM sessions GROUP BY user_id, sid
 """
 
 
-def _verified_dedup_pairs(spark, sf_dir):
-    """The canonical verified near-dup pair pipeline shared by the cluster
-    queries (and mirrored by the recursive-CTE oracle): minhash banding
-    candidates → exact n-gram Jaccard verify at threshold 0.4. One
-    definition so the graded queries can never drift apart."""
-    docs = _t(spark, sf_dir, "documents")
+def _verified_dedup_pairs(docs):
+    """The canonical verified near-dup pair pipeline shared by the cluster,
+    curation and verified-pair queries (and mirrored by their oracles):
+    minhash banding candidates → exact n-gram Jaccard verify at threshold
+    0.4, as (a, b, inter, size_a, size_b, jaccard). One definition so the
+    graded queries can never drift apart; ``docs`` is the caller's read of
+    the documents table.
+
+    ONE pinned per-document shingle-set relation feeds both the signature
+    build and the exact verify — identical feature space (same tokens(),
+    same k=3), so the corpus is tokenized and shingled once;
+    min-over-distinct == min-over-all, and the m0 sentinel filter drops
+    shingle-less docs on both paths."""
     mh = MinHashDedup(**_MINHASH)
     ng = NGramJaccardDedup(shingle_k=mh.shingle_k)
-    # r13 (guide §2.4): ONE pinned distinct-shingle relation feeds both the
-    # signature build and the exact verify — identical feature space
-    # (same tokens(), same k=3), so the second corpus tokenize+shingle
-    # pass disappears; min-over-distinct == min-over-all and the m0
-    # sentinel filter below drops shingle-less docs on both paths.
     sh = ng.shingle_relation(docs)
     sigs = mh.signatures(docs, shingle_rows=sh).where(F.col("m0") != 2147483647)
     cands = mh.candidate_pairs(sigs).select("a", "b")
     verified = ng.verify_pairs(docs, cands, shingles=sh)
+    # J >= 0.4  <=>  10*inter >= 4*(size_a+size_b-inter)
     return verified.where(
         F.col("inter") * 10 >= 4 * (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    ).select("a", "b")
+    )
 
 
 def q_dedup_clusters(spark, sf_dir):
@@ -4364,7 +4357,8 @@ def q_dedup_clusters(spark, sf_dir):
     jumping, O(log diameter) rounds, no driver-side union-find), one
     canonical survivor (min doc_id) per cluster. Oracle: DuckDB recursive
     CTE computing the same min-reachable-id."""
-    return canonical_documents(_verified_dedup_pairs(spark, sf_dir))
+    docs = _t(spark, sf_dir, "documents")
+    return canonical_documents(_verified_dedup_pairs(docs).select("a", "b"))
 
 
 def q_dedup_clusters_incremental(spark, sf_dir):
@@ -4379,7 +4373,7 @@ def q_dedup_clusters_incremental(spark, sf_dir):
     recursive CTE that grades dedup_clusters."""
     from systems_spark.dedup import canonical_from_labels, incremental_components
 
-    pairs = _verified_dedup_pairs(spark, sf_dir)
+    pairs = _verified_dedup_pairs(_t(spark, sf_dir, "documents")).select("a", "b")
     base = pairs.where((F.col("a") + F.col("b")) % 2 == 0)
     delta = pairs.where((F.col("a") + F.col("b")) % 2 == 1)
     labels = connected_components(base)
@@ -4959,18 +4953,8 @@ def q_dedup_verified(spark, sf_dir):
     candidates). At 100 TB this is the only viable exact-threshold dedup —
     and it is still fully oracle-checked here."""
     docs = _t(spark, sf_dir, "documents")
-    mh = MinHashDedup(**_MINHASH)
-    ng = NGramJaccardDedup(shingle_k=mh.shingle_k)
-    # r13 (guide §2.4): shared pinned shingle relation — see
-    # _verified_dedup_pairs for the equivalence argument
-    sh = ng.shingle_relation(docs)
-    sigs = mh.signatures(docs, shingle_rows=sh).where(F.col("m0") != 2147483647)
-    cands = mh.candidate_pairs(sigs).select("a", "b")
-    verified = ng.verify_pairs(docs, cands, shingles=sh)
-    # J >= 0.4  <=>  10*inter >= 4*(size_a+size_b-inter)
-    return verified.where(
-        F.col("inter") * 10 >= 4 * (F.col("size_a") + F.col("size_b") - F.col("inter"))
-    ).select("a", "b", "inter", "size_a", "size_b", "jaccard")
+    return _verified_dedup_pairs(docs).select(
+        "a", "b", "inter", "size_a", "size_b", "jaccard")
 
 
 def _sql_dedup_verified() -> str:

@@ -115,8 +115,8 @@ def connected_components(pairs: DataFrame, a_col: str = "a", b_col: str = "b",
     nodes = pin(e.select(F.col("_s").alias("n")).distinct(),
                 corpus_scale=True)
     bcast = nodes.count() <= BROADCAST_NODES_MAX
-    labels = min_label(nodes, e, "_d", "_s", max_iterations,
-                       "connected_components", bcast=bcast)
+    _, labels = min_label(nodes, e, "_d", "_s", max_iterations,
+                          "connected_components", bcast=bcast)
     # min_label returned materialized labels, whose pin no longer reads
     # the edge or node pins
     unpin(e)

@@ -21,7 +21,7 @@ Scale design:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from systems_spark.dedup.ngram import NGramJaccardDedup
@@ -29,7 +29,6 @@ from systems_spark.functions.hashing import (
     MERSENNE_31,
     hash64,
     hash64_sql,
-    minhash_permuted,
     minhash_permuted_sql,
 )
 from systems_spark.functions.text import (
@@ -78,36 +77,42 @@ class MinHashDedup(Operator):
         """(id_col, m0..m{P-1}) one row per doc. Docs with no shingles get
         sentinel M31 components (never match anything).
 
-        Shape note: explode + groupBy(P mins) beats a per-row array fold
-        here (measured 4×) — hash aggregation does map-side partial combine,
-        so the shuffle carries only (doc, P ints) per doc anyway, while the
-        fold pays a P-element array allocation per shingle.
+        Shape note: explode + groupBy(P mins) beats a per-document fold.
+        Hash aggregation combines map-side, so the shuffle carries only
+        (doc, P ints) per doc anyway. Two folds were measured slower: a
+        per-row P-element array fold was 4× slower (an array allocation
+        per shingle), and ``array_min(transform(...))`` per permutation
+        over a document's shingle array saved one job per op on the
+        1200-doc perfbench ``dedup_corpus`` workload (local[2], 4 vCPUs)
+        but ran at par or slower, with +0.18 s of executor CPU per op
+        (higher-order functions are interpreted).
 
-        ``shingle_rows`` (r13, guide §2.4): a precomputed (id_col, shingle)
-        relation over the SAME feature space (same tokenization, same
-        ``shingle_k``) — e.g. ``NGramJaccardDedup.shingle_relation``'s
-        pinned frame in a sigs→candidates→exact-verify composition, which
-        otherwise tokenizes + shingles the corpus a SECOND time just to
-        hash it here. min() over distinct shingles equals min() over all
-        shingles, so signature values are identical. The one semantic
-        difference: an exploded relation has NO row for a shingle-less doc,
-        so such docs are ABSENT from the output instead of carrying M31
-        sentinels — pass it only where the caller filters sentinel
-        signatures anyway (a non-empty doc can never hit the sentinel:
-        ``(a·h+b) mod M31 < M31``).
+        ``shingle_rows``: the pinned per-document relation
+        ``(id_col, shingles, set_size)`` from
+        ``NGramJaccardDedup.shingle_relation`` — shared in a
+        sigs→candidates→exact-verify composition, which otherwise
+        tokenizes + shingles the corpus a SECOND time just to hash it
+        here. It is exploded and min-aggregated like the text path; min()
+        over distinct shingles equals min() over all shingles, so
+        signature values are identical. The one semantic difference: the
+        relation has NO row for a shingle-less doc (NULL, empty, or fewer
+        than ``shingle_k`` tokens), so such docs are ABSENT from the output
+        instead of carrying M31 sentinels — pass it only where the caller
+        filters sentinel signatures anyway (a non-empty doc can never hit
+        the sentinel: ``(a·h+b) mod M31 < M31``).
 
         The relation must come from ``shingle_relation`` of an
         NGramJaccardDedup with this operator's ``shingle_k`` and
         ``content_col`` and ``max_shingle_freq=0`` (a frequency cap drops
-        shingles, which changes the signatures): its ``shingle`` column
+        shingles, which changes the signatures): its ``shingles`` column
         metadata is checked, and any other relation raises ValueError."""
         from systems_spark.functions.fence import fence_columns
 
-        consts = permutation_constants(self.num_perm, self.seed)
         if shingle_rows is not None:
             want = NGramJaccardDedup(content_col=self.content_col,
                                      shingle_k=self.shingle_k).feature_space()
-            meta = shingle_rows.schema["shingle"].metadata
+            meta = (shingle_rows.schema["shingles"].metadata
+                    if "shingles" in shingle_rows.columns else {})
             got = {k: meta.get(k) for k in want}
             if got != want:
                 raise ValueError(
@@ -115,42 +120,37 @@ class MinHashDedup(Operator):
                     f"match this operator's {want}; build it with "
                     "NGramJaccardDedup(shingle_k=..., content_col=..., "
                     "max_shingle_freq=0).shingle_relation")
-            sh = shingle_rows.select(
-                F.col(self.id_col), F.col("shingle").alias("_sh")
-            ).withColumn("_h", hash64(F.col("_sh")))
-            return sh.groupBy(self.id_col).agg(*[
-                F.coalesce(
-                    F.min(minhash_permuted(F.col("_h"), a, b)),
-                    F.lit(MERSENNE_31),
-                ).alias(f"m{i}")
-                for i, (a, b) in enumerate(consts)
-            ])
-        # _toks fenced: a real attribute, never re-inlined into the
-        # shingle lambda (functions/fence.py)
-        sh = fence_columns(
-            df.select(self.id_col, self.content_col),
-            _toks=tokens(F.col(self.content_col)),
-        ).select(
-            F.col(self.id_col),
-            F.explode_outer(
-                word_shingles_from_tokens(F.col("_toks"), self.shingle_k)
-            ).alias("_sh"),
-        ).withColumn("_h", hash64(F.col("_sh")))
-        aggs = [
-            F.coalesce(
-                F.min(minhash_permuted(F.col("_h"), a, b)), F.lit(MERSENNE_31)
-            ).alias(f"m{i}")
-            for i, (a, b) in enumerate(consts)
+            sh = shingle_rows.select(F.col(self.id_col),
+                                     F.explode("shingles").alias("_sh"))
+        else:
+            # _toks fenced: a real attribute, never re-inlined into the
+            # shingle lambda (functions/fence.py)
+            sh = fence_columns(
+                df.select(self.id_col, self.content_col),
+                _toks=tokens(F.col(self.content_col)),
+            ).select(
+                F.col(self.id_col),
+                F.explode_outer(
+                    word_shingles_from_tokens(F.col("_toks"), self.shingle_k)
+                ).alias("_sh"),
+            )
+        return (sh.withColumn("_h", hash64(F.col("_sh")))
+                .groupBy(self.id_col)
+                .agg(*[F.expr(m) for m in self._min_aggs_sql()]))
+
+    def _min_aggs_sql(self) -> list:
+        """``coalesce(min(perm_i(_h)), M31) AS m{i}`` for every permutation,
+        as SQL text that Spark and the DuckDB oracle both parse. Spark gets
+        each as ONE parsed expression: built as Column trees the P
+        aggregates cost ~25 py4j round trips apiece on the driver."""
+        return [
+            f"coalesce(min({minhash_permuted_sql('_h', a, b)}), {MERSENNE_31}) AS m{i}"
+            for i, (a, b) in enumerate(permutation_constants(self.num_perm, self.seed))
         ]
-        return sh.groupBy(self.id_col).agg(*aggs)
 
     def signatures_oracle_sql(self, table: str = "documents") -> str:
-        consts = permutation_constants(self.num_perm, self.seed)
         shingles = word_shingles_sql("text", self.shingle_k)
-        mins = ", ".join(
-            f"coalesce(min({minhash_permuted_sql('_h', a, b)}), {MERSENNE_31}) AS m{i}"
-            for i, (a, b) in enumerate(consts)
-        )
+        mins = ", ".join(self._min_aggs_sql())
         return f"""
 WITH sh AS (
   SELECT {self.id_col}, unnest({shingles}) AS _sh FROM {table}
@@ -163,22 +163,16 @@ GROUP BY a.{self.id_col}
 """
 
     # -- candidate pairs via banding ----------------------------------------
-    def _band_explode(self, sigs: DataFrame, extra_cols: tuple = ()) -> DataFrame:
-        """(id, m0..m{P-1}, _bi, _bv[, extra]) — one row per (doc, band),
-        hot buckets dropped when ``max_bucket_size`` is set. The banded
-        projection both join sides are built from."""
+    def _band_explode(self, sigs: DataFrame) -> DataFrame:
+        """``sigs`` plus (_bi, _bv) — one row per (doc, band), hot buckets
+        dropped when ``max_bucket_size`` is set. The banded projection both
+        join sides are built from; the band structs are one parsed
+        generator expression (see ``_min_aggs_sql`` for why)."""
         r = self.rows_per_band
-        expl = sigs.select(
-            F.col(self.id_col),
-            *[F.col(c) for c in extra_cols],
-            *[F.col(f"m{i}") for i in range(self.num_perm)],
-            F.posexplode(F.array(*[
-                F.struct(*[
-                    F.col(f"m{band * r + j}").alias(f"x{j}") for j in range(r)
-                ])
-                for band in range(self.bands)
-            ])).alias("_bi", "_bv"),
-        )
+        bands = ", ".join(
+            "struct(" + ", ".join(f"m{band * r + j} AS x{j}" for j in range(r)) + ")"
+            for band in range(self.bands))
+        expl = sigs.select("*", F.expr(f"posexplode(array({bands})) AS (_bi, _bv)"))
         if self.max_bucket_size is not None:
             hot = (expl.groupBy("_bi", "_bv")
                    .agg(F.count(F.lit(1)).alias("_n"))
@@ -186,6 +180,14 @@ GROUP BY a.{self.id_col}
                    .select("_bi", "_bv"))
             expl = expl.join(F.broadcast(hot), on=["_bi", "_bv"], how="anti")
         return expl
+
+    def _n_equal(self) -> Column:
+        """``n_equal`` of a joined L/R pair row, the number of equal
+        signature components, as one parsed expression. Every row of one
+        (a, b) pair carries the same signatures, so it is computed before
+        the pair dedup, which then shuffles one long instead of P flags."""
+        eq = " + ".join(f"CAST(L.m{i} = R.m{i} AS INT)" for i in range(self.num_perm))
+        return F.expr(f"CAST({eq} AS BIGINT) AS n_equal")
 
     def incremental_pairs(self, corpus_sigs: DataFrame,
                           new_sigs: DataFrame,
@@ -223,10 +225,10 @@ GROUP BY a.{self.id_col}
                                 "MinHashDedup.incremental_pairs")
         both = corpus_sigs.withColumn("_new", F.lit(False)).unionByName(
             new_sigs.withColumn("_new", F.lit(True)))
-        expl = self._band_explode(both, extra_cols=("_new",))
+        expl = self._band_explode(both)
         left = expl.where(F.col("_new")).alias("L")
         right = expl.alias("R")
-        pairs = left.join(
+        return left.join(
             right,
             on=[
                 F.col("L._bi") == F.col("R._bi"),
@@ -238,17 +240,8 @@ GROUP BY a.{self.id_col}
                     F.col(f"R.{self.id_col}")).alias("a"),
             F.greatest(F.col(f"L.{self.id_col}"),
                        F.col(f"R.{self.id_col}")).alias("b"),
-            *[
-                (F.col(f"L.m{i}") == F.col(f"R.m{i}")).cast("int").alias(f"eq{i}")
-                for i in range(self.num_perm)
-            ],
-        )
-        eq_sum = sum(F.col(f"eq{i}") for i in range(self.num_perm))
-        return (
-            pairs.dropDuplicates(["a", "b"])
-            .withColumn("n_equal", eq_sum.cast("long"))
-            .select("a", "b", "n_equal")
-        )
+            self._n_equal(),
+        ).dropDuplicates(["a", "b"])
 
     def candidate_pairs(self, sigs: DataFrame) -> DataFrame:
         """(a, b, n_equal) for pairs sharing ≥1 band; n_equal = # equal
@@ -276,7 +269,7 @@ GROUP BY a.{self.id_col}
         broadcasts; survivors anti-join against it. ``None`` = exact."""
         expl = self._band_explode(sigs)
         left, right = expl.alias("L"), expl.alias("R")
-        pairs = left.join(
+        return left.join(
             right,
             on=[
                 F.col("L._bi") == F.col("R._bi"),
@@ -286,17 +279,8 @@ GROUP BY a.{self.id_col}
         ).select(
             F.col(f"L.{self.id_col}").alias("a"),
             F.col(f"R.{self.id_col}").alias("b"),
-            *[
-                (F.col(f"L.m{i}") == F.col(f"R.m{i}")).cast("int").alias(f"eq{i}")
-                for i in range(self.num_perm)
-            ],
-        )
-        eq_sum = sum(F.col(f"eq{i}") for i in range(self.num_perm))
-        return (
-            pairs.dropDuplicates(["a", "b"])
-            .withColumn("n_equal", eq_sum.cast("long"))
-            .select("a", "b", "n_equal")
-        )
+            self._n_equal(),
+        ).dropDuplicates(["a", "b"])
 
     def transform(self, df: DataFrame) -> DataFrame:
         """Near-duplicate pairs with estimated Jaccard ≥ threshold.

@@ -1,20 +1,32 @@
 """Exact n-gram Jaccard near-duplicate pairs.
 
-Ground-truth (non-approximate) set Jaccard over word shingles, computed
-relationally: explode distinct shingles per doc, self-join on shingle to get
-per-pair intersection counts, combine with per-doc set sizes:
+Ground-truth (non-approximate) set Jaccard over word shingles:
 
     J(a,b) = |A∩B| / (|A| + |B| - |A∩B|)
+
+Every path reads one per-document relation, ``(id_col, shingles,
+set_size)``: the distinct word shingles of each document as an array and
+their count. It is a pure projection of the documents (tokens fenced,
+``array_distinct`` of the shingles, its ``size``) with no shuffle and one
+row per document; documents with no shingles (NULL, empty, or fewer than k
+tokens) are absent. :meth:`NGramJaccardDedup.shingle_relation` returns it
+pinned so a composition builds it once.
+
+- ``transform`` (all pairs): explodes the sets, groups doc ids per shingle
+  to count each pair's intersection, and reads both set sizes from the
+  relation.
+- ``verify_pairs`` (candidate pairs): joins the pairs to the relation on
+  both ends and intersects the two shingle arrays, so nothing is exploded.
 
 All-integer arithmetic until the final ratio; the threshold test uses the
 cross-multiplied integer form so the oracle matches exactly.
 
-Scale note: this shuffles one row per (shingle, doc) — at 100 TB you run
-MinHashDedup first and use this only to verify candidate pairs (the
-``verify_pairs`` helper joins a candidate set); the standalone transform is
-for modest corpora / oracle checking. Extremely common shingles create join
-skew, so ``max_shingle_freq`` drops shingles shared by more than N docs
-(boilerplate n-grams carry no dedup signal anyway).
+Scale note: the standalone ``transform`` shuffles one row per (shingle, doc)
+and emits every pair sharing a shingle, so at 100 TB you run MinHashDedup
+first and use ``verify_pairs`` on its candidates; the standalone transform
+is for modest corpora / oracle checking. Extremely common shingles create
+pair fan-out, so ``max_shingle_freq`` drops shingles shared by more than N
+docs (boilerplate n-grams carry no dedup signal anyway).
 """
 
 from __future__ import annotations
@@ -42,69 +54,26 @@ class NGramJaccardDedup(Operator):
         self.max_shingle_freq = int(max_shingle_freq)
         self.requires = (content_col, id_col)
 
-    def _shingle_rows(self, df: DataFrame) -> DataFrame:
-        # fenced staging: _toks must be a real attribute, not an alias —
-        # ProjectCollapsing would otherwise re-inline the tokenization into
-        # every shingle-lambda element (measured 15× on this hot path; see
-        # functions/fence.py)
-        from systems_spark.functions.fence import fence_columns
-
-        sh = (
-            fence_columns(
-                df.select(self.id_col, self.content_col),
-                _toks=tokens(F.col(self.content_col)),
-            )
-            .select(
-                F.col(self.id_col),
-                F.explode(
-                    F.array_distinct(word_shingles_from_tokens(F.col("_toks"), self.shingle_k))
-                ).alias("shingle"),
-            )
-        )
-        if self.max_shingle_freq > 0:
-            freq = sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
-            sh = sh.join(
-                F.broadcast(freq.where(F.col("_f") <= self.max_shingle_freq)), "shingle"
-            ).drop("_f")
-        return sh
+    def _join_sets(self, pairs: DataFrame, sets: DataFrame) -> DataFrame:
+        """pairs ⋈ sets AS _A ON a ⋈ sets AS _B ON b. The relation joins
+        under its own column names on both ends, so both build sides are one
+        canonical subplan: when it broadcasts, AQE reuses one
+        BroadcastExchange for both joins."""
+        return (pairs
+                .join(sets.alias("_A"), F.col("a") == F.col(f"_A.{self.id_col}"))
+                .join(sets.alias("_B"), F.col("b") == F.col(f"_B.{self.id_col}")))
 
     def transform(self, df: DataFrame) -> DataFrame:
         """(a, b, inter, size_a, size_b) with J ≥ threshold, a < b.
 
-        Set sizes come from a pure per-row projection (``size(array_distinct
-        (shingles))``) — no explode, no shuffle, no caching; only the
-        pair-intersection needs the exploded shingle relation."""
-        # r12 perf: pin the exploded shingle relation and the per-doc size
-        # table (non-eager localCheckpoint). `sizes` is joined twice (a and
-        # b sides) and `sh` feeds both the pair stage and (under a freq
-        # cap) the sizes — left lazy, each reference re-ran the corpus
-        # tokenize+shingle pass (dedup_ngram's before-plan read the corpus
-        # parquet 3×). Computed once per action, rebuilt per call.
-        sh = pin(self._shingle_rows(df), corpus_scale=True)
-        if self.max_shingle_freq > 0:
-            # sizes must count only retained shingles → derive from sh
-            sizes = sh.groupBy(self.id_col).agg(F.count(F.lit(1)).alias("set_size"))
-        else:
-            from systems_spark.functions.fence import fence_columns
-
-            sizes = fence_columns(
-                df.select(self.id_col, self.content_col),
-                _toks=tokens(F.col(self.content_col)),
-            ).select(
-                F.col(self.id_col),
-                F.size(
-                    F.array_distinct(word_shingles_from_tokens(F.col("_toks"), self.shingle_k))
-                ).cast("long").alias("set_size"),
-            )
-        # (sizes stays lazy: it is a cheap projection / small agg, and the
-        # planner's size estimate keeps its two join uses broadcastable)
-        # pair intersections via groupBy(shingle)+collect_list, generating
-        # ordered (a, b) pairs as an array op — computes the shingle
-        # relation ONCE and replaces the self-join (measured 2.6× faster;
-        # one shuffle of (shingle, id) instead of two join legs)
-        grouped = sh.groupBy("shingle").agg(
-            F.array_sort(F.collect_list(self.id_col)).alias("_ids")
-        )
+        Intersections come from the exploded sets: groupBy(shingle) +
+        collect_list, generating ordered (a, b) pairs as an array op — one
+        shuffle of (shingle, id) instead of a self-join (measured 2.6×
+        faster). Set sizes are read from the same pinned relation."""
+        sets = self.shingle_relation(df)
+        grouped = (sets.select(self.id_col, F.explode("shingles").alias("shingle"))
+                   .groupBy("shingle")
+                   .agg(F.array_sort(F.collect_list(self.id_col)).alias("_ids")))
         n = F.size("_ids")
         pair_structs = F.flatten(
             F.transform(
@@ -127,36 +96,59 @@ class NGramJaccardDedup(Operator):
         )
         num, den = int(self.threshold * 1_000_000), 1_000_000
         return (
-            inter.join(sizes.withColumnRenamed(self.id_col, "a")
-                       .withColumnRenamed("set_size", "size_a"), "a")
-            .join(sizes.withColumnRenamed(self.id_col, "b")
-                  .withColumnRenamed("set_size", "size_b"), "b")
+            self._join_sets(inter, sets)
+            .select("a", "b", "inter",
+                    F.col("_A.set_size").alias("size_a"),
+                    F.col("_B.set_size").alias("size_b"))
             # J >= t  <=>  inter * den >= t*1e6 * (size_a + size_b - inter)
             .where(F.col("inter") * den >= num * (F.col("size_a") + F.col("size_b") - F.col("inter")))
-            .select("a", "b", "inter", "size_a", "size_b")
         )
 
     def shingle_relation(self, df: DataFrame) -> DataFrame:
-        """The pinned DISTINCT (id_col, shingle) relation — exposed so a
-        composition can build it ONCE and share it between the stages that
-        need the same feature space (r13, guide §2.4: the sigs→candidates→
-        verify pipelines tokenized + shingled the corpus once for
-        ``MinHashDedup.signatures`` and again here; min-over-distinct equals
-        min-over-all, so both stages can read this one pin). Pass the
-        result to ``verify_pairs(..., shingles=...)`` and to
-        ``MinHashDedup.signatures(..., shingle_rows=...)``.
+        """The pinned per-document relation ``(id_col, shingles, set_size)``
+        (module docstring): one row per document with at least one shingle;
+        under ``max_shingle_freq`` only retained shingles count. Built ONCE
+        by a composition and shared by the stages that need the same
+        feature space: pass it to ``verify_pairs(..., shingles=...)`` and to
+        ``MinHashDedup.signatures(..., shingle_rows=...)``, which explodes
+        it (min over distinct shingles equals min over all of them).
 
-        The ``shingle`` column carries :meth:`feature_space` as column
-        metadata, so a consumer can refuse a relation built over a
-        different one (``MinHashDedup.signatures`` does)."""
-        sh = self._shingle_rows(df).withMetadata("shingle",
-                                                 self.feature_space())
-        return pin(sh, corpus_scale=True)
+        The return value is the pin itself (a ``LogicalRDD`` at the plan
+        root), so ``pinning.unpin`` releases it. The ``shingles`` column
+        carries :meth:`feature_space` as column metadata, so a consumer can
+        refuse a relation built over a different one
+        (``MinHashDedup.signatures`` does)."""
+        # fenced staging: _toks must be a real attribute, not an alias —
+        # ProjectCollapsing would otherwise re-inline the tokenization into
+        # every shingle-lambda element (measured 15× on this hot path; see
+        # functions/fence.py)
+        from systems_spark.functions.fence import fence_columns
+
+        sets = (
+            fence_columns(df.select(self.id_col, self.content_col),
+                          _toks=tokens(F.col(self.content_col)))
+            # k tokens or more <=> at least one shingle (NULL text: no row)
+            .where(F.size("_toks") >= self.shingle_k)
+            .select(self.id_col, F.array_distinct(word_shingles_from_tokens(
+                F.col("_toks"), self.shingle_k)).alias("shingles"))
+        )
+        if self.max_shingle_freq > 0:
+            sh = sets.select(self.id_col, F.explode("shingles").alias("shingle"))
+            hot = (sh.groupBy("shingle").agg(F.count(F.lit(1)).alias("_f"))
+                   .where(F.col("_f") > self.max_shingle_freq))
+            sets = (sh.join(hot, "shingle", "left_anti")
+                    .groupBy(self.id_col)
+                    .agg(F.collect_list("shingle").alias("shingles")))
+        return pin(sets.select(
+            self.id_col,
+            F.col("shingles").alias("shingles", metadata=self.feature_space()),
+            F.size("shingles").cast("long").alias("set_size")),
+            corpus_scale=True)
 
     def feature_space(self) -> dict:
         """The shingle definition a :meth:`shingle_relation` is built
         over: same tokenization, ``shingle_k``, ``content_col`` and
-        ``max_shingle_freq`` ⇒ the same (id, shingle) rows."""
+        ``max_shingle_freq`` ⇒ the same (id, shingles) rows."""
         return {"shingle_k": self.shingle_k, "content_col": self.content_col,
                 "max_shingle_freq": self.max_shingle_freq}
 
@@ -164,32 +156,30 @@ class NGramJaccardDedup(Operator):
                      shingles: "DataFrame | None" = None) -> DataFrame:
         """Exact-Jaccard verification of candidate (a, b) pairs from an
         approximate pass (minhash/simhash) — the scalable composition.
+        Returns (a, b, inter, size_a, size_b, jaccard) for every pair whose
+        documents share at least one shingle; ``pairs`` must hold each pair
+        once (``candidate_pairs`` output does).
 
-        Join order matters: pairs⋈shingles(a) first, THEN an equi-join on
-        (b, shingle) — keeping 'shingle' in the join key avoids the per-pair
-        |A|×|B| cross product a filter-after-join would materialize.
+        Each pair joins the per-document relation on both ends;
+        ``inter = size(array_intersect(A.shingles, B.shingles))`` and both
+        sizes are read from the relation. Nothing is exploded or grouped,
+        and at corpus sizes where the relation broadcasts, both joins read
+        ONE reused BroadcastExchange (see ``_join_sets``).
 
         ``shingles``: a pre-built ``shingle_relation(df)`` frame to reuse
         (skips re-pinning when the caller already shares it with the
         signature stage). It must already be PINNED — pass the
         ``shingle_relation`` result itself, not a lazy frame of the same
-        shape: it is referenced four times here (a side, b side, and the
-        sizes joined on both pair ends), and each lazy reference re-runs
-        the corpus tokenize+shingle pass."""
-        sh = shingles if shingles is not None else self.shingle_relation(df)
-        a_sh = sh.withColumnRenamed(self.id_col, "a")
-        b_sh = sh.withColumnRenamed(self.id_col, "b")
-        inter = (
-            pairs.join(a_sh, "a")
-            .join(b_sh, ["b", "shingle"])
-            .groupBy("a", "b").agg(F.count(F.lit(1)).alias("inter"))
-        )
-        sizes = sh.groupBy(self.id_col).agg(F.count(F.lit(1)).alias("set_size"))
+        shape: it is read on both pair ends, and each lazy read re-runs the
+        corpus tokenize+shingle pass."""
+        sets = shingles if shingles is not None else self.shingle_relation(df)
+        inter = F.size(F.array_intersect("_A.shingles", "_B.shingles")).cast("long")
         return (
-            inter.join(sizes.withColumnRenamed(self.id_col, "a")
-                       .withColumnRenamed("set_size", "size_a"), "a")
-            .join(sizes.withColumnRenamed(self.id_col, "b")
-                  .withColumnRenamed("set_size", "size_b"), "b")
+            self._join_sets(pairs, sets)
+            .select("a", "b", inter.alias("inter"),
+                    F.col("_A.set_size").alias("size_a"),
+                    F.col("_B.set_size").alias("size_b"))
+            .where(F.col("inter") > 0)
             .withColumn(
                 "jaccard",
                 F.round(F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")), 6),

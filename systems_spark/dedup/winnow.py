@@ -105,8 +105,14 @@ def winnow_pairs(docs: DataFrame, k: int = 4, w: int = 4,
         raise ValueError("max_doc_freq must be >= 1")
     # r12 perf: pin the fingerprint relation — both sides of the pair
     # self-join (and the hot-fingerprint agg under the skew cap) reference
-    # it, and each lazy reference re-ran the tokenize + winnowing pass
-    # (the ngram verify_pairs lesson: exchange reuse never fires here)
+    # it, and each lazy reference re-ran the tokenize + winnowing pass.
+    # Exchange reuse does not replace the pin: AQE reuses an exchange only
+    # when two exchanges have the same canonical subplan (same relation,
+    # columns and partitioning key). A broadcast plan of this self-join
+    # has an exchange on its build side only, so the probe side re-runs
+    # its subplan, and the skew cap's aggregate shuffles by another key.
+    # (ngram verify_pairs is where reuse does fire: both of its joins
+    # BUILD from one pinned relation under one key, one broadcast.)
     fps = pin(winnow_fingerprints(docs, k, w, text_col, id_col),
               corpus_scale=True)
     if max_doc_freq is not None:

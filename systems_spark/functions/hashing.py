@@ -71,6 +71,8 @@ def minhash_permuted(base_hash: Column, a: int, b: int) -> Column:
 
 
 def minhash_permuted_sql(base_hash_expr: str, a: int, b: int) -> str:
-    """DuckDB/ANSI-SQL equivalent of :func:`minhash_permuted`."""
+    """DuckDB/ANSI-SQL equivalent of :func:`minhash_permuted`; Spark parses
+    the same text too (``MinHashDedup.signatures`` builds its aggregates
+    from it)."""
     a, b = a % MERSENNE_31, b % MERSENNE_31
     return f"(({a} * (({base_hash_expr}) % {MERSENNE_31}) + {b}) % {MERSENNE_31})"

@@ -74,11 +74,13 @@ def pin_fresh(df: DataFrame) -> "tuple[DataFrame, DataFrame]":
 
 
 def min_label(nodes: DataFrame, e: DataFrame, pull: str, assign: str,
-              max_rounds: int, what: str, bcast: bool = False) -> DataFrame:
-    """(n, c): c = min node id reachable from n by walking edges (_s, _d)
-    in the ``assign`` → ``pull`` direction (forward reach for
-    ``pull="_d"``, backward for ``"_s"``; on a symmetric edge set either
-    is the connected component's min), to fixpoint. ``nodes`` holds one
+              max_rounds: int, what: str,
+              bcast: bool = False) -> "tuple[DataFrame, DataFrame]":
+    """``(pinned, labels)``; ``labels`` is (n, c): c = min node id
+    reachable from n by walking edges (_s, _d) in the ``assign`` →
+    ``pull`` direction (forward reach for ``pull="_d"``, backward for
+    ``"_s"``; on a symmetric edge set either is the connected component's
+    min), to fixpoint. ``nodes`` holds one
     column ``n`` and must already be pinned: round 1 reads it twice, and
     the loop builds its first labels over it without a pin of their own.
 
@@ -114,8 +116,10 @@ def min_label(nodes: DataFrame, e: DataFrame, pull: str, assign: str,
 
     Pins: each check job materializes every round built since the last
     one, after which the newest round reads no earlier round's blocks, so
-    the superseded round pins are released right there. The returned
-    frame keeps its own pin; ``nodes`` and ``e`` stay the caller's."""
+    the superseded round pins are released right there. The labels keep
+    their own pin, returned as ``pinned`` (as in :func:`pin_fresh`: plan
+    through ``labels``, release through ``pinned``); ``nodes`` and ``e``
+    stay the caller's."""
     maybe_b = F.broadcast if bcast else (lambda df: df)
     lab = nodes.select("n", F.col("n").alias("c"))
     _unset = object()
@@ -156,7 +160,7 @@ def min_label(nodes: DataFrame, e: DataFrame, pull: str, assign: str,
         # zero rows), so compare plain equality from a non-sum sentinel
         seq = ([prev] if prev is not _unset else []) + sums
         if any(a == b for a, b in zip(seq, seq[1:])):
-            return lab
+            return held[0], lab
         prev = sums[-1]
         pending = []
     raise RuntimeError(f"{what} did not converge in {max_rounds} rounds")

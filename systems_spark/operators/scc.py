@@ -56,7 +56,12 @@ pathology).
 Pins: every pin here holds graph-sized state (the edge table, the node
 set, per-node labels, within-class edges), so all of them are
 ``pin(corpus_scale=True)`` — reliable checkpoints when the session has
-a checkpoint dir, lazy local checkpoints otherwise.
+a checkpoint dir, lazy local checkpoints otherwise. Each pass releases
+its within-class edges and its coloring once the pass's settle join is
+materialized; the settled rows are filters over the settle joins, so
+those, the edge pin and the node pin are released once the result, a
+union of the settled rows, is materialized. A finished call holds one
+pin: the result's own.
 
 Determinism: the SCC label is the component's minimum node id — a
 property of the graph, not the algorithm — so the result is
@@ -66,17 +71,19 @@ CTE (:func:`scc_sql`).
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from systems_spark.operators.graph import BROADCAST_NODES_MAX, min_label
-from systems_spark.pinning import pin
+from systems_spark.pinning import pin, unpin
 
 __all__ = ["strongly_connected_components", "scc_sql"]
 
 
-def _pin(df: DataFrame) -> DataFrame:
-    return pin(df, corpus_scale=True)
+def _pin(df: DataFrame, eager: bool = False) -> DataFrame:
+    return pin(df, corpus_scale=True, eager=eager)
 
 
 def strongly_connected_components(edges: DataFrame, src: str = "src",
@@ -98,56 +105,68 @@ def strongly_connected_components(edges: DataFrame, src: str = "src",
                               F.col(dst).alias("_d")).distinct())
     nodes = _pin(e_all.select(F.col("_s").alias("n"))
                  .union(e_all.select(F.col("_d").alias("n"))).distinct())
-    n_nodes = nodes.count()
-    if n_nodes == 0:  # empty edge table
-        return (e_all.select(F.col("_s").alias(node_col))
-                .withColumn(component_col, F.col(node_col)).limit(0))
-    bcast = n_nodes <= BROADCAST_NODES_MAX
-    maybe_b = F.broadcast if bcast else (lambda df: df)
+    held = [e_all, nodes]  # released once the result is materialized
+    try:
+        n_nodes = nodes.count()
+        if n_nodes == 0:  # empty edge table
+            return (edges.select(F.col(src).alias(node_col))
+                    .withColumn(component_col, F.col(node_col)).limit(0))
+        bcast = n_nodes <= BROADCAST_NODES_MAX
+        maybe_b = F.broadcast if bcast else (lambda df: df)
 
-    # pass 0: forward coloring over ALL edges (one implicit class)
-    comp = min_label(nodes, e_all, "_d", "_s", max_rounds,
-                     "scc: forward coloring", bcast=bcast)
-    settled = None
-    forward = False  # pass 0 was forward; alternate from backward
-    for _ in range(max_rounds):
-        # within-class edges of the ACTIVE rump (comp only holds
-        # unsettled nodes, so the inner joins drop settled endpoints)
-        ec = _pin(e_all
-                  .join(maybe_b(comp.select(F.col("n").alias("_s"),
-                                            F.col("c").alias("_cs"))),
-                        on="_s")
-                  .join(maybe_b(comp.select(F.col("n").alias("_d"),
-                                            F.col("c").alias("_cd"))),
-                        on="_d")
-                  .where(F.col("_cs") == F.col("_cd"))
-                  .select("_s", "_d"))
-        pull, assign = ("_d", "_s") if forward else ("_s", "_d")
-        new = min_label(comp.select("n"), ec, pull, assign, max_rounds,
-                        "scc: forward coloring" if forward
-                        else "scc: backward coloring", bcast=bcast)
-        # SETTLE: a label reproduced across two OPPOSITE-direction
-        # passes proves mutual reachability with its class min c — the
-        # previous pass showed the A-direction path, this pass the B
-        # direction — and an SCC always reproduces as one block, so
-        # the settled rows are complete SCCs and leave the rump (a
-        # remaining mutual path can never route through a settled
-        # node: it would put that node on the cycle, i.e. in the same
-        # still-unsettled SCC)
-        both = _pin(new.join(maybe_b(comp.withColumnRenamed("c", "_pc")),
-                             on="n"))
-        done = (both.where(F.col("c") == F.col("_pc"))
-                .select(F.col("n").alias(node_col),
-                        F.col("c").alias(component_col)))
-        settled = done if settled is None else settled.unionByName(done)
-        settled = _pin(settled)
-        comp = _pin(both.where(F.col("c") != F.col("_pc"))
-                    .select("n", "c"))
-        forward = not forward
-        if comp.limit(1).count() == 0:
-            return settled
-    raise RuntimeError(
-        f"scc did not settle in {max_rounds} refinement passes")
+        # pass 0: forward coloring over ALL edges (one implicit class)
+        pinned, comp = min_label(nodes, e_all, "_d", "_s", max_rounds,
+                                 "scc: forward coloring", bcast=bcast)
+        held.append(pinned)
+        done = []
+        forward = False  # pass 0 was forward; alternate from backward
+        for _ in range(max_rounds):
+            # within-class edges of the ACTIVE rump (comp only holds
+            # unsettled nodes, so the inner joins drop settled endpoints)
+            ec = _pin(e_all
+                      .join(maybe_b(comp.select(F.col("n").alias("_s"),
+                                                F.col("c").alias("_cs"))),
+                            on="_s")
+                      .join(maybe_b(comp.select(F.col("n").alias("_d"),
+                                                F.col("c").alias("_cd"))),
+                            on="_d")
+                      .where(F.col("_cs") == F.col("_cd"))
+                      .select("_s", "_d"))
+            pull, assign = ("_d", "_s") if forward else ("_s", "_d")
+            pinned, new = min_label(comp.select("n"), ec, pull, assign,
+                                    max_rounds,
+                                    "scc: forward coloring" if forward
+                                    else "scc: backward coloring",
+                                    bcast=bcast)
+            unpin(ec)  # the returned labels are materialized without it
+            # SETTLE: a label reproduced across two OPPOSITE-direction
+            # passes proves mutual reachability with its class min c — the
+            # previous pass showed the A-direction path, this pass the B
+            # direction — and an SCC always reproduces as one block, so
+            # the settled rows are complete SCCs and leave the rump (a
+            # remaining mutual path can never route through a settled
+            # node: it would put that node on the cycle, i.e. in the same
+            # still-unsettled SCC)
+            both = _pin(new.join(maybe_b(comp.withColumnRenamed("c", "_pc")),
+                                 on="n"))
+            held.append(both)
+            # counting the rump materializes `both`, which then no longer
+            # reads this pass's labels; the settled rows and the next
+            # pass's rump are filters over it
+            open_rows = both.where(F.col("c") != F.col("_pc")).count()
+            unpin(pinned)
+            done.append(both.where(F.col("c") == F.col("_pc"))
+                        .select(F.col("n").alias(node_col),
+                                F.col("c").alias(component_col)))
+            comp = both.where(F.col("c") != F.col("_pc")).select("n", "c")
+            forward = not forward
+            if open_rows == 0:
+                return _pin(reduce(DataFrame.unionByName, done), eager=True)
+        raise RuntimeError(
+            f"scc did not settle in {max_rounds} refinement passes")
+    finally:
+        for p in held:
+            unpin(p)
 
 
 def scc_sql(edges_sql: str, src: str = "src", dst: str = "dst",

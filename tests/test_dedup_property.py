@@ -17,7 +17,7 @@ import os
 import sys
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -599,11 +599,11 @@ def test_incremental_local_and_distributed_resolve_identical(spark,
 @settings(max_examples=6, deadline=None)
 @given(docs=CORPUS)
 def test_signatures_from_shared_shingle_relation_identical(spark, docs):
-    """r13 §2.4: a sigs→candidates→verify composition shares ONE pinned
-    distinct-shingle relation between MinHashDedup.signatures and
+    """A sigs→candidates→verify composition shares ONE pinned per-document
+    shingle-set relation between MinHashDedup.signatures and
     NGramJaccardDedup.verify_pairs. min over distinct shingles equals min
     over all shingles, so after the m0-sentinel filter (shingle-less docs
-    are absent from the exploded relation but carry M31 sentinels on the
+    are absent from the relation but carry M31 sentinels on the
     explode_outer path) both signature paths must be row-identical."""
     from pyspark.sql import functions as F
 
@@ -619,6 +619,12 @@ def test_signatures_from_shared_shingle_relation_identical(spark, docs):
               mh.signatures(df, shingle_rows=sh)
               .where(F.col("m0") != sent).collect()}
     assert shared == base
+    # the relation: one row per doc with a shingle, its distinct shingles
+    # and their count
+    want = {i: _shingles(d, 2) for i, d in rows if _shingles(d, 2)}
+    got = sh.collect()
+    assert {r.doc_id: set(r.shingles) for r in got} == want
+    assert all(r.set_size == len(r.shingles) for r in got)
 
 
 @settings(max_examples=10, deadline=None)
@@ -657,8 +663,117 @@ def test_signatures_reject_mismatched_shingle_relation(spark):
         .shingle_relation(df),
         NGramJaccardDedup(shingle_k=2, content_col="body")
         .shingle_relation(df.withColumnRenamed("text", "body")),
+        # the right shape, but not built by shingle_relation
+        spark.createDataFrame([(0, ["a b"], 1)],
+                              "doc_id long, shingles array<string>, "
+                              "set_size long"),
+        # the exploded (id, shingle) shape of earlier versions
         spark.createDataFrame([(0, "a b")], "doc_id long, shingle string"),
     ]
     for rel in bad:
         with pytest.raises(ValueError, match="feature space"):
             mh.signatures(df, shingle_rows=rel)
+
+
+# corpora for the verify property: NULL text, empty text, text shorter than
+# k, and duplicated texts are all drawn, and each corpus repeats its first
+# two documents under new ids
+@st.composite
+def _verify_corpora(draw):
+    docs = draw(st.lists(st.one_of(st.none(), st.just(""), st.just("a"),
+                                   DOC), min_size=2, max_size=10))
+    return docs + docs[:2]
+
+
+def _python_verified(docs, pairs, k, cap):
+    """(a, b) -> (inter, size_a, size_b, jaccard) by exact set arithmetic,
+    for the pairs whose shingle sets intersect; under ``cap`` a shingle
+    held by more than ``cap`` documents is dropped from every set."""
+    sets = {i: _shingles(d or "", k) for i, d in enumerate(docs)}
+    if cap:
+        df = {}
+        for s in sets.values():
+            for x in s:
+                df[x] = df.get(x, 0) + 1
+        sets = {i: {x for x in s if df[x] <= cap} for i, s in sets.items()}
+    out = {}
+    for a, b in pairs:
+        inter = len(sets[a] & sets[b])
+        if inter:
+            sa, sb = len(sets[a]), len(sets[b])
+            out[(a, b)] = (inter, sa, sb, inter / (sa + sb - inter))
+    return out
+
+
+@settings(max_examples=8, deadline=None)
+@given(docs=_verify_corpora(), cap=st.sampled_from([0, 1, 2]))
+@example(docs=[None, "", "a", "a b", "a b c", "a b c", "b c a b", "a b c"],
+         cap=2)
+@example(docs=[None, "", "a b c", "a b c a"], cap=0)
+def test_verify_pairs_matches_python_jaccard(spark, docs, cap):
+    """verify_pairs over the per-document relation equals exact Jaccard in
+    Python over every candidate pair: inter, both set sizes and the
+    6-digit jaccard; pairs sharing no shingle, and docs with no shingles
+    (NULL, empty, shorter than k, or every shingle over the cap), emit no
+    row. The standalone transform, whose sizes come from the same
+    relation, keeps exactly the pairs at or over its threshold."""
+    k, thr = 2, 0.4
+    df = spark.createDataFrame(list(enumerate(docs)), "doc_id long, text string")
+    pairs = [(a, b) for a in range(len(docs)) for b in range(a + 1, len(docs))]
+    want = _python_verified(docs, pairs, k, cap)
+    ng = NGramJaccardDedup(shingle_k=k, threshold=thr, max_shingle_freq=cap)
+    sh = ng.shingle_relation(df)
+    got = ng.verify_pairs(df, spark.createDataFrame(pairs, "a long, b long"),
+                          shingles=sh).collect()
+    assert {(r.a, r.b): (r.inter, r.size_a, r.size_b) for r in got} == \
+        {p: v[:3] for p, v in want.items()}
+    assert all(abs(r.jaccard - want[(r.a, r.b)][3]) <= 1e-6 for r in got)
+    kept = {(r.a, r.b): (r.inter, r.size_a, r.size_b)
+            for r in ng.transform(df).collect()}
+    assert kept == {p: v[:3] for p, v in want.items()
+                    if 10 * v[0] >= 4 * (v[1] + v[2] - v[0])}  # J >= thr
+
+
+def test_verify_pairs_reuses_one_broadcast(spark, tmp_path):
+    """On a pinned shingle-set relation and pinned candidate pairs, verify
+    costs at most 2 Spark jobs, its result collect included: both pair
+    ends join the relation through ONE BroadcastExchange, which AQE
+    reuses for the second join."""
+    import random
+    import re
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from systems_spark.pinning import pin
+
+    rnd = random.Random(3)
+    words = [f"w{i}" for i in range(30)]
+    base = [[rnd.choice(words) for _ in range(12)] for _ in range(20)]
+    rows = []
+    for i in range(60):  # three near-copies of each base text
+        t = list(base[i % 20])
+        t[rnd.randrange(12)] = rnd.choice(words)
+        rows.append((i, " ".join(t)))
+    path = str(tmp_path / "docs")
+    spark.createDataFrame(rows, "doc_id long, text string").write.parquet(path)
+    docs = spark.read.parquet(path)
+    mh, ng = MinHashDedup(shingle_k=3), NGramJaccardDedup(shingle_k=3)
+    sh = ng.shingle_relation(docs)
+    cands = pin(mh.candidate_pairs(mh.signatures(docs, shingle_rows=sh)
+                                   .where(F.col("m0") != 2147483647))
+                .select("a", "b"), eager=True)
+    sc = spark.sparkContext
+    group = f"verify-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "verify_pairs job count")
+    try:
+        verified = ng.verify_pairs(docs, cands, shingles=sh)
+        got = verified.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+    final = verified._jdf.queryExecution().executedPlan().toString() \
+        .split("== Initial Plan ==")[0]
+    assert re.search(r"ReusedExchange \[[^\]]*\], BroadcastExchange", final)
+    assert got and all(r.inter > 0 for r in got)

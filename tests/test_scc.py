@@ -162,3 +162,21 @@ def test_shadowed_scc_chain(spark):
         want[k] = k
         want[k + 1] = k
     assert got == want
+
+
+def test_releases_its_pins(spark):
+    """After a call the only new persistent RDD is the result's own pin:
+    the edge and node pins and every refinement pass's pins are released,
+    and the result still reads correctly. A 21-node cycle, a 2-cycle and
+    one edge between them need several refinement passes."""
+    def persistent():
+        return {int(k) for k in spark._jsc.getPersistentRDDs().keySet()}
+
+    edges = [(i, (i + 1) % 21) for i in range(21)] + [(30, 31), (31, 30),
+                                                      (20, 30)]
+    df = spark.createDataFrame(edges, "src long, dst long")
+    before = persistent()
+    comp = strongly_connected_components(df)
+    assert len(persistent() - before) <= 1
+    got = {r.node: r.component for r in comp.collect()}
+    assert got == {**{i: 0 for i in range(21)}, 30: 30, 31: 30}
