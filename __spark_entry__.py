@@ -4,7 +4,8 @@
 (reference: README.md:56-104 — retrieval → filter → features → scoring →
 sampling) on sf0.001. ``queries()`` exposes every implemented operator from
 SURVEY.md §2 plus the LLM-data-pipeline operators; ``oracle_sql()`` gives the
-DuckDB twin for each SQL-expressible query.
+DuckDB twin for each SQL-expressible query. Both are derived from ``LANES``,
+the one ordered lane table at the end of this file.
 
 Portability rules that make the oracles exact (see systems_spark/functions/
 hashing.py): all randomness is a portable md5 hash; float aggregation goes
@@ -15,9 +16,11 @@ transcendental math are rounded before output.
 
 from __future__ import annotations
 
+import hashlib
 import os
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -102,6 +105,28 @@ def _dsum(expr):
     engines (DuckDB's wide-decimal→double cast is not correctly rounded).
     Source data has ≤4 decimal places, so the round is value-preserving."""
     return F.round(F.sum(expr), 4).cast("double")
+
+
+def _scratch_dir(spark: SparkSession, tag: str, sf_dir: str,
+                 root: str = "systems_spark_cdc") -> str:
+    """Write-once scratch directory of a stateful lane, one per (session,
+    tag, sf_dir): ``/tmp/<root>/<md5(applicationId:tag:sf_dir)[:12]>``."""
+    key = hashlib.md5(
+        f"{spark.sparkContext.applicationId}:{tag}:{sf_dir}".encode()
+    ).hexdigest()[:12]
+    return os.path.join("/tmp", root, key)
+
+
+def _status_totals(orders: DataFrame,
+                   price: str = "o_totalprice") -> DataFrame:
+    """Per-o_orderstatus order count, exact price total and key checksum:
+    the graded aggregate of the orders CDC lanes."""
+    return (orders.groupBy("o_orderstatus")
+            .agg(F.count(F.lit(1)).alias("n_orders"),
+                 F.round(F.sum(F.col(price).cast("decimal(18,2)")),
+                         2).cast("double").alias("total_price"),
+                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
+                 .cast("bigint").alias("key_checksum")))
 
 
 # ===========================================================================
@@ -1114,12 +1139,7 @@ def q_orders_cdc_apply(spark, sf_dir):
     snapshot = orders.where(F.col("o_orderkey") % 8 != 0) \
         .select("o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
     merged = apply_cdc(snapshot, _cdc_changes(spark, sf_dir), "o_orderkey")
-    return (merged.groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(merged)
 
 
 def _sql_orders_cdc_apply() -> str:
@@ -1333,14 +1353,9 @@ def q_cdc_partitioned(spark, sf_dir):
     session (the table's own manifest idempotence); the oracle is the
     plain global last-op-per-key merge, so equality holds only if the
     bucket-stitched snapshot reproduces the full MERGE state."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcp:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcp", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcp",
                                 num_buckets=16)
@@ -1351,13 +1366,7 @@ def q_cdc_partitioned(spark, sf_dir):
     changes = _cdc_changes(spark, sf_dir)
     table(changes.where(F.col("seq") == 1), 0)
     table(changes.where(F.col("seq") == 2), 1)
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 def q_cdc_auto_compact(spark, sf_dir):
@@ -1371,14 +1380,9 @@ def q_cdc_auto_compact(spark, sf_dir):
     didn't fire would still pass a value check). Oracle = the plain
     global last-op-per-key merge: equality holds only if the staged
     deltas, the fold, and the fencing semantics compose exactly."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcac:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcac", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcac",
                                 num_buckets=16,
@@ -1394,13 +1398,7 @@ def q_cdc_auto_compact(spark, sf_dir):
     if table._latest_manifest(spark).get("pending"):
         raise AssertionError(
             "auto_compact_pending=2 left pending deltas after epoch 2")
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 def q_cdc_compact_files(spark, sf_dir):
@@ -1416,14 +1414,9 @@ def q_cdc_compact_files(spark, sf_dir):
     serves the merged view. Oracle = the plain global merge: equality
     holds only if the relayout moved no row, dropped no tombstone, and
     the post-compaction merge composed exactly."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdccf:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdccf", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdccf",
                                 num_buckets=16)
@@ -1443,13 +1436,7 @@ def q_cdc_compact_files(spark, sf_dir):
     changes = _cdc_changes(spark, sf_dir)
     table(changes.where(F.col("seq") == 1), 0)
     table(changes.where(F.col("seq") == 2), 1)
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 def q_cdc_multiwriter(spark, sf_dir):
@@ -1466,14 +1453,9 @@ def q_cdc_multiwriter(spark, sf_dir):
     lost or clobbered the other's committed changes.
     tests/test_cdc_concurrency.py pins the race itself (forced CAS
     loss → rebase; staging cleanup; first-writer-wins primitive)."""
-    import hashlib
-
     from systems_spark.streaming import CdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcmw:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcmw", sf_dir)
     path = os.path.join(base, "t")
     wa = CdcTable(path, key_cols="o_orderkey", app_id="writer-a")
     wb = CdcTable(path, key_cols="o_orderkey", app_id="writer-b")
@@ -1488,13 +1470,7 @@ def q_cdc_multiwriter(spark, sf_dir):
     # commits interleave in ONE shared version chain
     wa(changes.where(F.col("seq") == 1), 0)
     wb(changes.where(F.col("seq") == 2), 0)
-    return (wb.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(wb.current(spark))
 
 
 def q_cdc_merge_on_read(spark, sf_dir):
@@ -1509,14 +1485,9 @@ def q_cdc_merge_on_read(spark, sf_dir):
     Oracle = the plain global last-op-per-key merge, so equality holds
     only if delta-commit, reader-side fold, and the fold-to-buckets
     compaction all reproduce the write-path merge exactly."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcmor:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcmor", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcmor",
                                 num_buckets=16,
@@ -1530,13 +1501,7 @@ def q_cdc_merge_on_read(spark, sf_dir):
     table(changes.where(F.col("seq") == 2), 1)
     if table._latest_manifest(spark).get("pending"):
         table.compact_deltas(spark)
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 def q_cdc_dml(spark, sf_dir):
@@ -1553,14 +1518,9 @@ def q_cdc_dml(spark, sf_dir):
     filter) over the same seed, so equality holds only if postimage
     construction, auto-tombstoning, and the keyed merge reproduce
     sequential UPDATE-then-DELETE semantics exactly."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcdml:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcdml", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcdml",
                                 num_buckets=16)
@@ -1572,13 +1532,7 @@ def q_cdc_dml(spark, sf_dir):
         spark, "o_orderstatus = 'F' AND o_totalprice < 100000",
         {"o_totalprice": "o_totalprice + 1"}, seq=1, batch_id=0)
     table.delete_where(spark, "o_custkey % 10 = 0", seq=2, batch_id=1)
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 def _sql_cdc_dml() -> str:
@@ -1616,15 +1570,10 @@ def q_cdc_mat_view(spark, sf_dir):
     the same global last-op-per-key merge + GROUP BY every CDC lane
     grades against — equality holds only if differential maintenance
     reproduces the full aggregate exactly."""
-    import hashlib
-
     from systems_spark.streaming import (MaterializedAggView,
                                          PartitionedCdcTable)
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcmv:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcmv", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcmv",
                                 num_buckets=16)
@@ -1663,15 +1612,10 @@ def q_cdc_join_view(spark, sf_dir):
     equality holds only if differential maintenance under the dim
     join (including FK-carrying postimage/preimage pairs) reproduces
     the full join-aggregate exactly."""
-    import hashlib
-
     from systems_spark.streaming import (MaterializedAggView,
                                          PartitionedCdcTable)
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcjv:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcjv", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcjv",
                                 num_buckets=16)
@@ -1746,15 +1690,10 @@ def q_streaming_change_feed(spark, sf_dir):
     verbatim, so the oracle is the change-set DEFINITION itself,
     aggregated per op — equality holds only if the source delivered
     exactly the committed deltas, once each."""
-    import hashlib
-
     from systems_spark.streaming import (CdcChangeFeedDataSource,
                                          PartitionedCdcTable)
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcfeed:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcfeed", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcfeed",
                                 num_buckets=16,
@@ -1823,15 +1762,10 @@ def q_cdc_replication(spark, sf_dir):
     map). The lane reads the REPLICA, so the oracle (the plain global
     merge) holds only if the feed delivered every change exactly once
     AND the replica's fenced merge reproduced the source state."""
-    import hashlib
-
     from systems_spark.streaming import (CdcChangeFeedDataSource,
                                          CdcTable, PartitionedCdcTable)
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcrepl:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcrepl", sf_dir)
     src = PartitionedCdcTable(os.path.join(base, "src"),
                               key_cols="o_orderkey", app_id="cdcrsrc",
                               num_buckets=16,
@@ -1856,13 +1790,7 @@ def q_cdc_replication(spark, sf_dir):
          .trigger(availableNow=True).start())
     if not q.awaitTermination(300):
         q.stop()
-    return (replica.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(replica.current(spark))
 
 
 def q_cdc_optimize(spark, sf_dir):
@@ -1876,15 +1804,10 @@ def q_cdc_optimize(spark, sf_dir):
     the plain global merge + filter aggregate, so equality proves the
     optimize preserved every merged row, the fence survived, and no
     overlapping file was wrongly skipped."""
-    import hashlib
-
     from systems_spark.operators.zorder import StatsIndex
     from systems_spark.streaming import CdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcopt:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcopt", sf_dir)
     table = CdcTable(os.path.join(base, "t"), key_cols="o_orderkey",
                      app_id="cdcopt")
     orders = _t(spark, sf_dir, "orders")
@@ -1900,16 +1823,9 @@ def q_cdc_optimize(spark, sf_dir):
     preds = {"o_custkey": (None, 700), "o_orderkey": (None, 30000)}
     pruned = StatsIndex().read(spark, table.data_path(spark),
                                ["o_custkey", "o_orderkey"], preds)
-    return (pruned
-            .where(~F.col(CdcTable.DELETED)
-                   & (F.col("o_custkey") <= 700)
-                   & (F.col("o_orderkey") <= 30000))
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(pruned.where(
+        ~F.col(CdcTable.DELETED) & (F.col("o_custkey") <= 700)
+        & (F.col("o_orderkey") <= 30000)))
 
 
 def _sql_cdc_optimize() -> str:
@@ -1967,6 +1883,24 @@ def q_orders_zorder(spark, sf_dir):
                  .alias("key_checksum")))
 
 
+def _zorder_orders(spark, sf_dir) -> str:
+    """Orders rewritten once per session as a 16-file z-ordered layout on
+    (o_custkey, o_orderkey); returns its path. Shared by
+    `orders_pruned_read` and `orders_stats_agg`."""
+    from systems_spark.operators.zorder import zorder_layout
+
+    path = os.path.join(
+        _scratch_dir(spark, "zread", sf_dir, "systems_spark_zorder"),
+        "orders")
+    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+        orders = _t(spark, sf_dir, "orders").select(
+            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
+        (zorder_layout(orders, ["o_custkey", "o_orderkey"],
+                       [(1, 150000), (1, 6000000)], bits=16, partitions=16)
+         .drop("_zorder").write.mode("overwrite").parquet(path))
+    return path
+
+
 def q_orders_pruned_read(spark, sf_dir):
     """The data-skipping READ path end-to-end (VERDICT r9 item 5) —
     the part a 100 TB scan actually leans on: orders rewritten once per
@@ -1981,32 +1915,14 @@ def q_orders_pruned_read(spark, sf_dir):
     aggregate, and equality holds only if no overlapping file was
     wrongly skipped. tests/test_stats_index.py asserts the other half
     (files-read < files-total on this exact layout shape)."""
-    import hashlib
+    from systems_spark.operators.zorder import StatsIndex
 
-    from systems_spark.operators.zorder import StatsIndex, zorder_layout
-
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:zread:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join("/tmp", "systems_spark_zorder", key, "orders")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        (zorder_layout(orders, ["o_custkey", "o_orderkey"],
-                       [(1, 150000), (1, 6000000)], bits=16, partitions=16)
-         .drop("_zorder").write.mode("overwrite").parquet(path))
+    path = _zorder_orders(spark, sf_dir)
     preds = {"o_custkey": (None, 700), "o_orderkey": (None, 30000)}
     pruned = StatsIndex().read(spark, path, ["o_custkey", "o_orderkey"],
                                preds)
-    return (pruned
-            .where((F.col("o_custkey") <= 700)
-                   & (F.col("o_orderkey") <= 30000))
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(pruned.where(
+        (F.col("o_custkey") <= 700) & (F.col("o_orderkey") <= 30000)))
 
 
 _SQL_ORDERS_PRUNED_READ = """
@@ -2034,14 +1950,11 @@ def q_orders_point_lookup(spark, sf_dir):
     filter makes it exact, so the oracle is the plain full-scan IN
     lookup; tests/test_bloom_skip.py asserts the other half (files
     read < files total on exactly this layout shape)."""
-    import hashlib
-
     from systems_spark.operators.zorder import StatsIndex
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:bloomread:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join("/tmp", "systems_spark_bloom", key, "orders")
+    path = os.path.join(
+        _scratch_dir(spark, "bloomread", sf_dir, "systems_spark_bloom"),
+        "orders")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (_t(spark, sf_dir, "orders")
          .select("o_orderkey", "o_custkey", "o_orderstatus",
@@ -2103,20 +2016,9 @@ def q_orders_stats_agg(spark, sf_dir):
     Σrows − Σnulls. Shares the z-ordered layout scratch with
     `orders_pruned_read`; the oracle is the plain full-scan aggregate,
     so equality holds only if the stats are exact and complete."""
-    import hashlib
+    from systems_spark.operators.zorder import StatsIndex
 
-    from systems_spark.operators.zorder import StatsIndex, zorder_layout
-
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:zread:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join("/tmp", "systems_spark_zorder", key, "orders")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        orders = _t(spark, sf_dir, "orders").select(
-            "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice")
-        (zorder_layout(orders, ["o_custkey", "o_orderkey"],
-                       [(1, 150000), (1, 6000000)], bits=16, partitions=16)
-         .drop("_zorder").write.mode("overwrite").parquet(path))
+    path = _zorder_orders(spark, sf_dir)
     agg = StatsIndex().aggregate(spark, path,
                                  ["o_custkey", "o_totalprice"])
     return agg.select(
@@ -2141,14 +2043,9 @@ def q_cdc_clone(spark, sf_dir):
     oracle is the plain global merge of epochs 1+2 — equality holds
     only if the clone served the source's data in place correctly AND
     the source's post-clone writes never leaked in."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcclone:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcclone", sf_dir)
     src = PartitionedCdcTable(os.path.join(base, "src"),
                               key_cols="o_orderkey", app_id="cdccls",
                               num_buckets=16,
@@ -2171,13 +2068,7 @@ def q_cdc_clone(spark, sf_dir):
     src(changes.where(F.col("seq") == 2)
         .withColumn("o_totalprice", F.col("o_totalprice") * 5)
         .withColumn("seq", F.lit(3)), 1)
-    return (clone.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(clone.current(spark))
 
 
 def _cdc_lookup_table(spark, sf_dir):
@@ -2187,14 +2078,9 @@ def _cdc_lookup_table(spark, sf_dir):
     must fold). Idempotent per (applicationId, sf_dir): initialize
     no-ops on an initialized table and the epochs replay as no-ops via
     the txn map."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdclkp:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdclkp", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdclkp",
                                 num_buckets=16,
@@ -2292,14 +2178,9 @@ def q_cdc_lookup_composite(spark, sf_dir):
     buckets and folds only their pending deltas. Probes cover present,
     updated, deleted and absent (custkey, status) pairs. Oracle = the
     globally merged view filtered to the probed pairs."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdclkc:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdclkc", sf_dir)
     table = PartitionedCdcTable(
         os.path.join(base, "t"),
         key_cols=["o_custkey", "o_orderstatus"], app_id="cdclkc",
@@ -2482,14 +2363,9 @@ def q_cdc_adopt(spark, sf_dir):
     the reference serves externally-produced feature tables it did not
     write (merlin/systems/dag/ops/feast.py); here that adoption is
     transactional."""
-    import hashlib
-
     from systems_spark.streaming import CdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcadopt:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcadopt", sf_dir)
     t = CdcTable(os.path.join(base, "t"), key_cols="o_orderkey",
                  app_id="cdcad")
     t.adopt(spark, os.path.join(sf_dir, "orders.parquet"))
@@ -2511,12 +2387,7 @@ def q_cdc_adopt(spark, sf_dir):
           .withColumn("seq", F.lit(2).cast("long"))
           .withColumn("op", F.lit("update")))
     t(c1.unionByName(c2), 0)
-    return (t.current(spark).groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(t.current(spark))
 
 
 def _sql_cdc_adopt() -> str:
@@ -2616,14 +2487,9 @@ def _cdc_docs_table(spark, sf_dir):
     %14==0 docs over their own tombstones with a fresh marker text —
     last-op-wins across epochs, deletes, and token-set changes a
     text-skipping index must track."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcdoc:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcdoc", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="doc_id", app_id="cdcdoc",
                                 num_buckets=16,
@@ -2715,14 +2581,11 @@ def q_documents_token_search(spark, sf_dir):
     regex split — equality holds only if no file holding a match was
     skipped. The index persists as standing state under the layout
     fingerprint, like every skipping index here."""
-    import hashlib
-
     from systems_spark.operators.zorder import StatsIndex
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:toksearch:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join("/tmp", "systems_spark_zorder", key, "documents")
+    path = os.path.join(
+        _scratch_dir(spark, "toksearch", sf_dir, "systems_spark_zorder"),
+        "documents")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
         (_t(spark, sf_dir, "documents")
          .repartition(16, "doc_id")
@@ -2820,14 +2683,9 @@ def q_cdc_change_feed(spark, sf_dir):
     one NULL-safe key join, never a replay of the intervening merges.
     Oracle = the same classification derived directly from the change
     batch definition against the seed key set."""
-    import hashlib
-
     from systems_spark.streaming import CdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcf:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcf", sf_dir)
     table = CdcTable(os.path.join(base, "t"), key_cols="o_orderkey",
                      app_id="cdcf")
     orders = _t(spark, sf_dir, "orders")
@@ -2901,6 +2759,13 @@ def q_kmeans_embeddings(spark, sf_dir):
     return KMeansMicros(k=8, iters=2).fit(emb).centroid_table()
 
 
+def _sql_kmeans_embeddings() -> str:
+    from systems_spark.operators.kmeans import kmeans_oracle_sql
+
+    return kmeans_oracle_sql("embeddings", "vec_id", "embedding",
+                             k=8, iters=2)
+
+
 def q_streaming_cdc(spark, sf_dir):
     """Streaming CDC MERGE, driver-graded — the EIGHTH real
     StreamingQuery: the change feed replays as a bounded file stream
@@ -2913,15 +2778,11 @@ def q_streaming_cdc(spark, sf_dir):
     micro-batch order AND of replay, so the oracle is the plain global
     last-op-per-key merge (the orders_cdc_apply construction) — equality
     holds only if no epoch ever double-applied."""
-    import hashlib
     import shutil
 
     from systems_spark.streaming import CdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdc:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdc", sf_dir)
     table = CdcTable(os.path.join(base, "t"), key_cols="o_orderkey",
                      app_id="cdc")
     orders = _t(spark, sf_dir, "orders")
@@ -2954,13 +2815,7 @@ def q_streaming_cdc(spark, sf_dir):
         shutil.rmtree(os.path.join(base, "ckpt2"), ignore_errors=True)
         run("ckpt2")  # fresh checkpoint: full re-delivery, must all no-op
 
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 def q_categorify_incremental(spark, sf_dir):
@@ -3613,14 +3468,9 @@ def q_cdc_merge_into(spark, sf_dir):
     the same three-way split expressed with plain joins, so equality
     holds only if clause order (delete first), the matched gate, and
     the unmatched insert all compiled exactly."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcmrg:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcmrg", sf_dir)
     seed = PartitionedCdcTable(os.path.join(base, "t"),
                                key_cols="o_orderkey", app_id="cdcmrg",
                                num_buckets=16,
@@ -3651,13 +3501,7 @@ def q_cdc_merge_into(spark, sf_dir):
             "o_orderstatus": "s.o_orderstatus",
             "o_totalprice": "s.o_totalprice"},
         batch_id=0)
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 _SQL_CDC_MERGE_INTO = """
@@ -3698,14 +3542,9 @@ def q_cdc_rename(spark, sf_dir):
     of the rename (physical names constant on disk). Oracle = the
     plain global merge of both epochs — equality holds only if the
     logical→physical map routed every read and write exactly."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcren:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcren", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcren",
                                 num_buckets=16,
@@ -3720,13 +3559,7 @@ def q_cdc_rename(spark, sf_dir):
         table.rename_column(spark, "o_totalprice", "o_price")
     table(changes.where(F.col("seq") == 2)
           .withColumnRenamed("o_totalprice", "o_price"), 1)
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_price").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark), "o_price")
 
 
 def q_cdc_drop(spark, sf_dir):
@@ -3740,14 +3573,9 @@ def q_cdc_drop(spark, sf_dir):
     Oracle = the plain global merge projected without o_custkey —
     equality holds only if the dead physical slot NULL-fills through
     merges without disturbing any live value."""
-    import hashlib
-
     from systems_spark.streaming import PartitionedCdcTable
 
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:cdcdrop:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_cdc", key)
+    base = _scratch_dir(spark, "cdcdrop", sf_dir)
     table = PartitionedCdcTable(os.path.join(base, "t"),
                                 key_cols="o_orderkey", app_id="cdcdrop",
                                 num_buckets=16,
@@ -3761,13 +3589,7 @@ def q_cdc_drop(spark, sf_dir):
     if "o_custkey" in table.current(spark).columns:
         table.drop_column(spark, "o_custkey")
     table(changes.where(F.col("seq") == 2).drop("o_custkey"), 1)
-    return (table.current(spark)
-            .groupBy("o_orderstatus")
-            .agg(F.count(F.lit(1)).alias("n_orders"),
-                 F.round(F.sum(F.col("o_totalprice").cast("decimal(18,2)")),
-                         2).cast("double").alias("total_price"),
-                 F.sum(F.col("o_orderkey").cast("decimal(38,0)"))
-                 .cast("bigint").alias("key_checksum")))
+    return _status_totals(table.current(spark))
 
 
 def q_media_probe(spark, sf_dir):
@@ -3972,17 +3794,13 @@ def q_streaming_exactly_once(spark, sf_dir):
     plain batch aggregate over events: equality holds ONLY if the
     replay landed nothing twice (a non-idempotent sink doubles every
     count)."""
-    import hashlib
     import shutil
 
     from systems_spark.sources import read_parquet
     from systems_spark.streaming import IdempotentParquetSink
 
     schema = read_parquet(spark, f"{sf_dir}/events.parquet").schema
-    key = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:xo:{sf_dir}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join("/tmp", "systems_spark_xo", key)
+    base = _scratch_dir(spark, "xo", sf_dir, "systems_spark_xo")
     sink = IdempotentParquetSink(os.path.join(base, "out"), app_id="xo")
 
     def run(ckpt):
@@ -8582,318 +8400,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return q_four_stage_recs(spark, SF_SMOKE)
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """Ordered so the HIGHEST-VALUE 50 queries come first: the driver
-    grades exactly the first 50 declared entries. The first-50 names are
-    kept stable round-over-round so CORRECTNESS/BENCH diffs stay
-    meaningful (one sanctioned swap per round: r3 dedup_embedding →
-    frame_sample per VERDICT r2 item 7; r4 dedup_ngram → dedup_clusters
-    per VERDICT r3 item 3; r5 pivot_orders → curation_pipeline per
-    VERDICT r4 item 1 — the flagship seven-stage LLM-curation
-    composition replaces a 5-row relational pivot). Positions 51+ are
-    previously graded demoted entries plus later additions, all still
-    oracle-checked by test_oracle_parity."""
-    return {
-        # core relational (20)
-        "pricing_summary": q_pricing_summary,
-        "shipping_priority": q_shipping_priority,
-        "region_revenue": q_region_revenue,
-        "top_parts_per_brand": q_top_parts_per_brand,
-        "user_activity": q_user_activity,
-        "asof_view_before_purchase": q_asof_view_before_purchase,
-        "customer_distribution": q_customer_distribution,
-        "customer_set_ops": q_customer_set_ops,
-        "running_order_totals": q_running_order_totals,
-        # r5 sanctioned swap (VERDICT r4 item 1): curation_pipeline — the
-        # end-to-end seven-operator LLM-curation plan with a single
-        # CTE-chain oracle — takes pivot_orders' graded slot
-        "curation_pipeline": q_curation_pipeline,
-        # r10 sanctioned swap (VERDICT r9 item 2): streaming_cdc — the
-        # exactly-once streaming MERGE (eighth StreamingQuery: file-stream
-        # replay through CdcTable with fenced idempotent epochs, run twice
-        # over a fresh checkpoint to prove crash-replay no-ops) — takes
-        # top_supplier's slot (a 1-row max lookup, demoted to 51+ with its
-        # oracle check intact).
-        "streaming_cdc": q_streaming_cdc,
-        # r11 sanctioned swap (VERDICT r10 item 1): cdc_partitioned — the
-        # touched-bucket-pruned MERGE on the partitioned table layout, the
-        # lake-scale write path (only dirty buckets rewrite) — takes
-        # idle_rich_customers' slot (a 0-row anti-join that grades
-        # nothing; demoted to 51+ with its oracle check intact).
-        "cdc_partitioned": q_cdc_partitioned,
-        "order_rank_stats_scalable": q_order_rank_stats_scalable,
-        "stratified_sample": q_stratified_sample,
-        # r12 sanctioned swap (VERDICT r11 item 1): bm25_incremental —
-        # the mergeable standing-state lexical index (StateStore-backed
-        # BM25 absorbing a second corpus batch, graded against the
-        # full-corpus scratch-build SQL twin) — takes train_test_split's
-        # slot (a 0.3 s hash split that grades almost nothing; demoted
-        # to 51+ with its oracle check intact).
-        "bm25_incremental": q_bm25_incremental,
-        "order_baskets": q_order_baskets,
-        "part_cooccurrence": q_part_cooccurrence,
-        "order_streaks": q_order_streaks,
-        "revenue_grouping_sets": q_revenue_grouping_sets,
-        "lateral_recent_orders": q_lateral_recent_orders,
-        # reference operator surface (18)
-        "filter_candidates": q_filter_candidates,
-        "softmax_sampling": q_softmax_sampling,
-        "unroll_features": q_unroll_features,
-        "query_feature_table": q_query_feature_table,
-        "embedding_lookup": q_embedding_lookup,
-        "padding": q_padding,
-        "categorify": q_categorify,
-        "ann_topk": q_ann_topk,
-        "ann_ivf": q_ann_ivf,
-        "ann_lsh": q_ann_lsh,
-        "sessionize": q_sessionize,
-        # r8 sanctioned swap (VERDICT r7 item 3): dedup_minhash_incremental
-        # — the corpus-growth dedup semantic a 100 TB pipeline runs daily
-        # (standing signature state + delta-only band joins + touched-
-        # cluster folding; oracle = full-recompute components, bit-exact)
-        # — takes value_banded's slot (a 10-row banding projection whose
-        # machinery stays graded via value_bins' family at 51+).
-        "dedup_minhash_incremental": q_dedup_minhash_incremental,
-        # r7 sanctioned swap (VERDICT r6 item 2): item_cf_recs — the
-        # count-based twin of the reference's full retrieval semantic
-        # (QueryFaiss -> FilterCandidates -> top-k, README.md:56-104),
-        # oracle-green since mid-r6 — takes balance_deciles_scalable's
-        # slot; the GlobalRank machinery stays graded twice via
-        # value_quantiles_scalable + order_rank_stats_scalable, and
-        # balance_deciles keeps its oracle check at 51+.
-        "item_cf_recs": q_item_cf_recs,
-        "value_quantiles_scalable": q_value_quantiles_scalable,
-        "events_hourly": q_events_hourly,
-        "top_ngrams": q_top_ngrams,
-        "dedup_verified": q_dedup_verified,
-        "four_stage_recs": q_four_stage_recs,
-        # LLM-data pipeline (9) — r4: one sanctioned swap per VERDICT r3
-        # item 3: dedup_clusters (distributed connected-components cluster
-        # resolution, the production dedup stage) promoted into the graded
-        # window; dedup_ngram (the documented non-scale exact-Jaccard
-        # ground-truth anchor) demoted to 51+ where its oracle role
-        # continues via test_oracle_parity. r3's swap (dedup_embedding out,
-        # frame_sample in) unchanged.
-        "dedup_exact": q_dedup_exact,
-        "dedup_minhash": q_dedup_minhash,
-        "dedup_simhash": q_dedup_simhash,
-        "dedup_clusters": q_dedup_clusters,
-        # r9 sanctioned swap (VERDICT r8 item 3): the CDC MERGE is the
-        # lakehouse primitive a 100 TB pipeline runs daily — promoted
-        # into frame_sample's graded slot (multimodal machinery stays
-        # graded via multimodal_features; frame_sample now at 51+)
-        "orders_cdc_apply": q_orders_cdc_apply,
-        "dedup_embedding_lsh": q_dedup_embedding_lsh,
-        # r6 sanctioned swap (VERDICT r5 item 3): substring_dedup (exact
-        # substring dedup, Lee et al. ACL 2022 — bit-exact at sf0.001 AND
-        # sf0.01 since r5) takes minhash_signatures' slot; the signatures
-        # lane is subsumed by the graded dedup_minhash, which consumes
-        # the same signatures, and keeps its oracle check at 51+.
-        "substring_dedup": q_substring_dedup,
-        "text_stats": q_text_stats,
-        "multimodal_features": q_multimodal_features,
-        # model ops — position 48-50 (all three VALUES/SQL-oracled as of r3)
-        "ann_pq": q_ann_pq,
-        "implicit_recommend": q_implicit_recommend,
-        "predict_forest": q_predict_forest,
-        # --- position 51+: demoted duplicates, all graded green in a
-        # previous round (dedup_embedding exact: r2; dedup_ngram: r3) ---
-        "dedup_embedding": q_dedup_embedding,
-        "dedup_ngram": q_dedup_ngram,
-        # --- position 52+: r3 capability (graded locally via
-        # test_oracle_parity; appended after 50 to keep the driver's
-        # graded window name-stable per VERDICT r2 item 10) ---
-        "streaming_hourly": q_streaming_hourly,
-        "streaming_exactly_once": q_streaming_exactly_once,
-        "corpus_curation": q_corpus_curation,
-        "streaming_ingest_dedup": q_streaming_ingest_dedup,
-        "profile_table": q_profile_table,
-        "grouped_rank": q_grouped_rank,
-        "events_rollup": q_events_rollup,
-        "cube_revenue": q_cube_revenue,
-        "monthly_revenue": q_monthly_revenue,
-        "small_quantity_parts": q_small_quantity_parts,
-        "order_priority_check": q_order_priority_check,
-        "latest_order_per_customer": q_latest_order_per_customer,
-        "balance_deciles": q_balance_deciles,
-        "value_quantiles": q_value_quantiles,
-        "order_rank_stats": q_order_rank_stats,
-        "streaming_sessions": q_streaming_sessions,
-        "profile_drift": q_profile_drift,
-        "dedup_clusters_incremental": q_dedup_clusters_incremental,
-        # r8: value_banded demoted here (its graded slot went to
-        # dedup_minhash_incremental per VERDICT r7 item 3); oracle check
-        # continues via test_oracle_parity
-        "value_banded": q_value_banded,
-        "dedup_embedding_incremental": q_dedup_embedding_incremental,
-        "dedup_simhash_incremental": q_dedup_simhash_incremental,
-        # --- r8 incremental family extensions (state.py StateStore):
-        # lexical index, IVF inverted lists, vocabulary growth ---
-        # r12: train_test_split demoted here (its graded slot went to
-        # bm25_incremental per VERDICT r11 item 1); oracle check continues
-        "train_test_split": q_train_test_split,
-        "ann_ivf_incremental": q_ann_ivf_incremental,
-        "categorify_incremental": q_categorify_incremental,
-        "frame_sample": q_frame_sample,
-        # r10: top_supplier demoted here (its graded slot went to
-        # streaming_cdc per VERDICT r9 item 2); oracle check continues
-        # via test_oracle_parity
-        "top_supplier": q_top_supplier,
-        # r11: idle_rich_customers demoted here (its graded slot went to
-        # cdc_partitioned per VERDICT r10 item 1); oracle check continues
-        # via test_oracle_parity
-        "idle_rich_customers": q_idle_rich_customers,
-        "cdc_multiwriter": q_cdc_multiwriter,
-        "cdc_merge_on_read": q_cdc_merge_on_read,
-        "cdc_dml": q_cdc_dml,
-        "cdc_mat_view": q_cdc_mat_view,
-        "cdc_join_view": q_cdc_join_view,
-        "streaming_change_feed": q_streaming_change_feed,
-        "cdc_replication": q_cdc_replication,
-        "orders_zorder": q_orders_zorder,
-        "orders_pruned_read": q_orders_pruned_read,
-        "orders_point_lookup": q_orders_point_lookup,
-        "orders_stats_agg": q_orders_stats_agg,
-        "documents_token_search": q_documents_token_search,
-        "cdc_clone": q_cdc_clone,
-        "cdc_lookup": q_cdc_lookup,
-        # r12: composite-key serving read + skipping indexes over LIVE
-        # CDC tables (VERDICT r11 items 4 and 5)
-        "cdc_lookup_composite": q_cdc_lookup_composite,
-        "cdc_stats_agg": q_cdc_stats_agg,
-        "cdc_token_search": q_cdc_token_search,
-        "cdc_auto_compact": q_cdc_auto_compact,
-        "cdc_bloom_lookup": q_cdc_bloom_lookup,
-        "cdc_range_read": q_cdc_range_read,
-        # r12 late: CONVERT TO TABLE — zero-rewrite in-place adoption
-        "cdc_adopt": q_cdc_adopt,
-        # r12 late: bin-packing file compaction (plain OPTIMIZE)
-        "cdc_compact_files": q_cdc_compact_files,
-        "media_probe": q_media_probe,
-        "cdc_merge_into": q_cdc_merge_into,
-        "cdc_rename": q_cdc_rename,
-        "cdc_drop": q_cdc_drop,
-        "cdc_optimize": q_cdc_optimize,
-        "dedup_forget": q_dedup_forget,
-        "cdc_change_feed": q_cdc_change_feed,
-        "kmeans_embeddings": q_kmeans_embeddings,
-        "part_scc": q_part_scc,
-        "events_resampled": q_events_resampled,
-        "feature_scores": q_feature_scores,
-        "bpe_train": q_bpe_train,
-        "bpe_tokenize": q_bpe_tokenize,
-        "bpe_train_incremental": q_bpe_train_incremental,
-        # --- r4 session-3 corpus-curation lanes (locally oracle-checked
-        # via test_oracle_parity; appended after 50 per the name-stable
-        # window rule) ---
-        "pii_redact": q_pii_redact,
-        "k_anonymity": q_k_anonymity,
-        "order_survival": q_order_survival,
-        "embedding_gram": q_embedding_gram,
-        "embedding_gram_incremental": q_embedding_gram_incremental,
-        "embedding_pc1": q_embedding_pc1,
-        "decontaminate": q_decontaminate,
-        "repetition_stats": q_repetition_stats,
-        "mixture_sample": q_mixture_sample,
-        "pack_sequences": q_pack_sequences,
-        "boilerplate_removal": q_boilerplate_removal,
-        # pivot_orders: graded green r1-r4, demoted 51+ in the r5 swap;
-        # its oracle check continues via test_oracle_parity
-        "pivot_orders": q_pivot_orders,
-        # --- r4 session-4 additions ---
-        "semantic_dedup": q_semantic_dedup,
-        "quality_classifier": q_quality_classifier,
-        "tokenize_encode": q_tokenize_encode,
-        "lm_perplexity": q_lm_perplexity,
-        "chunk_documents": q_chunk_documents,
-        "ann_recall": q_ann_recall,
-        "dsir_resample": q_dsir_resample,
-        "source_overlap": q_source_overlap,
-        "pagerank_parts": q_pagerank_parts,
-        "part_triangles": q_part_triangles,
-        "bm25_search": q_bm25_search,
-        "hybrid_search": q_hybrid_search,
-        "target_encode": q_target_encode,
-        "negative_samples": q_negative_samples,
-        "kcore_parts": q_kcore_parts,
-        # --- r5 additions (51+, locally oracle-checked) ---
-        # minhash_signatures: graded green r4-r5, demoted 51+ in the r6
-        # swap; its oracle check continues via test_oracle_parity
-        "minhash_signatures": q_minhash_signatures,
-        "part_communities": q_part_communities,
-        "ppl_buckets": q_ppl_buckets,
-        "pagerank_weighted": q_pagerank_weighted,
-        "funnel_conversion": q_funnel_conversion,
-        "user_retention": q_user_retention,
-        "winnow_overlap": q_winnow_overlap,
-        "trailing_features": q_trailing_features,
-        "user_sequences": q_user_sequences,
-        # --- r6 additions (51+, locally oracle-checked) ---
-        "winnow_families": q_winnow_families,
-        "winnow_incremental": q_winnow_incremental,
-        "hll_user_counts": q_hll_user_counts,
-        "event_transitions": q_event_transitions,
-        "last_touch_attribution": q_last_touch_attribution,
-        "ushape_attribution": q_ushape_attribution,
-        "next_item_examples": q_next_item_examples,
-        "cms_part_counts": q_cms_part_counts,
-        "rfm_features": q_rfm_features,
-        # sixth real StreamingQuery; same oracle as the batch hll lane
-        "streaming_hll_users": q_streaming_hll_users,
-        "session_stats": q_session_stats,
-        "temporal_split": q_temporal_split,
-        "ppr_parts": q_ppr_parts,
-        "association_rules": q_association_rules,
-        "part_reachability": q_part_reachability,
-        "funnel_latency": q_funnel_latency,
-        "part_walks": q_part_walks,
-        "ann_ndcg": q_ann_ndcg,
-        "value_bins": q_value_bins,
-        "dedup_eval": q_dedup_eval,
-        "dedup_family_eval": q_dedup_family_eval,
-        "bloom_join_revenue": q_bloom_join_revenue,
-        "customer_linkage": q_customer_linkage,
-        "ann_ivfpq": q_ann_ivfpq,
-        "customer_entities": q_customer_entities,
-        "orders_replica_diff": q_orders_replica_diff,
-        # --- r6 session-5 additions (51+, locally oracle-checked) ---
-        "item_neighbors": q_item_neighbors,
-        "user_state_history": q_user_state_history,
-        "heavy_parts": q_heavy_parts,
-        "price_quantiles_hdr": q_price_quantiles_hdr,
-        "value_outliers": q_value_outliers,
-        # r7: item_cf_recs promoted into the graded window (slot above);
-        # balance_deciles_scalable demoted here, oracle check continues
-        # via test_oracle_parity
-        "balance_deciles_scalable": q_balance_deciles_scalable,
-        "part_distances": q_part_distances,
-        # fifth streaming lane in this registry; shares the batch
-        # cms lane's oracle
-        "streaming_cms_parts": q_streaming_cms_parts,
-        "bloom_part_filter": q_bloom_part_filter,
-        "customer_overlap": q_customer_overlap,
-        "brand_trend": q_brand_trend,
-        "sn_candidate_pairs": q_sn_candidate_pairs,
-        "collocations": q_collocations,
-        "sn_families": q_sn_families,
-        "setjoin_pairs": q_setjoin_pairs,
-        "demand_shift": q_demand_shift,
-        "cusum_alerts": q_cusum_alerts,
-        "link_candidates": q_link_candidates,
-        "psi_drift": q_psi_drift,
-        "dedup_editdist": q_dedup_editdist,
-        "dq_report": q_dq_report,
-        "part_hits": q_part_hits,
-        "phrase_search": q_phrase_search,
-        "session_paths": q_session_paths,
-        "revenue_acf": q_revenue_acf,
-        "ab_test_orders": q_ab_test_orders,
-        "part_routes": q_part_routes,
-        "pareto_parts": q_pareto_parts,
-        "value_twap": q_value_twap,
-    }
-
-
 def _snapshot_values_sql(name: str) -> "str | None":
     """VALUES-literal oracle from oracle_snapshots.json (generated by
     tools/pin_oracles.py) for deterministic model-training queries whose
@@ -8942,233 +8448,260 @@ GROUP BY 1
 """
 
 
+class Lane(NamedTuple):
+    """One declared lane: its query, its DuckDB oracle (SQL text, or a
+    zero-arg function returning SQL, or None when a pinned snapshot is
+    missing) and whether the bench pass times it. The lane's name is its
+    query function's name without the ``q_`` prefix."""
+
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: "str | Callable[[], str | None]"
+    bench: bool = True
+
+    @property
+    def name(self) -> str:
+        return self.fn.__name__.removeprefix("q_")
+
+
+# Every lane, declared once. queries(), oracle_sql() and bench.py's lane
+# list are derived from this table, in this order.
+LANES = (
+    Lane(q_pricing_summary, _SQL_PRICING),
+    Lane(q_shipping_priority, _SQL_SHIPPING),
+    Lane(q_region_revenue, _SQL_REGION),
+    Lane(q_top_parts_per_brand, _SQL_TOP_PARTS),
+    Lane(q_user_activity, _SQL_USER_ACTIVITY),
+    Lane(q_asof_view_before_purchase, _SQL_ASOF),
+    Lane(q_customer_distribution, _SQL_CUSTOMER_DISTRIBUTION, bench=False),
+    Lane(q_customer_set_ops, _SQL_SET_OPS, bench=False),
+    Lane(q_running_order_totals, _SQL_RUNNING_TOTALS, bench=False),
+    Lane(q_curation_pipeline, _sql_curation_pipeline),
+    Lane(q_streaming_cdc, _sql_orders_cdc_apply),
+    Lane(q_cdc_partitioned, _sql_orders_cdc_apply),
+    Lane(q_order_rank_stats_scalable, _SQL_ORDER_RANK),
+    Lane(q_stratified_sample, _sql_stratified_sample, bench=False),
+    Lane(q_bm25_incremental, _sql_bm25_search),
+    Lane(q_order_baskets, _SQL_ORDER_BASKETS, bench=False),
+    Lane(q_part_cooccurrence, _SQL_COOCCURRENCE, bench=False),
+    Lane(q_order_streaks, _SQL_ORDER_STREAKS, bench=False),
+    Lane(q_revenue_grouping_sets, _SQL_GROUPING_SETS, bench=False),
+    Lane(q_lateral_recent_orders, _SQL_LATERAL_RECENT, bench=False),
+    Lane(q_filter_candidates, _SQL_FILTER_CANDIDATES),
+    Lane(q_softmax_sampling, _SQL_SOFTMAX),
+    Lane(q_unroll_features, _SQL_UNROLL),
+    Lane(q_query_feature_table, _SQL_FEATURE_TABLE),
+    Lane(q_embedding_lookup, _SQL_EMBEDDING_LOOKUP),
+    Lane(q_padding, _SQL_PADDING),
+    Lane(q_categorify, _SQL_CATEGORIFY),
+    Lane(q_ann_topk, _SQL_ANN_TOPK),
+    Lane(q_ann_ivf, _SQL_ANN_IVF),
+    Lane(q_ann_lsh, _sql_ann_lsh),
+    Lane(q_sessionize, _SQL_SESSIONIZE),
+    Lane(q_dedup_minhash_incremental,
+         lambda: _sql_components(MinHashDedup(**_MINHASH).pairs_oracle_sql())),
+    Lane(q_item_cf_recs, _sql_item_cf_recs),
+    Lane(q_value_quantiles_scalable, _SQL_VALUE_QUANTILES),
+    Lane(q_events_hourly, _SQL_EVENTS_HOURLY),
+    Lane(q_top_ngrams, _SQL_TOP_NGRAMS),
+    Lane(q_dedup_verified, _sql_dedup_verified),
+    Lane(q_four_stage_recs, _SQL_FOUR_STAGE),
+    Lane(q_dedup_exact, _SQL_DEDUP_EXACT),
+    Lane(q_dedup_minhash, lambda: MinHashDedup(**_MINHASH).pairs_oracle_sql()),
+    Lane(q_dedup_simhash, lambda: SimHashDedup(**_SIMHASH).pairs_oracle_sql()),
+    Lane(q_dedup_clusters, _sql_dedup_clusters),
+    Lane(q_orders_cdc_apply, _sql_orders_cdc_apply),
+    Lane(q_dedup_embedding_lsh,
+         lambda: EmbeddingDedup(**_EMBDED_LSH).lsh_pairs_oracle_sql()),
+    Lane(q_substring_dedup, _sql_substring_dedup),
+    Lane(q_text_stats, _SQL_TEXT_STATS),
+    Lane(q_multimodal_features, _sql_multimodal_features),
+    Lane(q_ann_pq, _SQL_ANN_PQ, bench=False),
+    Lane(q_implicit_recommend,
+         lambda: _snapshot_values_sql("implicit_recommend"), bench=False),
+    Lane(q_predict_forest,
+         lambda: _snapshot_values_sql("predict_forest"), bench=False),
+    # ---- the 50 rows above are the graded window: keep names and order
+    Lane(q_dedup_embedding,
+         lambda: EmbeddingDedup(**_EMBDED).pairs_oracle_sql()),
+    Lane(q_dedup_ngram,
+         lambda: NGramJaccardDedup(**_NGRAM).pairs_oracle_sql()),
+    Lane(q_streaming_hourly, _SQL_STREAMING_HOURLY),
+    Lane(q_streaming_exactly_once, _SQL_STREAMING_XO),
+    Lane(q_corpus_curation, _sql_corpus_curation),
+    Lane(q_streaming_ingest_dedup, _SQL_STREAMING_INGEST_DEDUP),
+    Lane(q_profile_table, _SQL_PROFILE_TABLE),
+    Lane(q_grouped_rank, _SQL_GROUPED_RANK),
+    Lane(q_events_rollup, _SQL_ROLLUP),
+    Lane(q_cube_revenue, _SQL_CUBE_REVENUE, bench=False),
+    Lane(q_monthly_revenue, _SQL_MONTHLY_REVENUE, bench=False),
+    Lane(q_small_quantity_parts, _SQL_SMALL_QTY, bench=False),
+    Lane(q_order_priority_check, _SQL_ORDER_PRIORITY, bench=False),
+    Lane(q_latest_order_per_customer, _SQL_LATEST_ORDER, bench=False),
+    Lane(q_balance_deciles, _SQL_BALANCE_DECILES, bench=False),
+    Lane(q_value_quantiles, _SQL_VALUE_QUANTILES),
+    Lane(q_order_rank_stats, _SQL_ORDER_RANK, bench=False),
+    Lane(q_streaming_sessions, _SQL_STREAMING_SESSIONS),
+    Lane(q_profile_drift, _SQL_PROFILE_DRIFT, bench=False),
+    Lane(q_dedup_clusters_incremental, _sql_dedup_clusters, bench=False),
+    Lane(q_value_banded, _SQL_VALUE_BANDED),
+    Lane(q_dedup_embedding_incremental, lambda: _sql_components(
+        EmbeddingDedup(**_EMBDED_LSH).lsh_pairs_oracle_sql())),
+    Lane(q_dedup_simhash_incremental,
+         lambda: _sql_components(SimHashDedup(**_SIMHASH).pairs_oracle_sql())),
+    Lane(q_train_test_split, _sql_train_test_split, bench=False),
+    Lane(q_ann_ivf_incremental, _SQL_ANN_IVF_INCREMENTAL),
+    Lane(q_categorify_incremental, _SQL_CATEGORIFY_INCREMENTAL),
+    Lane(q_frame_sample, _SQL_FRAME_SAMPLE),
+    Lane(q_top_supplier, _SQL_TOP_SUPPLIER, bench=False),
+    Lane(q_idle_rich_customers, _SQL_IDLE_RICH, bench=False),
+    Lane(q_cdc_multiwriter, _sql_orders_cdc_apply),
+    Lane(q_cdc_merge_on_read, _sql_orders_cdc_apply),
+    Lane(q_cdc_dml, _sql_cdc_dml),
+    Lane(q_cdc_mat_view, _sql_orders_cdc_apply),
+    Lane(q_cdc_join_view, _sql_cdc_join_view),
+    Lane(q_streaming_change_feed, _SQL_STREAMING_CHANGE_FEED),
+    Lane(q_cdc_replication, _sql_orders_cdc_apply),
+    Lane(q_orders_zorder, _sql_orders_zorder),
+    Lane(q_orders_pruned_read, _SQL_ORDERS_PRUNED_READ),
+    Lane(q_orders_point_lookup, _SQL_ORDERS_POINT_LOOKUP),
+    Lane(q_orders_stats_agg, _SQL_ORDERS_STATS_AGG),
+    Lane(q_documents_token_search, _SQL_DOCUMENTS_TOKEN_SEARCH),
+    Lane(q_cdc_clone, _sql_orders_cdc_apply),
+    Lane(q_cdc_lookup, _sql_cdc_lookup),
+    Lane(q_cdc_lookup_composite, _sql_cdc_lookup_composite),
+    Lane(q_cdc_stats_agg, _sql_cdc_stats_agg),
+    Lane(q_cdc_token_search, _sql_cdc_token_search),
+    Lane(q_cdc_auto_compact, _sql_orders_cdc_apply),
+    Lane(q_cdc_bloom_lookup, _sql_cdc_lookup),
+    Lane(q_cdc_range_read, _sql_cdc_range_read),
+    Lane(q_cdc_adopt, _sql_cdc_adopt),
+    Lane(q_cdc_compact_files, _sql_orders_cdc_apply),
+    Lane(q_media_probe, _SQL_MEDIA_PROBE),
+    Lane(q_cdc_merge_into, _SQL_CDC_MERGE_INTO),
+    Lane(q_cdc_rename, _sql_orders_cdc_apply),
+    Lane(q_cdc_drop, _sql_orders_cdc_apply),
+    Lane(q_cdc_optimize, _sql_cdc_optimize),
+    Lane(q_dedup_forget, _sql_dedup_forget),
+    Lane(q_cdc_change_feed, _sql_cdc_change_feed),
+    Lane(q_kmeans_embeddings, _sql_kmeans_embeddings),
+    Lane(q_part_scc, _sql_part_scc),
+    Lane(q_events_resampled, _sql_events_resampled),
+    Lane(q_feature_scores, _sql_feature_scores),
+    Lane(q_bpe_train, lambda: _snapshot_values_sql("bpe_train")),
+    Lane(q_bpe_tokenize, lambda: _snapshot_values_sql("bpe_tokenize")),
+    # fit + fit_update over the split corpus must equal fit(union) exactly
+    Lane(q_bpe_train_incremental, lambda: _snapshot_values_sql("bpe_train")),
+    Lane(q_pii_redact, _sql_pii_redact),
+    Lane(q_k_anonymity, _sql_k_anonymity),
+    Lane(q_order_survival, _sql_order_survival),
+    Lane(q_embedding_gram, _sql_embedding_gram),
+    Lane(q_embedding_gram_incremental, _sql_embedding_gram),
+    Lane(q_embedding_pc1, _sql_embedding_pc1),
+    Lane(q_decontaminate, _SQL_DECONTAMINATE),
+    Lane(q_repetition_stats, _SQL_REPETITION_STATS),
+    Lane(q_mixture_sample, _sql_mixture_sample),
+    Lane(q_pack_sequences, _SQL_PACK_SEQUENCES),
+    Lane(q_boilerplate_removal, _sql_boilerplate),
+    Lane(q_pivot_orders, _SQL_PIVOT_ORDERS, bench=False),
+    Lane(q_semantic_dedup,
+         lambda: SemanticDedup(**_SEMDEDUP).oracle_sql("embeddings")),
+    Lane(q_quality_classifier, _sql_quality_classifier),
+    Lane(q_tokenize_encode, _sql_tokenize_encode),
+    Lane(q_lm_perplexity, _sql_lm_perplexity),
+    Lane(q_chunk_documents, _sql_chunk_documents),
+    Lane(q_ann_recall, _sql_ann_recall),
+    Lane(q_dsir_resample, _sql_dsir_resample),
+    Lane(q_source_overlap, _sql_source_overlap),
+    Lane(q_pagerank_parts, _sql_pagerank_parts),
+    Lane(q_part_triangles, _sql_part_triangles),
+    Lane(q_bm25_search, _sql_bm25_search),
+    Lane(q_hybrid_search, _sql_hybrid_search),
+    Lane(q_target_encode, _sql_target_encode),
+    Lane(q_negative_samples, _sql_negative_samples),
+    Lane(q_kcore_parts, _sql_kcore_parts),
+    Lane(q_minhash_signatures,
+         lambda: MinHashDedup(**_MINHASH).signatures_oracle_sql(),
+         bench=False),
+    Lane(q_part_communities, _sql_part_communities),
+    Lane(q_ppl_buckets, _sql_ppl_buckets),
+    Lane(q_pagerank_weighted, _sql_pagerank_weighted),
+    Lane(q_funnel_conversion, _sql_funnel_conversion),
+    Lane(q_user_retention, _SQL_USER_RETENTION),
+    Lane(q_winnow_overlap, _sql_winnow_overlap),
+    Lane(q_trailing_features, _SQL_TRAILING_FEATURES),
+    Lane(q_user_sequences, _SQL_USER_SEQUENCES),
+    Lane(q_winnow_families, _sql_winnow_families),
+    Lane(q_winnow_incremental, _sql_winnow_families),
+    Lane(q_hll_user_counts, _sql_hll_user_counts),
+    Lane(q_event_transitions, _SQL_EVENT_TRANSITIONS),
+    Lane(q_last_touch_attribution, _SQL_LAST_TOUCH),
+    Lane(q_ushape_attribution, _sql_ushape_attribution),
+    Lane(q_next_item_examples, _SQL_NEXT_ITEM_EXAMPLES),
+    Lane(q_cms_part_counts, _sql_cms_part_counts),
+    Lane(q_rfm_features, _SQL_RFM_FEATURES),
+    Lane(q_streaming_hll_users, _sql_hll_user_counts),
+    Lane(q_session_stats, _sql_session_stats),
+    Lane(q_temporal_split, _SQL_TEMPORAL_SPLIT),
+    Lane(q_ppr_parts, _sql_ppr_parts),
+    Lane(q_association_rules, _SQL_ASSOCIATION_RULES),
+    Lane(q_part_reachability, _sql_part_reachability),
+    Lane(q_funnel_latency, _sql_funnel_latency),
+    Lane(q_part_walks, _sql_part_walks),
+    Lane(q_ann_ndcg, _sql_ann_ndcg),
+    Lane(q_value_bins, _SQL_VALUE_BINS),
+    # all-pairs quality anchors, not production paths: not timed by the
+    # bench; tools/dedup_eval_probe.py records them
+    Lane(q_dedup_eval, _sql_dedup_eval, bench=False),
+    Lane(q_dedup_family_eval, _sql_dedup_family_eval, bench=False),
+    Lane(q_bloom_join_revenue, _SQL_BLOOM_JOIN_REVENUE),
+    Lane(q_customer_linkage, _sql_customer_linkage),
+    Lane(q_ann_ivfpq, _SQL_ANN_IVFPQ),
+    Lane(q_customer_entities, _sql_customer_entities),
+    Lane(q_orders_replica_diff, _sql_orders_replica_diff),
+    Lane(q_item_neighbors, _sql_item_neighbors),
+    Lane(q_user_state_history, _sql_user_state_history),
+    Lane(q_heavy_parts, _sql_heavy_parts),
+    Lane(q_price_quantiles_hdr, _sql_price_quantiles_hdr),
+    Lane(q_value_outliers, _SQL_VALUE_OUTLIERS),
+    Lane(q_balance_deciles_scalable, _SQL_BALANCE_DECILES),
+    Lane(q_part_distances, _sql_part_distances),
+    Lane(q_streaming_cms_parts, _sql_cms_part_counts),
+    Lane(q_bloom_part_filter, _sql_bloom_part_filter),
+    Lane(q_customer_overlap, _sql_customer_overlap),
+    Lane(q_brand_trend, _sql_brand_trend),
+    Lane(q_sn_candidate_pairs, _sql_sn_candidate_pairs),
+    Lane(q_collocations, _sql_collocations),
+    Lane(q_sn_families, _sql_sn_families),
+    Lane(q_setjoin_pairs, _sql_setjoin_pairs),
+    Lane(q_demand_shift, _sql_demand_shift),
+    Lane(q_cusum_alerts, _sql_cusum_alerts),
+    Lane(q_link_candidates, _sql_link_candidates),
+    Lane(q_psi_drift, _SQL_PSI_DRIFT),
+    Lane(q_dedup_editdist, _sql_dedup_editdist),
+    Lane(q_dq_report, _sql_dq_report),
+    Lane(q_part_hits, _sql_part_hits),
+    Lane(q_phrase_search, _sql_phrase_search),
+    Lane(q_session_paths, _sql_session_paths),
+    Lane(q_revenue_acf, _sql_revenue_acf),
+    Lane(q_ab_test_orders, _sql_ab_test_orders),
+    Lane(q_part_routes, _sql_part_routes),
+    Lane(q_pareto_parts, _sql_pareto_parts),
+    Lane(q_value_twap, _sql_value_twap),
+)
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    """Every lane's query, in table order; the first 50 are graded."""
+    return {lane.name: lane.fn for lane in LANES}
+
+
 def oracle_sql() -> dict[str, str]:
-    snapshots = {
-        name: sql
-        for name in ("implicit_recommend", "predict_forest", "bpe_train",
-                     "bpe_tokenize")
-        if (sql := _snapshot_values_sql(name)) is not None
-    }
-    # incremental BPE grades against the SAME pinned table: fit +
-    # fit_update over the split corpus must equal fit(union) exactly
-    if (sql := _snapshot_values_sql("bpe_train")) is not None:
-        snapshots["bpe_train_incremental"] = sql
-    return snapshots | {
-        "pricing_summary": _SQL_PRICING,
-        "shipping_priority": _SQL_SHIPPING,
-        "region_revenue": _SQL_REGION,
-        "top_parts_per_brand": _SQL_TOP_PARTS,
-        "events_rollup": _SQL_ROLLUP,
-        "user_activity": _SQL_USER_ACTIVITY,
-        "asof_view_before_purchase": _SQL_ASOF,
-        "order_priority_check": _SQL_ORDER_PRIORITY,
-        "customer_distribution": _SQL_CUSTOMER_DISTRIBUTION,
-        "customer_set_ops": _SQL_SET_OPS,
-        "small_quantity_parts": _SQL_SMALL_QTY,
-        "running_order_totals": _SQL_RUNNING_TOTALS,
-        "cube_revenue": _SQL_CUBE_REVENUE,
-        "pivot_orders": _SQL_PIVOT_ORDERS,
-        "balance_deciles": _SQL_BALANCE_DECILES,
-        "top_supplier": _SQL_TOP_SUPPLIER,
-        "idle_rich_customers": _SQL_IDLE_RICH,
-        "order_rank_stats": _SQL_ORDER_RANK,
-        "order_rank_stats_scalable": _SQL_ORDER_RANK,
-        "latest_order_per_customer": _SQL_LATEST_ORDER,
-        "monthly_revenue": _SQL_MONTHLY_REVENUE,
-        "stratified_sample": _sql_stratified_sample(),
-        "train_test_split": _sql_train_test_split(),
-        "order_baskets": _SQL_ORDER_BASKETS,
-        "part_cooccurrence": _SQL_COOCCURRENCE,
-        "order_streaks": _SQL_ORDER_STREAKS,
-        "revenue_grouping_sets": _SQL_GROUPING_SETS,
-        "lateral_recent_orders": _SQL_LATERAL_RECENT,
-        "filter_candidates": _SQL_FILTER_CANDIDATES,
-        "softmax_sampling": _SQL_SOFTMAX,
-        "unroll_features": _SQL_UNROLL,
-        "query_feature_table": _SQL_FEATURE_TABLE,
-        "embedding_lookup": _SQL_EMBEDDING_LOOKUP,
-        "padding": _SQL_PADDING,
-        "categorify": _SQL_CATEGORIFY,
-        "ann_topk": _SQL_ANN_TOPK,
-        "ann_ivf": _SQL_ANN_IVF,
-        "sessionize": _SQL_SESSIONIZE,
-        "value_banded": _SQL_VALUE_BANDED,
-        "value_quantiles": _SQL_VALUE_QUANTILES,
-        "events_hourly": _SQL_EVENTS_HOURLY,
-        "top_ngrams": _SQL_TOP_NGRAMS,
-        "dedup_verified": _sql_dedup_verified(),
-        "ann_lsh": _sql_ann_lsh(),
-        "four_stage_recs": _SQL_FOUR_STAGE,
-        "dedup_exact": _SQL_DEDUP_EXACT,
-        "dedup_minhash": MinHashDedup(**_MINHASH).pairs_oracle_sql(),
-        "dedup_simhash": SimHashDedup(**_SIMHASH).pairs_oracle_sql(),
-        "dedup_ngram": NGramJaccardDedup(**_NGRAM).pairs_oracle_sql(),
-        "dedup_embedding": EmbeddingDedup(**_EMBDED).pairs_oracle_sql(),
-        "dedup_embedding_lsh": EmbeddingDedup(**_EMBDED_LSH).lsh_pairs_oracle_sql(),
-        "minhash_signatures": MinHashDedup(**_MINHASH).signatures_oracle_sql(),
-        "text_stats": _SQL_TEXT_STATS,
-        "multimodal_features": _sql_multimodal_features(),
-        "frame_sample": _SQL_FRAME_SAMPLE,
-        "balance_deciles_scalable": _SQL_BALANCE_DECILES,
-        "value_quantiles_scalable": _SQL_VALUE_QUANTILES,
-        "ann_pq": _SQL_ANN_PQ,
-        "dedup_clusters": _sql_dedup_clusters(),
-        "streaming_hourly": _SQL_STREAMING_HOURLY,
-        "streaming_exactly_once": _SQL_STREAMING_XO,
-        "corpus_curation": _sql_corpus_curation(),
-        "streaming_ingest_dedup": _SQL_STREAMING_INGEST_DEDUP,
-        "profile_table": _SQL_PROFILE_TABLE,
-        "grouped_rank": _SQL_GROUPED_RANK,
-        "streaming_sessions": _SQL_STREAMING_SESSIONS,
-        "profile_drift": _SQL_PROFILE_DRIFT,
-        "dedup_clusters_incremental": _sql_dedup_clusters(),
-        # full-recompute equality: the recursive-CTE components over the
-        # WHOLE corpus's thresholded minhash pairs
-        "dedup_minhash_incremental": _sql_components(
-            MinHashDedup(**_MINHASH).pairs_oracle_sql()),
-        "dedup_embedding_incremental": _sql_components(
-            EmbeddingDedup(**_EMBDED_LSH).lsh_pairs_oracle_sql()),
-        "dedup_simhash_incremental": _sql_components(
-            SimHashDedup(**_SIMHASH).pairs_oracle_sql()),
-        # r8: incremental == scratch, so each oracle is the FULL-corpus twin
-        "bm25_incremental": _sql_bm25_search(),
-        "ann_ivf_incremental": _SQL_ANN_IVF_INCREMENTAL,
-        "categorify_incremental": _SQL_CATEGORIFY_INCREMENTAL,
-        "orders_cdc_apply": _sql_orders_cdc_apply(),
-        # the streaming MERGE must land exactly the batch merge's state
-        "streaming_cdc": _sql_orders_cdc_apply(),
-        # the bucket-stitched snapshot must land exactly the same state
-        "cdc_partitioned": _sql_orders_cdc_apply(),
-        "cdc_multiwriter": _sql_orders_cdc_apply(),
-        "cdc_merge_on_read": _sql_orders_cdc_apply(),
-        "cdc_dml": _sql_cdc_dml(),
-        "cdc_mat_view": _sql_orders_cdc_apply(),
-        "cdc_join_view": _sql_cdc_join_view(),
-        "streaming_change_feed": _SQL_STREAMING_CHANGE_FEED,
-        "cdc_replication": _sql_orders_cdc_apply(),
-        "orders_zorder": _sql_orders_zorder(),
-        "orders_pruned_read": _SQL_ORDERS_PRUNED_READ,
-        "orders_point_lookup": _SQL_ORDERS_POINT_LOOKUP,
-        "orders_stats_agg": _SQL_ORDERS_STATS_AGG,
-        "documents_token_search": _SQL_DOCUMENTS_TOKEN_SEARCH,
-        "cdc_clone": _sql_orders_cdc_apply(),
-        "cdc_lookup": _sql_cdc_lookup(),
-        "cdc_lookup_composite": _sql_cdc_lookup_composite(),
-        # policy lane: content must equal the plain global merge
-        "cdc_auto_compact": _sql_orders_cdc_apply(),
-        # bloom-pruned read_eq must land exactly the lookup's answer
-        "cdc_bloom_lookup": _sql_cdc_lookup(),
-        "cdc_range_read": _sql_cdc_range_read(),
-        "cdc_adopt": _sql_cdc_adopt(),
-        # relayout lane: content must equal the plain global merge
-        "cdc_compact_files": _sql_orders_cdc_apply(),
-        # full-scan twins: the skipping answers must equal a scan of
-        # the globally merged live view
-        "cdc_stats_agg": _sql_cdc_stats_agg(),
-        "cdc_token_search": _sql_cdc_token_search(),
-        "media_probe": _SQL_MEDIA_PROBE,
-        "cdc_merge_into": _SQL_CDC_MERGE_INTO,
-        "cdc_rename": _sql_orders_cdc_apply(),
-        "cdc_drop": _sql_orders_cdc_apply(),
-        "cdc_optimize": _sql_cdc_optimize(),
-        "dedup_forget": _sql_dedup_forget(),
-        "cdc_change_feed": _sql_cdc_change_feed(),
-        "kmeans_embeddings": __import__(
-            "systems_spark.operators.kmeans", fromlist=["kmeans_oracle_sql"]
-        ).kmeans_oracle_sql("embeddings", "vec_id", "embedding",
-                            k=8, iters=2),
-        "part_scc": _sql_part_scc(),
-        "events_resampled": _sql_events_resampled(),
-        "feature_scores": _sql_feature_scores(),
-        "pii_redact": _sql_pii_redact(),
-        "k_anonymity": _sql_k_anonymity(),
-        "order_survival": _sql_order_survival(),
-        "embedding_gram": _sql_embedding_gram(),
-        "embedding_gram_incremental": _sql_embedding_gram(),
-        "embedding_pc1": _sql_embedding_pc1(),
-        "decontaminate": _SQL_DECONTAMINATE,
-        "repetition_stats": _SQL_REPETITION_STATS,
-        "mixture_sample": _sql_mixture_sample(),
-        "pack_sequences": _SQL_PACK_SEQUENCES,
-        "boilerplate_removal": _sql_boilerplate(),
-        "curation_pipeline": _sql_curation_pipeline(),
-        "semantic_dedup": SemanticDedup(**_SEMDEDUP).oracle_sql("embeddings"),
-        "quality_classifier": _sql_quality_classifier(),
-        "tokenize_encode": _sql_tokenize_encode(),
-        "lm_perplexity": _sql_lm_perplexity(),
-        "chunk_documents": _sql_chunk_documents(),
-        "ann_recall": _sql_ann_recall(),
-        "dsir_resample": _sql_dsir_resample(),
-        "source_overlap": _sql_source_overlap(),
-        "pagerank_parts": _sql_pagerank_parts(),
-        "part_triangles": _sql_part_triangles(),
-        "bm25_search": _sql_bm25_search(),
-        "hybrid_search": _sql_hybrid_search(),
-        "target_encode": _sql_target_encode(),
-        "negative_samples": _sql_negative_samples(),
-        "kcore_parts": _sql_kcore_parts(),
-        "substring_dedup": _sql_substring_dedup(),
-        "part_communities": _sql_part_communities(),
-        "ppl_buckets": _sql_ppl_buckets(),
-        "pagerank_weighted": _sql_pagerank_weighted(),
-        "funnel_conversion": _sql_funnel_conversion(),
-        "user_retention": _SQL_USER_RETENTION,
-        "winnow_overlap": _sql_winnow_overlap(),
-        "winnow_families": _sql_winnow_families(),
-        "winnow_incremental": _sql_winnow_families(),
-        "hll_user_counts": _sql_hll_user_counts(),
-        "event_transitions": _SQL_EVENT_TRANSITIONS,
-        "last_touch_attribution": _SQL_LAST_TOUCH,
-        "ushape_attribution": _sql_ushape_attribution(),
-        "next_item_examples": _SQL_NEXT_ITEM_EXAMPLES,
-        "cms_part_counts": _sql_cms_part_counts(),
-        "rfm_features": _SQL_RFM_FEATURES,
-        "streaming_hll_users": _sql_hll_user_counts(),
-        "session_stats": _sql_session_stats(),
-        "temporal_split": _SQL_TEMPORAL_SPLIT,
-        "ppr_parts": _sql_ppr_parts(),
-        "association_rules": _SQL_ASSOCIATION_RULES,
-        "part_reachability": _sql_part_reachability(),
-        "funnel_latency": _sql_funnel_latency(),
-        "part_walks": _sql_part_walks(),
-        "ann_ndcg": _sql_ann_ndcg(),
-        "value_bins": _SQL_VALUE_BINS,
-        "dedup_eval": _sql_dedup_eval(),
-        "dedup_family_eval": _sql_dedup_family_eval(),
-        "bloom_join_revenue": _SQL_BLOOM_JOIN_REVENUE,
-        "customer_linkage": _sql_customer_linkage(),
-        "ann_ivfpq": _SQL_ANN_IVFPQ,
-        "customer_entities": _sql_customer_entities(),
-        "orders_replica_diff": _sql_orders_replica_diff(),
-        "trailing_features": _SQL_TRAILING_FEATURES,
-        "user_sequences": _SQL_USER_SEQUENCES,
-        "item_neighbors": _sql_item_neighbors(),
-        "user_state_history": _sql_user_state_history(),
-        "heavy_parts": _sql_heavy_parts(),
-        "price_quantiles_hdr": _sql_price_quantiles_hdr(),
-        "value_outliers": _SQL_VALUE_OUTLIERS,
-        "item_cf_recs": _sql_item_cf_recs(),
-        "part_distances": _sql_part_distances(),
-        "streaming_cms_parts": _sql_cms_part_counts(),
-        "bloom_part_filter": _sql_bloom_part_filter(),
-        "customer_overlap": _sql_customer_overlap(),
-        "brand_trend": _sql_brand_trend(),
-        "sn_candidate_pairs": _sql_sn_candidate_pairs(),
-        "collocations": _sql_collocations(),
-        "sn_families": _sql_sn_families(),
-        "setjoin_pairs": _sql_setjoin_pairs(),
-        "demand_shift": _sql_demand_shift(),
-        "cusum_alerts": _sql_cusum_alerts(),
-        "link_candidates": _sql_link_candidates(),
-        "psi_drift": _SQL_PSI_DRIFT,
-        "dedup_editdist": _sql_dedup_editdist(),
-        "dq_report": _sql_dq_report(),
-        "part_hits": _sql_part_hits(),
-        "phrase_search": _sql_phrase_search(),
-        "session_paths": _sql_session_paths(),
-        "revenue_acf": _sql_revenue_acf(),
-        "ab_test_orders": _sql_ab_test_orders(),
-        "part_routes": _sql_part_routes(),
-        "pareto_parts": _sql_pareto_parts(),
-        "value_twap": _sql_value_twap(),
-    }
+    """Every lane's DuckDB oracle; a lane whose oracle function returns
+    None (a pinned snapshot missing from oracle_snapshots.json) is left
+    out."""
+    out = {}
+    for lane in LANES:
+        sql = lane.oracle() if callable(lane.oracle) else lane.oracle
+        if sql is not None:
+            out[lane.name] = sql
+    return out

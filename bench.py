@@ -26,202 +26,6 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 
-# headline set: every operator family, weighted toward shuffle/join-heavy
-BENCH_QUERIES = [
-    "pricing_summary",
-    "shipping_priority",
-    "region_revenue",
-    "top_parts_per_brand",
-    "events_rollup",
-    "user_activity",
-    "asof_view_before_purchase",
-    "filter_candidates",
-    "softmax_sampling",
-    "unroll_features",
-    "query_feature_table",
-    "embedding_lookup",
-    "padding",
-    "categorify",
-    "ann_topk",
-    "ann_ivf",
-    "ann_ivfpq",
-    "sessionize",
-    "value_banded",
-    "value_quantiles",
-    "value_quantiles_scalable",
-    "balance_deciles_scalable",
-    "order_rank_stats_scalable",
-    "events_hourly",
-    "top_ngrams",
-    "dedup_verified",
-    "four_stage_recs",
-    "bloom_join_revenue",
-    "customer_linkage",
-    "customer_entities",
-    "orders_replica_diff",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_minhash_incremental",
-    "dedup_embedding_incremental",
-    "dedup_simhash_incremental",
-    "dedup_simhash",
-    "dedup_ngram",
-    "dedup_embedding",
-    "dedup_embedding_lsh",
-    "text_stats",
-    "multimodal_features",
-    "media_probe",
-    "ann_lsh",
-    "frame_sample",
-    "dedup_clusters",
-    "streaming_hourly",
-    "streaming_exactly_once",
-    "corpus_curation",
-    "streaming_ingest_dedup",
-    "profile_table",
-    "grouped_rank",
-    "streaming_sessions",
-    # r4 session-3 corpus-curation lanes
-    "pii_redact",
-    "k_anonymity",
-    "order_survival",
-    "embedding_gram",
-    "embedding_gram_incremental",
-    "embedding_pc1",
-    "decontaminate",
-    "repetition_stats",
-    "mixture_sample",
-    "pack_sequences",
-    "boilerplate_removal",
-    "curation_pipeline",
-    "semantic_dedup",
-    "quality_classifier",
-    "tokenize_encode",
-    "lm_perplexity",
-    "chunk_documents",
-    "ann_recall",
-    "dsir_resample",
-    "source_overlap",
-    "pagerank_parts",
-    "part_triangles",
-    "bm25_search",
-    "hybrid_search",
-    "target_encode",
-    "negative_samples",
-    "kcore_parts",
-    # r5 additions
-    "substring_dedup",
-    "part_communities",
-    "ppl_buckets",
-    "pagerank_weighted",
-    "funnel_conversion",
-    "user_retention",
-    "winnow_overlap",
-    "trailing_features",
-    "user_sequences",
-    # r6 additions
-    "winnow_families",
-    "winnow_incremental",
-    "bm25_incremental",
-    "ann_ivf_incremental",
-    "categorify_incremental",
-    "orders_cdc_apply",
-    "streaming_cdc",
-    "cdc_partitioned",
-    "orders_zorder",
-    "orders_pruned_read",
-    "orders_point_lookup",
-    "orders_stats_agg",
-    "documents_token_search",
-    "cdc_clone",
-    "cdc_lookup",
-    "cdc_merge_into",
-    # r12: composite-key serving read + skipping indexes on LIVE tables
-    "cdc_lookup_composite",
-    "cdc_stats_agg",
-    "cdc_token_search",
-    "cdc_auto_compact",
-    "cdc_bloom_lookup",
-    "cdc_range_read",
-    "cdc_adopt",
-    "cdc_compact_files",
-    "cdc_rename",
-    "cdc_drop",
-    "cdc_optimize",
-    "cdc_multiwriter",
-    "cdc_merge_on_read",
-    "cdc_dml",
-    "cdc_mat_view",
-    "cdc_join_view",
-    "streaming_change_feed",
-    "cdc_replication",
-    "dedup_forget",
-    "cdc_change_feed",
-    "kmeans_embeddings",
-    "part_scc",
-    "events_resampled",
-    "feature_scores",
-    "bpe_train",
-    "bpe_tokenize",
-    "bpe_train_incremental",
-    "hll_user_counts",
-    "event_transitions",
-    "last_touch_attribution",
-    "ushape_attribution",
-    "next_item_examples",
-    "cms_part_counts",
-    "rfm_features",
-    "streaming_hll_users",
-    "session_stats",
-    "temporal_split",
-    "ppr_parts",
-    "association_rules",
-    "part_reachability",
-    "funnel_latency",
-    "part_walks",
-    "ann_ndcg",
-    "value_bins",
-    # r11 (VERDICT r10 item 4): dedup_family_eval demoted out of the
-    # bench lane list — the by-design all-pairs ground-truth measurement
-    # had grown into the single biggest bench line (~5.4% of the pass)
-    # two rounds running. It still runs once per round via
-    # tools/dedup_eval_probe.py, which records the quality anchor.
-    # r12 (VERDICT r11 item 2): dedup_eval followed it — same
-    # measurement-only all-pairs shape, and at 6.23 s it had become the
-    # single biggest bench line. Both quality anchors are recorded by
-    # the same tools probe; the bench now measures production paths.
-    # r6 session-5 additions
-    "item_neighbors",
-    "user_state_history",
-    "heavy_parts",
-    "price_quantiles_hdr",
-    "value_outliers",
-    "item_cf_recs",
-    "part_distances",
-    "streaming_cms_parts",
-    "bloom_part_filter",
-    "customer_overlap",
-    "brand_trend",
-    "sn_candidate_pairs",
-    "collocations",
-    "sn_families",
-    "setjoin_pairs",
-    "demand_shift",
-    "cusum_alerts",
-    "link_candidates",
-    "psi_drift",
-    "dedup_editdist",
-    "dq_report",
-    "part_hits",
-    "phrase_search",
-    "session_paths",
-    "revenue_acf",
-    "ab_test_orders",
-    "part_routes",
-    "pareto_parts",
-    "value_twap",
-]
-
 
 def _anchor_fns(spark):
     """Fixed-work calibration probes (VERDICT r10 item 2): identical
@@ -345,7 +149,7 @@ def main() -> None:
     # dev loop: SPARK_GRAFT_BENCH_ONLY="dedup_verified,ann_ivf" restricts
     # the pass to named queries (comma-separated; unknown names rejected)
     only = os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
-    bench_set = BENCH_QUERIES
+    bench_set = [lane.name for lane in entrymod.LANES if lane.bench]
     if only:
         names = [n.strip() for n in only.split(",") if n.strip()]
         unknown = sorted(set(names) - set(queries))

@@ -54,7 +54,9 @@ class QueryFeatureTable(Operator):
         sel = [F.col(self.entity_col)] + [
             F.col(c).alias(f"{self.prefix}{c}" if self.prefix else c) for c in cols
         ]
-        # last-write-wins on duplicate entity ids, like an online store view
+        # one row per entity id, but which of several duplicate rows is
+        # kept is arbitrary (not last-write-wins); EmbeddingLookup dedups
+        # the same way. A deterministic pick is still open.
         return self.features_df.select(*sel).dropDuplicates([self.entity_col])
 
     def transform(self, df: DataFrame) -> DataFrame:

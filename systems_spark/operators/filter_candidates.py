@@ -21,8 +21,6 @@ Spark-first, two physical forms — both pure Catalyst, zero Python:
 
 from __future__ import annotations
 
-from typing import Optional
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -84,14 +82,16 @@ class FilterCandidatesRelational(Operator):
     (no shuffle of the candidate side).
     """
 
-    def __init__(self, seen_df: DataFrame = None, on=("id",), broadcast: Optional[bool] = None):
+    def __init__(self, seen_df: DataFrame = None, on=("id",), broadcast: bool = True):
         self.seen_df = seen_df
         self.on = [on] if isinstance(on, str) else list(on)
         self.broadcast = broadcast
 
     def transform(self, df: DataFrame) -> DataFrame:
-        seen = self.seen_df.select(*self.on).dropDuplicates(self.on)
-        if self.broadcast or self.broadcast is None:
+        # no dedup: an anti join's output does not depend on duplicate
+        # rows on its right side, and Catalyst would not remove one
+        seen = self.seen_df.select(*self.on)
+        if self.broadcast:
             seen = F.broadcast(seen)
         return df.join(seen, on=self.on, how="left_anti")
 

@@ -23,7 +23,7 @@ Arrow-batched NumPy argmin against the collected centroid matrix
 ``‖v‖² − 2v·c + ‖c‖²``, ties to the lower centroid id via
 cid-sorted argmin-first). At IVF-coarse-quantizer shape (k=256,
 d=128, N=200k, local[32]) the fold is the bottleneck: 83.5 s vs
-4.9 s per assignment pass (tools/kmeans_probe.py, SCALE.md), so
+4.9 s per assignment pass (SCALE.md, r10 operator rows), so
 ``assign_impl="auto"`` switches to NumPy once k·d ≥ 8192. The update
 is ONE narrow shuffle of (cluster, pos) partial sums — the
 ``_ivf_train`` shape with the float mean swapped for exact integers.
@@ -141,7 +141,7 @@ class KMeansMicros:
         are cid-SORTED so argmin-first reproduces the crossjoin path's
         lower-cid tie break; arithmetic is exact in int64 at the same
         magnitudes the fold path already assumes. Measured 17x faster
-        than the fold at k=256/d=128/N=200k (tools/kmeans_probe.py)."""
+        than the fold at k=256/d=128/N=200k (SCALE.md, r10 operator rows)."""
         import numpy as np
         import pandas as pd
 

@@ -29,6 +29,9 @@ def spark():
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.warehouse.dir", "/tmp/systems-spark-test-warehouse")
+        # PySpark's per-call call-site capture (extra py4j round trips on
+        # every Column/DataFrame call); read once per process
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         .getOrCreate()
     )
     s.sparkContext.setLogLevel("ERROR")

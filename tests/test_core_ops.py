@@ -53,6 +53,31 @@ def test_filter_candidates_keeps_duplicates(spark):
     assert dedup.collect()[0].filtered_ids == [5, 7]
 
 
+def test_filter_candidates_relational_anti_membership(spark):
+    """LEFT ANTI on a composite key equals pure-Python anti-membership when
+    the seen rows repeat and carry NULL keys, and the broadcast build side
+    is the seen rows themselves: no shuffle anywhere in the plan."""
+    from systems_spark.operators.filter_candidates import (
+        FilterCandidatesRelational,
+    )
+    from systems_spark.plans import count_exchanges, has_broadcast_join
+
+    cands = [(u, i, f"c{u}-{i}") for u in (1, 2, 3, None)
+             for i in (1, 2, 3, None)]
+    cands += cands[:5]  # duplicate candidate rows survive the anti join
+    seen = [(1, 1), (1, 1), (1, None), (None, 2), (None, None), (2, 3),
+            (2, 3), (3, 1), (4, 4)]
+    cdf = spark.createDataFrame(cands, "u long, i long, tag string")
+    sdf = spark.createDataFrame(seen, "u long, i long")
+    out = FilterCandidatesRelational(sdf, on=["u", "i"]).transform(cdf)
+
+    hit = {(u, i) for u, i in seen if u is not None and i is not None}
+    want = sorted((r for r in cands if (r[0], r[1]) not in hit), key=repr)
+    assert sorted((tuple(r) for r in out.collect()), key=repr) == want
+    assert has_broadcast_join(out)
+    assert count_exchanges(out) == 0
+
+
 def test_softmax_sampling_properties(spark):
     """reference: test_ops.py:48-122 — k rows per request, ids subset of
     candidates, dtypes preserved, deterministic given seed."""
