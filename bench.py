@@ -102,6 +102,9 @@ def main() -> None:
         .config("spark.sql.warehouse.dir", "/tmp/systems-spark-bench-warehouse")
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
+        # PySpark's per-call call-site capture (extra py4j round trips on
+        # every Column/DataFrame call); read once per process
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     # extra conf knobs for A/B experiments, e.g.
     # SPARK_GRAFT_CONF="spark.io.compression.codec=zstd;spark.x=y"

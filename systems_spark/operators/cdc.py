@@ -8,8 +8,10 @@ ship this as `MERGE INTO`; here it is the declarative three-step plan:
 1. collapse the change batch to its LAST operation per key (one window
    over the CHANGES — batch-sized, never snapshot-sized);
 2. untouched snapshot rows pass through an ANTI join on the touched
-   keys (AQE broadcasts the batch-derived key set when it is small —
-   the daily-ingest case — so the snapshot is never shuffled);
+   keys (a broadcast when the planner can size the batch-derived key
+   set; a batch built from an RDD or a Python list has no size
+   estimate, and then the snapshot is shuffled into a sort-merge
+   join);
 3. surviving last-ops (insert/update) append their payloads; deletes
    simply emit nothing.
 
@@ -26,9 +28,15 @@ Semantics (the Debezium/Hudi convention):
   so it raises by default (``check_unique_seq=False`` to skip the one
   batch-sized aggregation when uniqueness is guaranteed upstream).
 
-At 100 TB: cost is one batch window + one key anti-join per merge —
-proportional to the CHANGE batch, plus a snapshot pass-through that
-never exchanges when the key set broadcasts. Chain per micro-batch with
+Cost of ``apply_cdc``: one batch window + one key anti-join per merge.
+The sequence-fenced variant behind the CDC tables,
+:func:`merge_cdc_fenced`, is one exchange instead: ``snapshot ∪
+changes`` hash-partitioned once by key, so the snapshot rows it is
+given cross exactly one shuffle (a flat table commit is 2 Spark jobs:
+that shuffle's map stage and the write). That is a trade: when the
+batch is read from parquet the planner can size it, and a touched-key
+anti join would broadcast and leave the snapshot unshuffled; this plan
+shuffles every snapshot row it is given. Chain per micro-batch with
 ``streaming/sinks.IdempotentParquetSink`` for an exactly-once CDC
 pipeline on plain parquet.
 """
@@ -114,52 +122,6 @@ def apply_cdc(snapshot: DataFrame, changes: DataFrame, key_cols,
     return untouched.unionByName(upserts)
 
 
-def fold_last_change(changes: DataFrame, key_cols, payload,
-                     seq_col: str, op_col: str, deleted_col: str,
-                     check_unique_seq=True,
-                     what: str = "fold_last_change") -> DataFrame:
-    """Per-key winner of a change batch (the highest-``seq`` row),
-    projected to snapshot shape: payload + seq + tombstone flag. The
-    shared fold behind :func:`merge_cdc_fenced` and the change-feed
-    fast path.
-
-    ``check_unique_seq``: ``True`` runs the eager sample check (one
-    small job — right for write paths, which want to fail BEFORE
-    staging anything); ``"inline"`` defers the same (key, seq)-tie
-    guard to execution time — a count over (key, seq) rides the winner
-    window's own shuffle (partitioning on the key prefix satisfies the
-    finer clustering), and the winner row raises if its (key, seq) is
-    duplicated. Read-side folds use inline so materializing a
-    merge-on-read snapshot never pays an extra validation job."""
-    key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    payload = list(payload)
-    if check_unique_seq == "inline":
-        w2 = Window.partitionBy(*key_cols, seq_col)
-        changes = changes.withColumn(
-            "_cdc_ties", F.count(F.lit(1)).over(w2))
-    elif check_unique_seq:
-        _check_unique_seq(changes, key_cols, seq_col, what)
-    changes = changes.withColumn(op_col, _op_checked(op_col, what))
-    w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
-    seq_out = F.col(seq_col)
-    if check_unique_seq == "inline":
-        seq_out = F.when(
-            F.col("_cdc_ties") > 1,
-            F.raise_error(F.concat(
-                F.lit(f"{what}: (key, {seq_col}) must be unique "
-                      f"within a change batch — 'last change wins' is "
-                      f"nondeterministic under ties. Duplicated: "),
-                F.concat_ws(
-                    ",", *[F.col(k).cast("string") for k in key_cols],
-                    F.col(seq_col).cast("string"))))
-        ).otherwise(F.col(seq_col))
-    return (changes
-            .withColumn("_cdc_rn", F.row_number().over(w))
-            .where(F.col("_cdc_rn") == 1)
-            .select(*payload, seq_out.alias(seq_col),
-                    (F.col(op_col) == "delete").alias(deleted_col)))
-
-
 def merge_cdc_fenced(snapshot: DataFrame, changes: DataFrame, key_cols,
                      seq_col: str = "seq", op_col: str = "op",
                      deleted_col: str = "_cdc_deleted",
@@ -177,46 +139,81 @@ def merge_cdc_fenced(snapshot: DataFrame, changes: DataFrame, key_cols,
 
     ``snapshot``: payload + ``seq_col`` + ``deleted_col``. ``changes``:
     payload + ``seq_col`` + ``op_col``. Returns the next snapshot in the
-    same snapshot schema (tombstones retained — compact them out only
-    once no older change can still arrive; ``CdcTable.current`` hides
-    them from readers).
+    snapshot's own columns and column order (tombstones retained —
+    compact them out only once no older change can still arrive;
+    ``CdcTable.current`` hides them from readers).
 
     ``min_seq`` is a GLOBAL staleness floor (the compaction fence —
     ``CdcTable.compact``): changes with seq ≤ min_seq are dropped at
     entry, so a key whose tombstone was compacted away can never be
     resurrected by a late replay of a pre-fence batch.
 
-    Plan: one window over the CHANGE batch, untouched snapshot rows
-    anti-join through, touched keys resolve via a key-outer join whose
-    both sides are batch-key-sized — the snapshot is never shuffled
-    beyond the (broadcastable) touched-key joins."""
+    ``check_unique_seq``: ``True`` runs the eager sample check (one
+    small job — right for write paths that want to fail BEFORE staging
+    anything); ``"inline"`` evaluates the same rule at execution time on
+    the merge's own exchange: a key whose top-seq change is tied raises
+    (ties below a key's top seq are harmless and pass); ``False`` skips
+    the check.
+
+    Plan: ``snapshot ∪ changes``, tagged by source, hash-partitioned
+    ONCE by key; per key the rows rank by ``(seq desc, source)`` with
+    the snapshot first, so an equal seq keeps the snapshot row. If a
+    change ranks first, the key becomes that one row (a tombstone for a
+    delete) — also when the snapshot held the key more than once. If a
+    snapshot row ranks first (an untouched key, a stale change, a
+    replay), every snapshot row of the key passes through verbatim. The
+    inline tie guard is a ``(key, seq)`` window over the same exchange
+    (key partitioning satisfies the finer clustering). The whole
+    snapshot therefore crosses the one exchange, even when the batch is
+    small and sized (read from parquet), where a broadcast anti join
+    would not shuffle it; callers that can prune (the bucketed layouts:
+    touched buckets on commit, ``pending_buckets`` on a merge-on-read
+    fold) pass only those rows."""
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-    payload = [c for c in snapshot.columns
-               if c not in (seq_col, deleted_col)]
+    cols = list(snapshot.columns)
+    payload = [c for c in cols if c not in (seq_col, deleted_col)]
     missing = [c for c in payload + [seq_col, op_col]
                if c not in changes.columns]
     if missing:
         raise ValueError(f"changes is missing columns: {missing}")
+    what = "merge_cdc_fenced"
     if min_seq is not None:
         changes = changes.where(F.col(seq_col) > int(min_seq))
-    last = fold_last_change(changes, key_cols, payload, seq_col,
-                            op_col, deleted_col,
-                            check_unique_seq=check_unique_seq,
-                            what="merge_cdc_fenced")
-    touched = last.select(*key_cols)
-    untouched = _touched_join(snapshot, touched, key_cols, "anti")
-    snap_touched = _touched_join(snapshot, touched, key_cols, "semi")
-    s, c = snap_touched.alias("S"), last.alias("C")
-    joined = s.join(
-        c, on=[F.col(f"S.{k}").eqNullSafe(F.col(f"C.{k}")) for k in key_cols],
-        how="full")
-    # change wins iff the snapshot row is absent or strictly older
-    take_c = F.col(f"S.{seq_col}").isNull() | \
-        (F.col(f"C.{seq_col}") > F.col(f"S.{seq_col}"))
-    resolved = joined.select(*[
-        F.when(take_c, F.col(f"C.{col}")).otherwise(F.col(f"S.{col}"))
-        .alias(col) for col in payload + [seq_col, deleted_col]])
-    return untouched.unionByName(resolved)
+    if check_unique_seq and check_unique_seq != "inline":
+        _check_unique_seq(changes, key_cols, seq_col, what)
+    # op validation rides the projection of EVERY change — a garbage op
+    # raises even when a later seq supersedes it
+    is_delete = _op_checked(op_col, what) == "delete"
+    src, seq = F.col("_cdc_src"), F.col(seq_col)
+    both = snapshot.select(*cols, F.lit(0).alias("_cdc_src")).unionByName(
+        changes.select(*[is_delete.alias(c) if c == deleted_col
+                         else F.col(c) for c in cols],
+                       F.lit(1).alias("_cdc_src")))
+    ranked = Window.partitionBy(*key_cols).orderBy(seq.desc(), src.asc())
+    whole = ranked.rowsBetween(Window.unboundedPreceding,
+                               Window.unboundedFollowing)
+    both = both.withColumns({
+        "_cdc_rn": F.row_number().over(ranked),
+        "_cdc_top": F.first(src).over(whole)})
+    # a change wins its key: keep that one row; else the snapshot rows
+    keep = F.when(F.col("_cdc_top") == 1, F.col("_cdc_rn") == 1) \
+        .otherwise(src == 0)
+    if check_unique_seq == "inline":
+        both = both.withColumns({
+            "_cdc_ties": F.sum(src).over(
+                Window.partitionBy(*key_cols, seq_col)),
+            "_cdc_top_change": F.max(F.when(src == 1, seq)).over(whole)})
+        # null-safe: max skips NULLs, so a NULL seq is a key's top
+        # change only when all of its changes have one
+        tied = ((src == 1) & seq.eqNullSafe(F.col("_cdc_top_change"))
+                & (F.col("_cdc_ties") > 1))
+        keep = F.when(tied, F.raise_error(F.concat(
+            F.lit(f"{what}: (key, {seq_col}) must be unique within a "
+                  f"change batch — 'last change wins' is "
+                  f"nondeterministic under ties. Duplicated: "),
+            F.concat_ws(",", *[F.col(k).cast("string") for k in key_cols],
+                        seq.cast("string"))))).otherwise(keep)
+    return both.where(keep).select(*cols)
 
 
 def apply_cdc_sql(snapshot_sql: str, changes_sql: str, key_cols,

@@ -30,6 +30,8 @@ from hashlib import md5
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.streaming.sinks import _manifest_schema
+
 __all__ = ["z_value", "z_value_sql", "zorder_layout",
            "file_stats", "pruned_files", "pruned_read",
            "file_bloom", "bloom_pruned_files", "bloom_pruned_read",
@@ -678,7 +680,7 @@ class CdcSkippingIndex:
         cmap = table._column_map(man)
         pcols = [cmap.get(c, c) for c in cols]
         where = self._live_where(table)
-        rs = self._manifest_schema(spark, man, paths)             if "schema" in man else None
+        rs = _manifest_schema(man)
         stats = None
         for b in sorted(paths):
             st = self.idx.stats(spark, paths[b], pcols, where=where,
@@ -719,11 +721,10 @@ class CdcSkippingIndex:
         the live view — an unknown or DROPPED column must raise here,
         not leak dropped data from the physical files or die deep in
         analysis."""
-        import json as _json
-
         frame = spark.createDataFrame(
             [], self._manifest_schema(spark, man, paths))
-        live = set(table._to_logical(man, frame).columns)             - {table.seq_col, table.DELETED}
+        live = (set(table._to_logical(man, frame).columns)
+                - {table.seq_col, table.DELETED})
         bad = [c for c in cols if c not in live]
         if bad:
             raise ValueError(
@@ -731,16 +732,10 @@ class CdcSkippingIndex:
                 f"(available: {sorted(live)})")
 
     def _manifest_schema(self, spark, man, paths):
-        """Partitioned manifests own the schema (old files NULL-fill
-        evolved columns by name); flat snapshots are schema-uniform per
-        version, so the footer schema is authoritative there."""
-        import json as _json
-
-        from pyspark.sql.types import StructType
-
-        if "schema" in man:
-            return StructType.fromJson(_json.loads(man["schema"]))
-        return spark.read.parquet(paths[min(paths)]).schema
+        """The schema the manifest records (old files NULL-fill evolved
+        columns by name), else the first unit's footer schema."""
+        return (_manifest_schema(man)
+                or spark.read.parquet(paths[min(paths)]).schema)
 
     def _assemble(self, spark, table, man, paths, live,
                   files) -> DataFrame:
@@ -779,7 +774,7 @@ class CdcSkippingIndex:
         self._check_cols(spark, table, man, paths, [col])
         pcol = table._column_map(man).get(col, col)
         where = self._live_where(table)
-        rs = self._manifest_schema(spark, man, paths)             if "schema" in man else None
+        rs = _manifest_schema(man)
         files = []
         for b in sorted(paths):
             bloom = self.idx.token_bloom(spark, paths[b], pcol,
@@ -809,7 +804,7 @@ class CdcSkippingIndex:
         pcols = [cmap.get(c, c) for c in cols]
         preds = {cmap.get(c, c): rng for c, rng in predicates.items()}
         where = self._live_where(table)
-        rs = self._manifest_schema(spark, man, paths)             if "schema" in man else None
+        rs = _manifest_schema(man)
         files = []
         for b in sorted(paths):
             st = self.idx.stats(spark, paths[b], pcols, where=where,
@@ -831,7 +826,7 @@ class CdcSkippingIndex:
         self._check_cols(spark, table, man, paths, [col])
         pcol = table._column_map(man).get(col, col)
         where = self._live_where(table)
-        rs = self._manifest_schema(spark, man, paths)             if "schema" in man else None
+        rs = _manifest_schema(man)
         dtype = self._manifest_schema(spark, man, paths)[pcol].dataType
         files = []
         for b in sorted(paths):

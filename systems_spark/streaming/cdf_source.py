@@ -113,9 +113,9 @@ def _change_schema(man: dict, deleted_col: str, op_col: str) -> StructType:
     rewrite) translates — files on disk keep physical names forever,
     so the reader resolves logical → physical per field
     (:func:`_physical_names`)."""
-    if "schema" not in man:
+    if "buckets" not in man:
         raise ValueError(
-            "manifest carries no schema — the change feed requires a "
+            "manifest has no bucket mapping — the change feed requires a "
             "PartitionedCdcTable with write_mode='merge_on_read' (a "
             "flat CdcTable records no change files)")
     snap = StructType.fromJson(json.loads(man["schema"]))

@@ -41,6 +41,7 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from systems_spark.sources import _fs_read_text
 
@@ -55,6 +56,25 @@ def _commit_stamp_ms(prior_man: "dict | None") -> int:
     now = int(time.time() * 1000)
     prev = int(prior_man.get("committed_at_ms", -1)) if prior_man else -1
     return max(now, prev + 1)
+
+
+def _manifest_schema(man: dict):
+    """The snapshot schema a manifest records (PHYSICAL names, bookkeeping
+    columns included), or None for a manifest written without one — an
+    adopted seed or a flat table from before manifests carried it, whose
+    readers fall back to parquet footer inference."""
+    if "schema" not in man:
+        return None
+    return StructType.fromJson(json.loads(man["schema"]))
+
+
+def _with_bookkeeping(payload, seq_col: str, deleted_col: str):
+    """``payload`` (a StructType) plus the seq and tombstone columns — the
+    snapshot schema of an adopted plain directory."""
+    from pyspark.sql.types import BooleanType, LongType, StructField
+    return StructType(list(payload.fields)
+                      + [StructField(seq_col, LongType(), True),
+                         StructField(deleted_col, BooleanType(), True)])
 
 
 class ConcurrentCommitError(RuntimeError):
@@ -249,6 +269,15 @@ class CdcTable:
     merge writes only touched partitions — the fencing/tombstone/marker
     semantics are identical, which is what the tests pin down.
 
+    Every manifest records the snapshot's schema, and reads
+    (``snapshot``, ``current``, ``at_version``, ``lookup``, the merge's
+    own read) take it from there instead of inferring it from parquet
+    footers: a merge commit is 2 Spark jobs (the fenced merge's one
+    exchange and the write; standing CHECK constraints add their one
+    validation job) and a lookup is 1. Manifests without a
+    recorded schema (tables written before it was recorded) still read,
+    through footer inference.
+
     ``schema_evolution="merge"`` opts into Delta-style ``mergeSchema``:
     a batch carrying NEW payload columns widens the table (standing rows
     NULL-fill), a batch MISSING payload columns NULL-fills them in its
@@ -404,8 +433,8 @@ class CdcTable:
         An execution-time failure of the write deletes the partial
         staged directory before re-raising — nothing was committed (no
         marker), so the table stays clean. The inline (key, seq)-tie
-        guard (operators/cdc.py fold_last_change ``"inline"``, riding
-        the merge fold's own shuffle instead of a separate eager
+        guard (operators/cdc.py merge_cdc_fenced ``"inline"``, riding
+        the merge's own exchange instead of a separate eager
         validation job) surfaces here as the same ValueError the eager
         check used to raise."""
         from pyspark.sql import Observation
@@ -475,8 +504,11 @@ class CdcTable:
             app = extra.get("txn_app", self.app_id)
             txn[app] = max(int(extra["batch_id"]),
                            int(txn.get(app, -1)))
+        # the written frame's schema rides in the manifest, so every
+        # later read of this version skips parquet footer inference
         manifest = {"app_id": self.app_id, "version": int(version),
                     "rows": int(rows_n), "data_dir": dir_name,
+                    "schema": json.dumps(df.schema.jsonValue()),
                     "txn": txn,
                     "committed_at_ms": _commit_stamp_ms(prior_man)}
         self._carry_standing(manifest, prior_man)
@@ -589,11 +621,14 @@ class CdcTable:
             raise ValueError(
                 f"adopt: source lacks merge key column(s) {missing}")
         rows = payload.count()
+        schema = _with_bookkeeping(payload.schema, self.seq_col,
+                                   self.DELETED)
         base, _, name = source.rpartition("/")
         manifest = {"app_id": self.app_id, "version": -1,
                     "rows": int(rows), "data_dir": name,
                     "data_base": base, "plain_payload": True,
                     "adopted_seq": int(seq), "adopted_from": source,
+                    "schema": json.dumps(schema.jsonValue()),
                     "txn": {}, "committed_at_ms": _commit_stamp_ms(None)}
         from systems_spark.state import fs_publish_text_exclusive
         if not fs_publish_text_exclusive(
@@ -607,9 +642,19 @@ class CdcTable:
         the single read choke point. An ADOPTED manifest
         (``plain_payload``) references a plain parquet directory that
         predates the log, so the bookkeeping columns are synthesized
-        here instead of read: adoption never rewrote a byte."""
-        df = spark.read.parquet(self._data_path(man))
-        if man.get("plain_payload"):
+        here instead of read: adoption never rewrote a byte.
+
+        The read schema comes from the manifest (its ``schema`` key), so
+        no footer-inference job runs; a manifest without the key (an
+        old table, an old adopted seed) falls back to inference."""
+        schema = _manifest_schema(man)
+        plain = man.get("plain_payload")
+        if schema is not None and plain:
+            schema = StructType([f for f in schema.fields if f.name
+                                 not in (self.seq_col, self.DELETED)])
+        reader = spark.read if schema is None else spark.read.schema(schema)
+        df = reader.parquet(self._data_path(man))
+        if plain:
             df = (df.withColumn(
                       self.seq_col,
                       F.lit(int(man.get("adopted_seq", 0))).cast("long"))
@@ -673,13 +718,9 @@ class CdcTable:
                 f"column(s) {sorted(supplied)} were DROPPED from "
                 f"{self.path}; writers must not supply them")
         if schema_types is None:
-            from pyspark.sql.types import StructType
-            if "schema" in man:
-                schema_types = {
-                    f.name: f.dataType for f in StructType.fromJson(
-                        json.loads(man["schema"])).fields}
-            else:
-                schema_types = {}
+            schema = _manifest_schema(man)
+            schema_types = ({} if schema is None else
+                            {f.name: f.dataType for f in schema.fields})
         for c in dropped:
             t = schema_types.get(c)
             batch = batch.withColumn(
@@ -775,12 +816,8 @@ class CdcTable:
             self._backoff(_attempt)
             man = self._latest_manifest(spark)
             cmap = self._column_map(man)
-            from pyspark.sql.types import StructType
-            phys_cols = [f.name for f in StructType.fromJson(
-                json.loads(man["schema"])).fields] \
-                if "schema" in man else \
-                [f.name for f in
-                 self._read_snapshot(spark, man).schema.fields]
+            phys_cols = (_manifest_schema(man)
+                         or self._read_snapshot(spark, man).schema).names
             inv = {p: l for l, p in cmap.items()}
             logical = [inv.get(p, p) for p in phys_cols]
             dead = set(self._dropped(man))
@@ -869,7 +906,7 @@ class CdcTable:
                         else batch.where(F.col(self.seq_col) > fence))
             self._enforce_constraints(man, to_check, "change-batch")
             # r13 (VERDICT r12 item 3): the (key, seq)-tie guard rides
-            # the merge fold's own window shuffle ("inline") instead of
+            # the merge's own key exchange ("inline") instead of
             # a separate eager batch-sized job per epoch. An ambiguous
             # batch now raises DURING the staging write — the staged
             # directory is dropped and the same ValueError surfaces
@@ -1112,6 +1149,8 @@ class CdcTable:
                 "rows": int(man.get("rows", 0)),
                 "data_dir": man["data_dir"],
                 "data_base": man.get("data_base", self.path)}
+        if "schema" in man:
+            seed["schema"] = man["schema"]
         if man.get("plain_payload"):
             # cloning an adopted table: the clone serves the same
             # plain source directory, synthesized the same way
@@ -1304,6 +1343,8 @@ class CdcTable:
                     "committed_at_ms": _commit_stamp_ms(prior_man)}
         if "data_base" in prior_man:  # noop over a clone's seed data
             manifest["data_base"] = prior_man["data_base"]
+        if "schema" in prior_man:  # same data, same schema
+            manifest["schema"] = prior_man["schema"]
         if prior_man.get("plain_payload"):
             # noop over an ADOPTED seed: the shared directory is still
             # the plain source, so the read-time synthesis must carry
@@ -2167,9 +2208,7 @@ class PartitionedCdcTable(CdcTable):
         return out
 
     def _empty_like(self, spark: SparkSession, man: dict) -> DataFrame:
-        from pyspark.sql.types import StructType
-        schema = StructType.fromJson(json.loads(man["schema"]))
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], _manifest_schema(man))
 
     def _read_buckets(self, spark: SparkSession, man: dict,
                       buckets) -> DataFrame:
@@ -2181,8 +2220,7 @@ class PartitionedCdcTable(CdcTable):
         # files lack the new columns and the reader must NULL-fill them
         # by name — exactly what an explicit read schema does, with no
         # mergeSchema footer sweep
-        from pyspark.sql.types import StructType
-        schema = StructType.fromJson(json.loads(man["schema"]))
+        schema = _manifest_schema(man)
         if man.get("plain_dirs"):
             # ADOPTED seed data: the files predate the log and carry no
             # bookkeeping columns — synthesize them, exactly like the
@@ -2207,9 +2245,9 @@ class PartitionedCdcTable(CdcTable):
         manifest snapshot schema minus the tombstone flag, plus the op
         column — explicit so old delta files NULL-fill columns a later
         schema evolution added, by name, like the buckets do."""
-        from pyspark.sql.types import StringType, StructField, StructType
-        snap = StructType.fromJson(json.loads(man["schema"]))
-        fields = [f for f in snap.fields if f.name != self.DELETED]
+        from pyspark.sql.types import StringType, StructField
+        fields = [f for f in _manifest_schema(man).fields
+                  if f.name != self.DELETED]
         fields.append(StructField(self.op_col, StringType(), True))
         return StructType(fields)
 
@@ -2584,24 +2622,22 @@ class PartitionedCdcTable(CdcTable):
                    fence: "int | None", preimages: bool) -> DataFrame:
         """``diff(X, merge(X, C))`` computed directly from the pruned
         pre-state ``X`` and the window's change files ``C``: fold C to
-        its per-key winner (the exact fold the merge would run —
-        shared :func:`fold_last_change` core, inline tie guard, fence
-        at entry), full-join with X on the key, and emit each key's
-        0–2 change rows by replaying the merge decision (change wins
-        iff the pre row is absent or strictly older). Stale/fenced
-        changes and equal-seq replays emit nothing — identical
-        semantics to diffing the materialized endpoints, at half the
-        plan."""
-        from systems_spark.operators.cdc import fold_last_change
+        its per-key winner (the merge kernel over an EMPTY snapshot —
+        the planner prunes the empty branch, leaving the batch fold
+        with the same inline tie guard and fence at entry), full-join
+        with X on the key, and emit each key's 0–2 change rows by
+        replaying the merge decision (change wins iff the pre row is
+        absent or strictly older). Stale/fenced changes and equal-seq
+        replays emit nothing — identical semantics to diffing the
+        materialized endpoints, at half the plan."""
+        from systems_spark.operators.cdc import merge_cdc_fenced
 
         seq, D = self.seq_col, self.DELETED
         payload = [c for c in pre.columns if c not in (seq, D)]
-        if fence is not None:
-            ch = ch.where(F.col(seq) > int(fence))
-        last = fold_last_change(ch, self.key_cols, payload, seq,
-                                self.op_col, D,
-                                check_unique_seq="inline",
-                                what="changes_between")
+        last = merge_cdc_fenced(pre.limit(0), ch, self.key_cols,
+                                seq_col=seq, op_col=self.op_col,
+                                deleted_col=D, min_seq=fence,
+                                check_unique_seq="inline")
         A, C = pre.alias("A"), last.alias("C")
         cond = [F.col(f"A.{k}").eqNullSafe(F.col(f"C.{k}"))
                 for k in self.key_cols]
@@ -2930,12 +2966,8 @@ class PartitionedCdcTable(CdcTable):
             raise ValueError(
                 f"adopt: source lacks merge key column(s) {missing}")
         rows = payload.count()
-        from pyspark.sql.types import (BooleanType, LongType,
-                                       StructField, StructType)
-        schema = StructType(
-            list(payload.schema.fields)
-            + [StructField(self.seq_col, LongType(), True),
-               StructField(self.DELETED, BooleanType(), True)])
+        schema = _with_bookkeeping(payload.schema, self.seq_col,
+                                   self.DELETED)
         base, _, name = source.rpartition("/")
         manifest = {"app_id": self.app_id, "version": -1,
                     "rows": int(rows),
@@ -3301,8 +3333,8 @@ class PartitionedCdcTable(CdcTable):
         absent rows."""
         key_tuples = self._lookup_key_tuples(keys)
         man = self._latest_manifest(spark)
-        from pyspark.sql.types import StructField, StructType
-        schema = StructType.fromJson(json.loads(man["schema"]))
+        from pyspark.sql.types import StructField
+        schema = _manifest_schema(man)
         frame = spark.createDataFrame(
             key_tuples,
             StructType([StructField(k, schema[k].dataType, True)
