@@ -11,6 +11,13 @@ Spark-first, two physical strategies (chosen per scale, same logical result):
   join, JVM-side dot product (functions/similarity.py), per-query window
   top-k. The item side is broadcast, so the query side never shuffles; at
   N_items ≲ 1M × 128 dims this is the right plan even on a big cluster.
+  The score is a ``zip_with`` + ``aggregate`` fold, which runs interpreted
+  (a ``CodegenFallback``), unless the item side is a pinned frame whose
+  vectors all have one length ``d`` small enough for
+  ``similarity.unrolls``: then the score is the same fold unrolled into
+  ``d`` terms (``similarity.unrolled_score``), bit-identical and in
+  generated code. ``d`` is learned once per pin (one min/max aggregate,
+  memoized through ``pinning.prepared``).
 
 - **lsh** (the 100 TB path): deterministic random-hyperplane LSH (SimHash
   family). Each vector gets ``n_tables`` bucket signatures of ``n_planes``
@@ -35,8 +42,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from systems_spark.functions.hashing import unit_uniform
-from systems_spark.functions.similarity import cosine_similarity, dot_product
+from systems_spark.functions.similarity import (cosine_similarity, dot_product,
+                                                unrolled_score, unrolls)
 from systems_spark.operators.base import Operator
+from systems_spark.pinning import prepared
 
 
 def _score(metric: str, q, it):
@@ -56,6 +65,15 @@ def _score(metric: str, q, it):
             F.lit(0.0), lambda acc, v: acc + v,
         )
     raise ValueError(f"unknown metric {metric!r}")
+
+
+def _uniform_length(items: DataFrame, vec_col: str) -> Optional[int]:
+    """The one length of every non-NULL vector in ``items``, or None if
+    lengths differ (or there is none)."""
+    v = F.col(vec_col)
+    lo, hi = items.where(v.isNotNull()).select(
+        F.min(F.size(v)), F.max(F.size(v))).first()
+    return lo if lo is not None and lo == hi else None
 
 
 def _pq_subvec(vec, m: int, sub: int):
@@ -272,9 +290,7 @@ class QueryANN(Operator):
                 if self.broadcast else df
             )
             joined = q.crossJoin(self._items()).withColumn(
-                "ann_score",
-                _score(self.metric, F.col(self.query_vec_col), F.col("_ann_vec")),
-            )
+                "ann_score", self._exact_score())
             return self._rank_topk(joined)
         if self.strategy == "lsh":
             return self._transform_lsh(df)
@@ -285,6 +301,18 @@ class QueryANN(Operator):
         if self.strategy == "ivf_pq":
             return self._transform_ivf_pq(df)
         raise ValueError(f"unknown strategy {self.strategy!r}")
+
+    def _exact_score(self):
+        """The exact path's score: unrolled over a pinned item side of one
+        short enough vector length, the higher-order fold otherwise."""
+        d = prepared(self.items_df, ("ann_item_length", self.item_vec_col),
+                     lambda items: _uniform_length(items, self.item_vec_col),
+                     pinned_only=True)
+        if d is not None and unrolls(self.metric, d):
+            return unrolled_score(self.metric, self.query_vec_col,
+                                  "_ann_vec", d)
+        return _score(self.metric, F.col(self.query_vec_col),
+                      F.col("_ann_vec"))
 
     def _transform_pq(self, df: DataFrame) -> DataFrame:
         """Product quantization with asymmetric distance (ADC) + exact

@@ -9,6 +9,12 @@ Spark-first: a broadcast join against the embedding table; the vector is an
 ``array<float>`` column. At 100 TB the embedding table (items) is usually
 small enough to broadcast (e.g. 10M × 128 float ≈ 5 GB is NOT — then
 ``broadcast=False`` and a bucketed table co-locates the join instead).
+
+The deduped table side is built through ``pinning.prepared``: over a
+pinned embedding table it is built and pinned once, on the first request,
+and every later request joins that view with no shuffle. Which of several
+rows with one id is kept is arbitrary, but over a pinned table it is fixed
+for the pin's lifetime; over an unpinned table it may differ per request.
 """
 
 from __future__ import annotations
@@ -17,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from systems_spark.operators.base import Operator
+from systems_spark.pinning import prepared
 from systems_spark.schema import Schema
 
 
@@ -32,11 +39,16 @@ class EmbeddingLookup(Operator):
         self.how = how
         self.requires = (id_col,)
 
-    def transform(self, df: DataFrame) -> DataFrame:
-        emb = self.embeddings_df.select(
+    def _dedup(self, embeddings: DataFrame) -> DataFrame:
+        return embeddings.select(
             F.col(self.id_col),
             F.col(self.embedding_col).alias(self.output_col),
         ).dropDuplicates([self.id_col])
+
+    def transform(self, df: DataFrame) -> DataFrame:
+        emb = prepared(self.embeddings_df,
+                       ("embedding_lookup", self.id_col, self.embedding_col,
+                        self.output_col), self._dedup)
         if self.broadcast:
             emb = F.broadcast(emb)
         return df.join(emb, on=self.id_col, how=self.how)

@@ -17,6 +17,10 @@ bucketed feature table co-locates the join with zero shuffle of the big side.
 
 For streaming serving the same operator works as a stream-static join
 (streaming/ runtime).
+
+The deduped feature side is built through ``pinning.prepared``: over a
+pinned feature table it is built and pinned once, on the first request,
+and every later request joins that view with no shuffle.
 """
 
 from __future__ import annotations
@@ -27,6 +31,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from systems_spark.operators.base import Operator
+from systems_spark.pinning import prepared
 from systems_spark.schema import Schema
 
 
@@ -47,17 +52,27 @@ class QueryFeatureTable(Operator):
         self.how = how
         self.requires = (entity_col,)
 
-    def _feature_frame(self) -> DataFrame:
-        cols = self.features
-        if cols is None:
-            cols = [c for c in self.features_df.columns if c != self.entity_col]
+    def _columns(self) -> list:
+        if self.features is not None:
+            return self.features
+        return [c for c in self.features_df.columns if c != self.entity_col]
+
+    def _dedup(self, features: DataFrame) -> DataFrame:
         sel = [F.col(self.entity_col)] + [
-            F.col(c).alias(f"{self.prefix}{c}" if self.prefix else c) for c in cols
+            F.col(c).alias(f"{self.prefix}{c}" if self.prefix else c)
+            for c in self._columns()
         ]
         # one row per entity id, but which of several duplicate rows is
         # kept is arbitrary (not last-write-wins); EmbeddingLookup dedups
-        # the same way. A deterministic pick is still open.
-        return self.features_df.select(*sel).dropDuplicates([self.entity_col])
+        # the same way. Over a pinned table the pick is fixed for the
+        # pin's lifetime (the view is pinned once); over an unpinned table
+        # it may differ per request. A deterministic pick is still open.
+        return features.select(*sel).dropDuplicates([self.entity_col])
+
+    def _feature_frame(self) -> DataFrame:
+        key = ("query_feature_table", self.entity_col,
+               tuple(self._columns()), self.prefix)
+        return prepared(self.features_df, key, self._dedup)
 
     def transform(self, df: DataFrame) -> DataFrame:
         if self.strict and df.where(F.col(self.entity_col).isNotNull()).limit(1).count() == 0:
@@ -74,7 +89,9 @@ class QueryFeatureTable(Operator):
         return out
 
     def compute_output_schema(self, input_schema: Schema) -> Schema:
-        feat = Schema.of(self._feature_frame()).excluding([self.entity_col])
+        # the lazy build, not the prepared view: a schema costs no job
+        feat = Schema.of(self._dedup(self.features_df)).excluding(
+            [self.entity_col])
         out = input_schema + feat
         if not self.include_id:
             out = out.excluding([self.entity_col])

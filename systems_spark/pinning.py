@@ -32,13 +32,28 @@ Both pin flavors place a ``LogicalRDD`` leaf in the plan, which erases
 the planner's size estimate (no auto-broadcast from stats) — the same
 trade r12 measured and accepted per call site; call sites that NEED the
 planner estimate stay lazy (ngram ``transform`` sizes, profile counts).
+
+``prepared(source, key, build)`` is the serving memo: an operator that
+derives a static side from a pinned source (a dedup, a projection, a
+learned scalar) builds it once per pin instead of once per request.
 """
 
 from __future__ import annotations
 
+import threading
+import weakref
+
 from pyspark.sql import DataFrame
 
-__all__ = ["pin", "unpin"]
+__all__ = ["pin", "prepared", "unpin"]
+
+# (application id, pin RDD id, caller key) -> prepared view or value. A hit
+# reads the dict without a lock; a miss builds under the lock, so a first
+# build happens once when requests arrive on threads (and misses on other
+# pins wait for it meanwhile)
+_PREPARED: dict = {}
+_PREPARED_LOCK = threading.RLock()
+_MISSING = object()
 
 
 def _has_checkpoint_dir(df: DataFrame) -> bool:
@@ -68,19 +83,112 @@ def pin(df: DataFrame, corpus_scale: bool = False,
     return df.localCheckpoint(eager=eager)
 
 
+def _pin_rdd(df: DataFrame):
+    """The JVM RDD under ``df`` when the plan root is a pin's
+    ``LogicalRDD``, else None."""
+    try:
+        plan = df._jdf.queryExecution().analyzed()
+        if plan.getClass().getSimpleName() == "LogicalRDD":
+            return plan.rdd()
+    except Exception:  # noqa: BLE001 - introspection must never break a plan
+        pass
+    return None
+
+
+def _pin_id(df: DataFrame, rdd) -> tuple:
+    # RDD ids restart with every SparkContext; the application id keeps a
+    # memo entry from one context from matching a pin of the next
+    return (df.sparkSession.sparkContext.applicationId, rdd.id())
+
+
+def _materialized_rdd(df: DataFrame):
+    """The JVM RDD of ``df`` when ``df`` is exactly a materialized pin: its
+    plan root is a ``LogicalRDD`` with a storage level (``localCheckpoint``)
+    or a checkpoint. Else None: a frame built with ``createDataFrame`` also
+    has a ``LogicalRDD`` root, but neither."""
+    rdd = _pin_rdd(df)
+    try:
+        if rdd is not None and (rdd.getStorageLevel().isValid()
+                                or rdd.isCheckpointed()):
+            return rdd
+    except Exception:  # noqa: BLE001 - introspection must never break a plan
+        pass
+    return None
+
+
+def prepared(source: DataFrame, key, build, pinned_only: bool = False):
+    """``build(source)``, computed once per pinned source.
+
+    When ``source`` is a materialized pin, the result is memoized under
+    ``(pin, key)``: a DataFrame result is pinned eagerly on the first
+    call, in the source pin's flavor (a reliable checkpoint for a reliably
+    checkpointed source, else a ``localCheckpoint``: one more copy of the
+    view in executor storage), and its rows are then fixed for the source
+    pin's lifetime; any other value (a scalar learned from the source) is kept
+    as is. Every later call with the same pin and ``key`` returns it with
+    no job. ``key`` must name everything ``build`` depends on besides the
+    source (the operator and its column parameters).
+
+    Any other source gets ``build(source)`` on every call, lazily for a
+    frame: a parquet table or a view can change between requests, and
+    the plan must see the change. With ``pinned_only`` it gets None and
+    ``build`` never runs: for a value only worth learning once per pin (a
+    scalar ``build`` runs its job on every call).
+
+    Lifetime: :func:`unpin` on the source releases its views' storage. When
+    the source frame object is garbage collected its entries leave the
+    memo, and Spark's context cleaner frees each view's blocks once no
+    plan references the view any more (a result frame still being read
+    keeps it alive)."""
+    rdd = _materialized_rdd(source)
+    if rdd is None:
+        return None if pinned_only else build(source)
+    memo = _pin_id(source, rdd) + (key,)
+    out = _PREPARED.get(memo, _MISSING)  # a dict read is atomic: no lock
+    if out is not _MISSING:
+        return out
+    with _PREPARED_LOCK:
+        out = _PREPARED.get(memo, _MISSING)
+        if out is _MISSING:
+            out = build(source)
+            if isinstance(out, DataFrame):
+                # the view's pin is as reliable as its source's: a view of
+                # a reliable checkpoint is checkpointed reliably too
+                out = pin(out, corpus_scale=rdd.getCheckpointFile()
+                          .isDefined(), eager=True)
+            _PREPARED[memo] = out
+            weakref.finalize(source, _forget, memo)
+    return out
+
+
+def _forget(memo) -> None:
+    with _PREPARED_LOCK:
+        _PREPARED.pop(memo, None)
+
+
 def unpin(df: DataFrame) -> None:
     """Release a pin's executor storage — call on a SUPERSEDED generation
     after the superseding pin is materialized (never before: the new
     generation's lineage reads the old pin's blocks, and a truncated
-    lineage cannot recompute them).
+    lineage cannot recompute them). The views :func:`prepared` built from
+    the pin are released with it.
 
     Best-effort by design: works when ``df`` is exactly a pinned frame
     (plan root is the pin's ``LogicalRDD``); anything else is a silent
     no-op, so callers can pass whatever they held without bookkeeping
     the pin provenance."""
+    rdd = _pin_rdd(df)
+    if rdd is None:
+        return
     try:
-        plan = df._jdf.queryExecution().analyzed()
-        if plan.getClass().getSimpleName() == "LogicalRDD":
-            plan.rdd().unpersist(False)
+        if _PREPARED:  # nothing prepared: no memo scan, no application id
+            pin_id = _pin_id(df, rdd)
+            with _PREPARED_LOCK:
+                views = [_PREPARED.pop(m) for m in list(_PREPARED)
+                         if m[:2] == pin_id]
+            for view in views:
+                if isinstance(view, DataFrame):
+                    unpin(view)
+        rdd.unpersist(False)
     except Exception:  # noqa: BLE001 - storage release is advisory
         pass

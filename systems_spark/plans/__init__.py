@@ -36,6 +36,50 @@ def count_exchanges(df: DataFrame) -> int:
     return len(re.findall(r"\bExchange\b", plan))
 
 
+def codegen_fallbacks(df: DataFrame) -> list:
+    """Expressions of the executed plan that run outside generated code:
+    every ``CodegenFallback``, such as the higher-order functions
+    ``aggregate``, ``zip_with`` and ``transform``. Whole-stage codegen
+    leaves the operator that holds one out of its generated stage, and
+    the interpreter evaluates the expression row by row (a higher-order
+    function element by element). A fallback that slips into a hot
+    projection is a silent slowdown no result check sees.
+
+    Returns ``"<operator>: <expression>"`` strings in plan order, the
+    outermost fallback of each expression tree only (its children run
+    inside it). Empty means every expression compiles."""
+    from py4j.java_gateway import get_java_class
+
+    jvm = df.sparkSession._jvm
+    fallback = get_java_class(
+        jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback)
+    out = []
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def visit(op, e):
+        if fallback.isInstance(e):
+            out.append(f"{op}: {e.prettyName()}")
+            return
+        for c in seq(e.children()):
+            visit(op, c)
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        for e in seq(node.expressions()):
+            visit(node.nodeName(), e)
+        for c in seq(node.children()) + seq(node.innerChildren()):
+            walk(c)  # innerChildren: subqueries
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return out
+
+
 def has_broadcast_join(df: DataFrame) -> bool:
     return "BroadcastHashJoin" in formatted_plan(df) or \
         "BroadcastNestedLoopJoin" in formatted_plan(df)
