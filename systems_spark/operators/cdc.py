@@ -43,21 +43,67 @@ pipeline on plain parquet.
 
 from __future__ import annotations
 
+import datetime
+import decimal
+import math
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["apply_cdc", "apply_cdc_sql", "merge_cdc_fenced"]
+__all__ = ["apply_cdc", "apply_cdc_sql", "merge_cdc_fenced",
+           "quote_ident", "sql_literal"]
 
 _OPS = ("insert", "update", "delete")
 
 
-def _op_checked(op_col: str, what: str):
-    """An unknown op value becomes an explicit execution-time error,
-    never a silent drop or a silent upsert."""
-    return (F.when(F.col(op_col).isin(*_OPS), F.col(op_col))
-            .otherwise(F.raise_error(F.concat(
-                F.lit(f"{what}: unknown {op_col} value: "),
-                F.col(op_col)))))
+def quote_ident(name: str) -> str:
+    """``name`` as one backtick-quoted SQL identifier (a backtick inside
+    is doubled), so spaces, dots and backticks in a column name reach the
+    parser as a single top-level column."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def sql_literal(v) -> "str | None":
+    """SQL text of the literal ``F.lit(v)`` builds, or None for a type
+    with no text form here (dates with a time, bytes, ...). A string
+    holding a quote, a backslash or an unprintable character goes as
+    its UTF-8 bytes in hex cast to STRING, so its value never depends
+    on the parser's escape setting
+    (``spark.sql.parser.escapedStringLiterals``)."""
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "TRUE" if v else "FALSE"
+    if isinstance(v, int):
+        # typed by magnitude like F.lit: INT, else BIGINT
+        return str(int(v))
+    if isinstance(v, float):
+        if math.isnan(v):
+            return "CAST('NaN' AS DOUBLE)"
+        if math.isinf(v):
+            return f"CAST('{'-' if v < 0 else ''}Infinity' AS DOUBLE)"
+        return f"{float(v)!r}D"
+    if isinstance(v, str):
+        v = str(v)
+        if "'" in v or "\\" in v or not v.isprintable():
+            return f"CAST(X'{v.encode('utf-8').hex()}' AS STRING)"
+        return f"'{v}'"
+    if isinstance(v, decimal.Decimal) and v.is_finite():
+        return f"{v}BD"
+    if type(v) is datetime.date:
+        return f"DATE'{v.isoformat()}'"
+    return None
+
+
+def _op_checked(op_col: str, what: str) -> str:
+    """SQL text of the op column in which an unknown op value becomes an
+    explicit execution-time error, never a silent drop or a silent
+    upsert."""
+    op = quote_ident(op_col)
+    ops = ", ".join(f"'{o}'" for o in _OPS)
+    msg = sql_literal(f"{what}: unknown {op_col} value: ")
+    return (f"CASE WHEN {op} IN ({ops}) THEN {op} "
+            f"ELSE raise_error(concat({msg}, {op})) END")
 
 
 def _touched_join(snapshot: DataFrame, touched: DataFrame, key_cols,
@@ -77,7 +123,8 @@ def _check_unique_seq(changes: DataFrame, key_cols, seq_col: str,
                       what: str) -> None:
     """(key, seq) ties make 'last change wins' nondeterministic — raise
     with a sample instead of silently picking a winner."""
-    dup = (changes.groupBy(*key_cols, seq_col)
+    dup = (changes.groupBy(*[F.col(quote_ident(c))
+                             for c in key_cols + [seq_col]])
            .agg(F.count(F.lit(1)).alias("_n"))
            .where(F.col("_n") > 1).limit(3).collect())
     if dup:
@@ -109,7 +156,8 @@ def apply_cdc(snapshot: DataFrame, changes: DataFrame, key_cols,
     # op validation folded into the projection (no extra job), applied to
     # EVERY change — a garbage op must raise even when a later seq
     # supersedes it (silent acceptance would hide producer bugs)
-    changes = changes.withColumn(op_col, _op_checked(op_col, "apply_cdc"))
+    changes = changes.withColumn(op_col,
+                                 F.expr(_op_checked(op_col, "apply_cdc")))
     w = Window.partitionBy(*key_cols).orderBy(F.col(seq_col).desc())
     last = (changes
             .withColumn("_cdc_rn", F.row_number().over(w))
@@ -168,7 +216,18 @@ def merge_cdc_fenced(snapshot: DataFrame, changes: DataFrame, key_cols,
     small and sized (read from parquet), where a broadcast anti join
     would not shuffle it; callers that can prune (the bucketed layouts:
     touched buckets on commit, ``pending_buckets`` on a merge-on-read
-    fold) pass only those rows."""
+    fold) pass only those rows.
+
+    Built as SQL text: the tagged union, the ranking windows, the tie
+    guard and the op check are each one parsed expression
+    (``selectExpr``/``where``), not a Column tree. Every Column call is
+    at least one py4j round trip from the driver (several more with
+    PySpark's call-site capture on), and a table commit runs this on
+    every micro-batch: as a Column tree the merge alone cost about 650
+    round trips per commit; as text the parser builds the same plan
+    in-JVM. Identifiers are backtick-quoted (:func:`quote_ident`) and
+    literals rendered by :func:`sql_literal`, so any column name and
+    any error-message text parse as themselves."""
     key_cols = [key_cols] if isinstance(key_cols, str) else list(key_cols)
     cols = list(snapshot.columns)
     payload = [c for c in cols if c not in (seq_col, deleted_col)]
@@ -177,43 +236,45 @@ def merge_cdc_fenced(snapshot: DataFrame, changes: DataFrame, key_cols,
     if missing:
         raise ValueError(f"changes is missing columns: {missing}")
     what = "merge_cdc_fenced"
+    q = quote_ident
+    seq = q(seq_col)
     if min_seq is not None:
-        changes = changes.where(F.col(seq_col) > int(min_seq))
+        changes = changes.where(f"{seq} > {int(min_seq)}")
     if check_unique_seq and check_unique_seq != "inline":
         _check_unique_seq(changes, key_cols, seq_col, what)
     # op validation rides the projection of EVERY change — a garbage op
     # raises even when a later seq supersedes it
-    is_delete = _op_checked(op_col, what) == "delete"
-    src, seq = F.col("_cdc_src"), F.col(seq_col)
-    both = snapshot.select(*cols, F.lit(0).alias("_cdc_src")).unionByName(
-        changes.select(*[is_delete.alias(c) if c == deleted_col
-                         else F.col(c) for c in cols],
-                       F.lit(1).alias("_cdc_src")))
-    ranked = Window.partitionBy(*key_cols).orderBy(seq.desc(), src.asc())
-    whole = ranked.rowsBetween(Window.unboundedPreceding,
-                               Window.unboundedFollowing)
-    both = both.withColumns({
-        "_cdc_rn": F.row_number().over(ranked),
-        "_cdc_top": F.first(src).over(whole)})
+    is_delete = f"({_op_checked(op_col, what)}) = 'delete'"
+    # both sides project ``cols`` in one order, so a positional union
+    both = snapshot.selectExpr(*map(q, cols), "0 AS _cdc_src").union(
+        changes.selectExpr(*[f"{is_delete} AS {q(c)}" if c == deleted_col
+                             else q(c) for c in cols], "1 AS _cdc_src"))
+    keys = ", ".join(map(q, key_cols))
+    ranked = f"PARTITION BY {keys} ORDER BY {seq} DESC, _cdc_src ASC"
+    whole = (f"{ranked} ROWS BETWEEN UNBOUNDED PRECEDING "
+             f"AND UNBOUNDED FOLLOWING")
+    windows = [f"row_number() OVER ({ranked}) AS _cdc_rn",
+               f"first(_cdc_src) OVER ({whole}) AS _cdc_top"]
     # a change wins its key: keep that one row; else the snapshot rows
-    keep = F.when(F.col("_cdc_top") == 1, F.col("_cdc_rn") == 1) \
-        .otherwise(src == 0)
+    keep = "CASE WHEN _cdc_top = 1 THEN _cdc_rn = 1 ELSE _cdc_src = 0 END"
     if check_unique_seq == "inline":
-        both = both.withColumns({
-            "_cdc_ties": F.sum(src).over(
-                Window.partitionBy(*key_cols, seq_col)),
-            "_cdc_top_change": F.max(F.when(src == 1, seq)).over(whole)})
-        # null-safe: max skips NULLs, so a NULL seq is a key's top
-        # change only when all of its changes have one
-        tied = ((src == 1) & seq.eqNullSafe(F.col("_cdc_top_change"))
-                & (F.col("_cdc_ties") > 1))
-        keep = F.when(tied, F.raise_error(F.concat(
-            F.lit(f"{what}: (key, {seq_col}) must be unique within a "
-                  f"change batch — 'last change wins' is "
-                  f"nondeterministic under ties. Duplicated: "),
-            F.concat_ws(",", *[F.col(k).cast("string") for k in key_cols],
-                        seq.cast("string"))))).otherwise(keep)
-    return both.where(keep).select(*cols)
+        windows += [
+            f"sum(_cdc_src) OVER (PARTITION BY {keys}, {seq}) AS _cdc_ties",
+            # null-safe: max skips NULLs, so a NULL seq is a key's top
+            # change only when all of its changes have one
+            f"max(CASE WHEN _cdc_src = 1 THEN {seq} END) OVER ({whole}) "
+            f"AS _cdc_top_change"]
+        msg = sql_literal(
+            f"{what}: (key, {seq_col}) must be unique within a change "
+            f"batch — 'last change wins' is nondeterministic under ties. "
+            f"Duplicated: ")
+        dup = ", ".join(f"CAST({c} AS STRING)"
+                        for c in [*map(q, key_cols), seq])
+        keep = (f"CASE WHEN _cdc_src = 1 AND {seq} <=> _cdc_top_change "
+                f"AND _cdc_ties > 1 THEN raise_error(concat({msg}, "
+                f"concat_ws(',', {dup}))) ELSE {keep} END")
+    return (both.selectExpr("*", *windows).where(keep)
+            .selectExpr(*map(q, cols)))
 
 
 def apply_cdc_sql(snapshot_sql: str, changes_sql: str, key_cols,

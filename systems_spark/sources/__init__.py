@@ -18,6 +18,7 @@ encode the scale decisions a 100 TB pipeline needs made explicitly:
 
 from __future__ import annotations
 
+import re
 from typing import Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
@@ -444,15 +445,64 @@ def _manifest_path(path: str) -> str:
     return path.rstrip("/") + "/" + MANIFEST_NAME
 
 
+class _HadoopHandles:
+    """The JVM classes and FileSystem handles of ONE SparkContext.
+
+    Resolving ``jvm.org.apache.hadoop.fs.Path`` walks the package one
+    py4j round trip per name component, and ``getFileSystem`` is two
+    more; a commit-log read pays that on every marker probe. The
+    handles are kept for the context they were resolved under: a
+    stopped and restarted context (a new ``SparkContext`` object, its
+    own Hadoop configuration, possibly a new gateway) resolves afresh.
+    One FileSystem per scheme and authority, as Hadoop's own
+    ``FileSystem.get`` cache keys them."""
+
+    def __init__(self, sc):
+        jvm = sc._jvm
+        self.sc = sc
+        self.Path = jvm.org.apache.hadoop.fs.Path
+        # commons-io ships on Spark's classpath; reads a full stream
+        self.IOUtils = jvm.org.apache.commons.io.IOUtils
+        self.conf = sc._jsc.hadoopConfiguration()
+        self.fs = {}
+
+
+_HADOOP: "_HadoopHandles | None" = None
+_FS_ROOT = re.compile(r"[A-Za-z][A-Za-z0-9+.-]*:(//[^/]*)?")
+
+
+def _hadoop(spark: SparkSession) -> _HadoopHandles:
+    global _HADOOP
+    sc = spark.sparkContext
+    h = _HADOOP
+    if h is None or h.sc is not sc:
+        h = _HADOOP = _HadoopHandles(sc)
+    return h
+
+
+def hadoop_fs(spark: SparkSession, path: str):
+    """``(FileSystem, Path)`` for ``path`` through the Hadoop API — the
+    resolver Spark's own readers and writers use — with the class and
+    the FileSystem cached per SparkContext (:class:`_HadoopHandles`):
+    one py4j round trip (the Path constructor) after the first call,
+    where resolving afresh costs eight."""
+    h = _hadoop(spark)
+    p = h.Path(path)
+    m = _FS_ROOT.match(path)
+    root = m.group(0) if m else ""
+    fs = h.fs.get(root)
+    if fs is None:
+        fs = h.fs[root] = p.getFileSystem(h.conf)
+    return fs, p
+
+
 def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
     """Write a small text file THROUGH the Hadoop FileSystem API — the
     same resolver Spark's own writers use — so the manifest lands next to
     the data on s3://, hdfs://, file://, ... alike (ADVICE r4: a local
     ``open()`` here would succeed for the parquet and then throw for the
     manifest on any remote filesystem)."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_fs(spark, path)
     out = fs.create(p, True)
     try:
         out.write(bytearray(text.encode("utf-8")))
@@ -461,14 +511,10 @@ def _fs_write_text(spark: SparkSession, path: str, text: str) -> None:
 
 
 def _fs_read_text(spark: SparkSession, path: str) -> str:
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_fs(spark, path)
     stream = fs.open(p)
     try:
-        # commons-io ships on Spark's classpath; reads the full stream
-        return jvm.org.apache.commons.io.IOUtils.toString(
-            stream, "UTF-8")
+        return _hadoop(spark).IOUtils.toString(stream, "UTF-8")
     finally:
         stream.close()
 

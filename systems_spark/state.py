@@ -40,11 +40,12 @@ Commit discipline (shared with ``streaming/sinks.py``):
   attempt and is recomputed.
 
 At 100 TB the store is the same pattern at lake scale: one parquet
-dataset per state table, one tiny marker object per version, a single
-``exists`` call on the hot path.  Keys include the applicationId so two
-concurrent sessions never share (or clobber) state; a real deployment
-would swap the applicationId for a pipeline-run/version id via
-``key=``.
+dataset per state table, one tiny marker object per version, one marker
+read on the hot path (the marker records the written schema, so a hit
+reads the data with no footer-inference job).  Keys include the
+applicationId so two concurrent sessions never share (or clobber)
+state; a real deployment would swap the applicationId for a
+pipeline-run/version id via ``key=``.
 """
 
 from __future__ import annotations
@@ -56,8 +57,9 @@ from hashlib import md5
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from systems_spark.sources import _fs_read_text, _fs_write_text
+from systems_spark.sources import _fs_read_text, _fs_write_text, hadoop_fs
 
 __all__ = ["StateStore", "fs_write_text_atomic",
            "fs_publish_text_exclusive"]
@@ -74,10 +76,8 @@ def fs_write_text_atomic(spark: SparkSession, path: str, text: str) -> None:
     never exposes a partial object (PUTs are all-or-nothing there)."""
     tmp = f"{path}.inprogress"
     _fs_write_text(spark, tmp, text)
-    jvm = spark._jvm
-    src = jvm.org.apache.hadoop.fs.Path(tmp)
-    dst = jvm.org.apache.hadoop.fs.Path(path)
-    fs = src.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, src = hadoop_fs(spark, tmp)
+    dst = hadoop_fs(spark, path)[1]
     if fs.exists(dst):  # a concurrent retry already committed
         fs.delete(src, False)
         return
@@ -164,9 +164,8 @@ class StateStore:
         return f"{path}/{_MARKER}"
 
     def _exists(self, spark: SparkSession, path: str) -> bool:
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()).exists(p)
+        fs, p = hadoop_fs(spark, path)
+        return fs.exists(p)
 
     # -- the API ----------------------------------------------------------------
     def is_committed(self, spark: SparkSession, tag: str,
@@ -197,30 +196,39 @@ class StateStore:
         else:
             spark = df.sparkSession
         path = self._path(spark, tag, key)
-        if not self._exists(spark, self._marker(path)):
-            frame = df() if callable(df) else df
-            frame.write.mode("overwrite").parquet(path)
-            written = spark.read.parquet(path)
-            h = F.xxhash64(*[F.col(c) for c in written.columns]) \
-                .cast("decimal(38,0)")
-            row = written.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.coalesce(F.sum(h), F.lit(0).cast("decimal(38,0)"))
-                .alias("checksum")).collect()[0]
-            manifest = {"tag": tag, "rows": int(row["rows"]),
-                        "checksum": str(row["checksum"])}
-            if key is not None:
-                # the explicit scope rides in the manifest so retention
-                # jobs can resolve an entry back to (key, tag) — the
-                # pair invalidate() needs (r12: CdcSkippingIndex.vacuum
-                # reclaims per-bucket entries whose bucket path a merge
-                # moved). applicationId-scoped entries stay keyless:
-                # they die with the app and sweep() already ages them.
-                manifest["key"] = key
-            # marker LAST, atomically = the commit point
-            fs_write_text_atomic(spark, self._marker(path),
-                                 json.dumps(manifest, sort_keys=True))
-        return spark.read.parquet(path)
+        committed = self._read_marker(spark, self._marker(path))
+        if committed is not None:
+            # the marker records the written schema, so a hit runs no
+            # footer-inference job; a marker written before it did
+            # still infers
+            schema = committed.get("schema")
+            reader = (spark.read if schema is None else spark.read.schema(
+                StructType.fromJson(json.loads(schema))))
+            return reader.parquet(path)
+        frame = df() if callable(df) else df
+        frame.write.mode("overwrite").parquet(path)
+        written = spark.read.parquet(path)
+        h = F.xxhash64(*[F.col(c) for c in written.columns]) \
+            .cast("decimal(38,0)")
+        row = written.agg(
+            F.count(F.lit(1)).alias("rows"),
+            F.coalesce(F.sum(h), F.lit(0).cast("decimal(38,0)"))
+            .alias("checksum")).collect()[0]
+        manifest = {"tag": tag, "rows": int(row["rows"]),
+                    "checksum": str(row["checksum"]),
+                    "schema": json.dumps(written.schema.jsonValue())}
+        if key is not None:
+            # the explicit scope rides in the manifest so retention
+            # jobs can resolve an entry back to (key, tag) — the
+            # pair invalidate() needs (r12: CdcSkippingIndex.vacuum
+            # reclaims per-bucket entries whose bucket path a merge
+            # moved). applicationId-scoped entries stay keyless:
+            # they die with the app and sweep() already ages them.
+            manifest["key"] = key
+        # marker LAST, atomically = the commit point
+        fs_write_text_atomic(spark, self._marker(path),
+                             json.dumps(manifest, sort_keys=True))
+        return written
 
     def materialize_bucketed(self, df: DataFrame, tag: str, bucket_col: str,
                              buckets: int = 32,
@@ -255,7 +263,11 @@ class StateStore:
     def manifest(self, spark: SparkSession, tag: str,
                  key: "str | None" = None) -> "dict | None":
         """The committed marker's manifest, or None if uncommitted."""
-        path = self._marker(self._path(spark, tag, key))
+        return self._read_marker(spark,
+                                 self._marker(self._path(spark, tag, key)))
+
+    def _read_marker(self, spark: SparkSession,
+                     path: str) -> "dict | None":
         if not self._exists(spark, path):
             return None
         try:
@@ -270,9 +282,7 @@ class StateStore:
         operational inventory a retention job sweeps over. Uncommitted
         (aborted) directories are listed with ``manifest=None`` so they
         can be reclaimed too."""
-        jvm = spark._jvm
-        root = jvm.org.apache.hadoop.fs.Path(self.root)
-        fs = root.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, root = hadoop_fs(spark, self.root)
         if not fs.exists(root):
             return []
         out = []
@@ -280,9 +290,8 @@ class StateStore:
             if not status.isDirectory():
                 continue
             path = status.getPath().toString()
-            marker = jvm.org.apache.hadoop.fs.Path(f"{path}/{_MARKER}")
             manifest = None
-            if fs.exists(marker):
+            if fs.exists(hadoop_fs(spark, f"{path}/{_MARKER}")[1]):
                 try:
                     manifest = json.loads(_fs_read_text(spark, f"{path}/{_MARKER}"))
                 except ValueError as e:
@@ -303,7 +312,6 @@ class StateStore:
         store never reads the clock itself). Markers are deleted FIRST so
         a concurrent reader never sees committed-but-vanishing data.
         Returns the deleted paths."""
-        jvm = spark._jvm
         deleted = []
         for entry in self.entries(spark):
             committed = entry["manifest"] is not None
@@ -313,13 +321,11 @@ class StateStore:
                 continue
             if older_than_ms is not None and entry["modified_ms"] >= older_than_ms:
                 continue
-            fs = jvm.org.apache.hadoop.fs.Path(entry["path"]).getFileSystem(
-                spark._jsc.hadoopConfiguration())
-            marker = jvm.org.apache.hadoop.fs.Path(
-                f"{entry['path']}/{_MARKER}")
+            fs, d = hadoop_fs(spark, entry["path"])
+            marker = hadoop_fs(spark, f"{entry['path']}/{_MARKER}")[1]
             if fs.exists(marker):
                 fs.delete(marker, False)
-            fs.delete(jvm.org.apache.hadoop.fs.Path(entry["path"]), True)
+            fs.delete(d, True)
             deleted.append(entry["path"])
         return deleted
 
@@ -328,12 +334,9 @@ class StateStore:
         """Drop a tag's state (marker first, so a concurrent reader never
         sees committed-but-deleted data)."""
         path = self._path(spark, tag, key)
-        jvm = spark._jvm
-        fs = jvm.org.apache.hadoop.fs.Path(path).getFileSystem(
-            spark._jsc.hadoopConfiguration())
-        m = jvm.org.apache.hadoop.fs.Path(self._marker(path))
+        fs, d = hadoop_fs(spark, path)
+        m = hadoop_fs(spark, self._marker(path))[1]
         if fs.exists(m):
             fs.delete(m, False)
-        d = jvm.org.apache.hadoop.fs.Path(path)
         if fs.exists(d):
             fs.delete(d, True)

@@ -43,7 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from systems_spark.sources import _fs_read_text
+from systems_spark.operators.cdc import quote_ident, sql_literal
+from systems_spark.sources import _fs_read_text, hadoop_fs
 
 _COMMIT_DIR = "_commits"
 
@@ -155,18 +156,13 @@ class IdempotentParquetSink:
     def _data_path(self, batch_id: int) -> str:
         return f"{self.path}/batch_id={int(batch_id)}"
 
-    def _fs(self, spark: SparkSession, path: str):
-        jvm = spark._jvm
-        p = jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
     def is_committed(self, spark: SparkSession, batch_id: int) -> bool:
-        fs, p = self._fs(spark, self._marker_path(batch_id))
+        fs, p = hadoop_fs(spark, self._marker_path(batch_id))
         return fs.exists(p)
 
     def commits(self, spark: SparkSession) -> "dict[int, dict]":
         """{batch_id: manifest} for every committed batch of this app."""
-        fs, d = self._fs(spark, f"{self.path}/{_COMMIT_DIR}")
+        fs, d = hadoop_fs(spark, f"{self.path}/{_COMMIT_DIR}")
         if not fs.exists(d):
             return {}
         out = {}
@@ -278,6 +274,20 @@ class CdcTable:
     recorded schema (tables written before it was recorded) still read,
     through footer inference.
 
+    THE VIEW MEMO: a committed version never changes, so each handle
+    builds its snapshot read and its ``current()`` live view once per
+    (SparkSession, manifest) and hands out the same frames after that
+    — the merge's own snapshot read, every ``lookup`` and every
+    ``current()`` at an unchanged version skip rebuilding the scan on
+    the driver. Lifetime: the key is the manifest's full text, so a new
+    commit of any kind (merge, ``rename_column``, ``drop_column``,
+    ``restore``, ...) and a table re-created at the same path (a new
+    commit stamp) read fresh; a second session (or a restarted context)
+    gets its own frames; ``vacuum`` forgets the versions it drops, and
+    at most ``_VIEW_MEMO`` versions are held. Two reads at one version
+    are one frame, so joining them with each other needs aliases, like
+    any self join.
+
     ``schema_evolution="merge"`` opts into Delta-style ``mergeSchema``:
     a batch carrying NEW payload columns widens the table (standing rows
     NULL-fill), a batch MISSING payload columns NULL-fills them in its
@@ -303,6 +313,8 @@ class CdcTable:
         self.seq_col = seq_col
         self.op_col = op_col
         self.schema_evolution = schema_evolution
+        self._views: dict = {}
+        self._views_lock = threading.Lock()
 
     # -- version bookkeeping (marker discipline shared with the sink) -----
     # The commit log is SHARED across writers: markers are v{N}.json
@@ -326,12 +338,8 @@ class CdcTable:
         # writes clone-local dirs with no base, resolving here
         return f"{man.get('data_base', self.path)}/{man['data_dir']}"
 
-    def _fs(self, spark: SparkSession, path: str):
-        p = spark._jvm.org.apache.hadoop.fs.Path(path)
-        return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
-
     def versions(self, spark: SparkSession) -> "list[int]":
-        fs, d = self._fs(spark, f"{self.path}/{_COMMIT_DIR}")
+        fs, d = hadoop_fs(spark, f"{self.path}/{_COMMIT_DIR}")
         if not fs.exists(d):
             return []
         out = []
@@ -391,7 +399,7 @@ class CdcTable:
             except (OSError, ValueError):
                 start = None
         if start is not None:
-            fs, m = self._fs(spark, self._marker_path(start))
+            fs, m = hadoop_fs(spark, self._marker_path(start))
             if not fs.exists(m):
                 start = None  # hint names a vacuumed/unknown version
         if start is None:
@@ -400,7 +408,7 @@ class CdcTable:
                 return None
             start = vs[-1]
         while True:
-            fs, m = self._fs(spark, self._marker_path(start + 1))
+            fs, m = hadoop_fs(spark, self._marker_path(start + 1))
             if not fs.exists(m):
                 return start
             start += 1
@@ -451,10 +459,10 @@ class CdcTable:
         try:
             writer.parquet(target)
         except Exception as exc:  # noqa: BLE001 - cleanup, classify, re-raise
-            fs, d = self._fs(spark, target)
+            fs, d = hadoop_fs(spark, target)
             fs.delete(d, True)
-            m = re.search(r"[\w.]+: \(key, \w+\) must be unique within a "
-                          r"change batch[^\n]*", str(exc))
+            m = re.search(r"[\w.]+: \(key, [^\n]*?\) must be unique "
+                          r"within a change batch[^\n]*", str(exc))
             if m:
                 raise ValueError(m.group(0)) from exc
             raise
@@ -486,7 +494,7 @@ class CdcTable:
         writer per app_id (the streaming-query model) makes the
         remaining check-to-publish window safe: a marker appearing in
         it can only be another app's, whose data dir is disjoint."""
-        fs_, m_ = self._fs(spark, self._marker_path(version))
+        fs_, m_ = hadoop_fs(spark, self._marker_path(version))
         if fs_.exists(m_):
             raise ConcurrentCommitError(
                 f"version {version} of {self.path} is already committed")
@@ -516,7 +524,7 @@ class CdcTable:
         if not fs_publish_text_exclusive(
                 spark, self._marker_path(version),
                 json.dumps(manifest, sort_keys=True)):
-            fs, d = self._fs(spark, target)
+            fs, d = hadoop_fs(spark, target)
             fs.delete(d, True)
             raise ConcurrentCommitError(
                 f"version {version} of {self.path} was committed by a "
@@ -536,19 +544,17 @@ class CdcTable:
         time.sleep(min(0.05 * (2 ** attempt), 0.8) * phase)
 
     def _manifests(self, spark: SparkSession) -> "list[dict]":
-        return [json.loads(_fs_read_text(
-                    spark, self._fs(spark, self._marker_path(v))[1]
-                    .toString()))
+        return [json.loads(_fs_read_text(spark, self._marker_path(v)))
                 for v in self.versions(spark)]
 
     def _manifest_at(self, spark: SparkSession, version: int) -> dict:
         """One targeted marker read — a direct exists+read probe,
         never a listing of the whole history (the log grows forever;
         a change-feed window read does two of these per refresh)."""
-        fs, m = self._fs(spark, self._marker_path(version))
+        fs, m = hadoop_fs(spark, self._marker_path(version))
         if not fs.exists(m):
             raise ValueError(f"version {version} is not committed")
-        return json.loads(_fs_read_text(spark, m.toString()))
+        return json.loads(_fs_read_text(spark, self._marker_path(version)))
 
     def _latest_manifest(self, spark: SparkSession) -> dict:
         # hint + probe, not a directory listing — this runs on every
@@ -556,9 +562,7 @@ class CdcTable:
         v = self._latest_version(spark)
         if v is None:
             raise ValueError("CdcTable.initialize before reading")
-        return json.loads(_fs_read_text(
-            spark, self._fs(spark, self._marker_path(v))[1]
-            .toString()))
+        return json.loads(_fs_read_text(spark, self._marker_path(v)))
 
     # -- lifecycle -----------------------------------------------------------
     def initialize(self, seed: DataFrame, seq: int = 0) -> None:
@@ -567,7 +571,7 @@ class CdcTable:
         including a CONCURRENT one, which loses the seed-commit race
         and defers to the winner's seed)."""
         spark = seed.sparkSession
-        fs, m = self._fs(spark, self._marker_path(-1))
+        fs, m = hadoop_fs(spark, self._marker_path(-1))
         if fs.exists(m):
             return
         snap = (seed.withColumn(self.seq_col, F.lit(int(seq)).cast("long"))
@@ -598,7 +602,7 @@ class CdcTable:
         the table path (or vice versa) raises — the table's own vacuum
         must never be able to reach adopted data."""
         source = source_path.rstrip("/")
-        fs, m = self._fs(spark, self._marker_path(-1))
+        fs, m = hadoop_fs(spark, self._marker_path(-1))
         if fs.exists(m):
             return
         if (source == self.path or source.startswith(self.path + "/")
@@ -606,7 +610,7 @@ class CdcTable:
             raise ValueError(
                 f"adopt: {source} overlaps the table path {self.path} — "
                 f"vacuum must never be able to sweep adopted data")
-        sfs, sp = self._fs(spark, source)
+        sfs, sp = hadoop_fs(spark, source)
         if not sfs.exists(sp):
             raise ValueError(f"adopt: no parquet data at {source}")
         payload = spark.read.parquet(source)
@@ -637,16 +641,52 @@ class CdcTable:
             return  # lost the seed race — same idempotent no-op
         self._update_latest_hint(spark, -1)
 
+    # -- the view memo ------------------------------------------------------
+    #: committed versions whose views one handle keeps (the least
+    #: recently read is dropped first)
+    _VIEW_MEMO = 4
+
+    def _memo(self, spark: SparkSession, man: dict) -> dict:
+        """The view memo entry of ``man`` read through ``spark`` (see the
+        class docstring): a dict the snapshot and live views are stored
+        in once built. Keyed by the session and the manifest's full
+        text, so any new commit, a table re-created at the same path
+        (a new commit stamp) and a second session all miss."""
+        key = (id(spark), json.dumps(man, sort_keys=True))
+        with self._views_lock:
+            e = self._views.pop(key, None)
+            if e is None or e["spark"] is not spark:
+                e = {"spark": spark, "version": int(man["version"])}
+            self._views[key] = e
+            while len(self._views) > self._VIEW_MEMO:
+                del self._views[next(iter(self._views))]
+        return e
+
+    def _forget_views(self, versions) -> None:
+        """Drop the memoized views of ``versions`` (vacuumed ones)."""
+        gone = {int(v) for v in versions}
+        with self._views_lock:
+            for key in [k for k, e in self._views.items()
+                        if e["version"] in gone]:
+                del self._views[key]
+
     def _read_snapshot(self, spark: SparkSession, man: dict) -> DataFrame:
         """The committed snapshot frame AT ``man``, in PHYSICAL names —
-        the single read choke point. An ADOPTED manifest
-        (``plain_payload``) references a plain parquet directory that
-        predates the log, so the bookkeeping columns are synthesized
-        here instead of read: adoption never rewrote a byte.
+        the single read choke point, memoized per session and manifest.
+        An ADOPTED manifest (``plain_payload``) references a plain
+        parquet directory that predates the log, so the bookkeeping
+        columns are synthesized here instead of read: adoption never
+        rewrote a byte.
 
         The read schema comes from the manifest (its ``schema`` key), so
         no footer-inference job runs; a manifest without the key (an
         old table, an old adopted seed) falls back to inference."""
+        e = self._memo(spark, man)
+        if "snap" not in e:
+            e["snap"] = self._scan_snapshot(spark, man)
+        return e["snap"]
+
+    def _scan_snapshot(self, spark: SparkSession, man: dict) -> DataFrame:
         schema = _manifest_schema(man)
         plain = man.get("plain_payload")
         if schema is not None and plain:
@@ -859,11 +899,15 @@ class CdcTable:
 
     def current(self, spark: SparkSession) -> DataFrame:
         """The live view: tombstones hidden, bookkeeping columns
-        dropped, LOGICAL column names."""
+        dropped, LOGICAL column names. One frame per session and
+        committed version (the view memo)."""
         man = self._latest_manifest(spark)
-        return (self._to_logical(man, self._view_at(spark, man))
-                .where(~F.col(self.DELETED))
-                .drop(self.seq_col, self.DELETED))
+        e = self._memo(spark, man)
+        if "live" not in e:
+            e["live"] = (self._to_logical(man, self._view_at(spark, man))
+                         .where(~F.col(self.DELETED))
+                         .drop(self.seq_col, self.DELETED))
+        return e["live"]
 
     # -- the foreachBatch entry point ----------------------------------------
     def __call__(self, batch_df: DataFrame, batch_id: int,
@@ -902,8 +946,8 @@ class CdcTable:
             # standing CHECK constraints validate the rows this batch
             # would make live (fence-dropped rows exempt: they never
             # reach the table)
-            to_check = (batch if fence is None
-                        else batch.where(F.col(self.seq_col) > fence))
+            to_check = (batch if fence is None else batch.where(
+                f"{quote_ident(self.seq_col)} > {fence}"))
             self._enforce_constraints(man, to_check, "change-batch")
             # r13 (VERDICT r12 item 3): the (key, seq)-tie guard rides
             # the merge's own key exchange ("inline") instead of
@@ -986,8 +1030,8 @@ class CdcTable:
         """Commit manifests, oldest first — the audit trail."""
         out = []
         for v in self.versions(spark):
-            fs, p = self._fs(spark, self._marker_path(v))
-            out.append(json.loads(_fs_read_text(spark, p.toString())))
+            out.append(json.loads(_fs_read_text(spark,
+                                                self._marker_path(v))))
         return out
 
     def version_at_timestamp(self, spark: SparkSession,
@@ -1042,28 +1086,50 @@ class CdcTable:
 
     def _keys_predicate(self, key_tuples: "list[tuple]"):
         """A pushable literal predicate matching exactly
-        ``key_tuples``: single-column keys compile to ``IN`` (+
-        ``isNull`` when a null key is probed — IN drops NULLs);
-        composite keys to an OR of per-key AND chains. Null slots
-        match via ``isNull``, mirroring the eqNullSafe joins every
-        other key comparison in this file uses."""
-        if len(self.key_cols) == 1:
-            c = F.col(self.key_cols[0])
+        ``key_tuples``: single-column keys compile to ``IN`` (+ ``IS
+        NULL`` when a null key is probed — IN drops NULLs); composite
+        keys to an OR of per-key AND chains. Null slots match via ``IS
+        NULL``, mirroring the eqNullSafe joins every other key
+        comparison in this file uses.
+
+        Returned as ONE SQL string that the JVM parses: one py4j round
+        trip for any number of keys, where a Column tree costs several
+        per literal (a 50-key lookup spent about 230 of its 320 round
+        trips there). Key values with no SQL text form
+        (:func:`~systems_spark.operators.cdc.sql_literal`: timestamps,
+        bytes, ...) build the same predicate as a Column tree."""
+        lits = [[sql_literal(v) for v in t] for t in key_tuples]
+        if any(x is None for t in lits for x in t):
+            return self._keys_predicate_columns(key_tuples)
+        cols = [quote_ident(k) for k in self.key_cols]
+        if len(cols) == 1:
+            c = cols[0]
+            non_null = [t[0] for t in lits if t[0] != "NULL"]
+            cond = f"{c} IN ({', '.join(non_null)})" if non_null else "FALSE"
+            if len(non_null) < len(lits):
+                cond = f"{cond} OR {c} IS NULL"
+            return cond
+        return " OR ".join(
+            "(" + " AND ".join(f"{c} IS NULL" if x == "NULL" else f"{c} = {x}"
+                               for c, x in zip(cols, t)) + ")"
+            for t in lits)
+
+    def _keys_predicate_columns(self, key_tuples: "list[tuple]"):
+        """:meth:`_keys_predicate` as a Column tree of ``F.lit``s."""
+        cols = [F.col(quote_ident(k)) for k in self.key_cols]
+        if len(cols) == 1:
             non_null = [t[0] for t in key_tuples if t[0] is not None]
-            cond = c.isin(non_null) if non_null else F.lit(False)
+            cond = cols[0].isin(non_null) if non_null else F.lit(False)
             if len(non_null) < len(key_tuples):
-                cond = cond | c.isNull()
+                cond = cond | cols[0].isNull()
             return cond
-        def one(t):
-            cond = None
-            for col, v in zip(self.key_cols, t):
-                e = (F.col(col).isNull() if v is None
-                     else (F.col(col) == F.lit(v)))
-                cond = e if cond is None else (cond & e)
-            return cond
-        pred = one(key_tuples[0])
-        for t in key_tuples[1:]:
-            pred = pred | one(t)
+        pred = None
+        for t in key_tuples:
+            one = None
+            for c, v in zip(cols, t):
+                e = c.isNull() if v is None else (c == F.lit(v))
+                one = e if one is None else (one & e)
+            pred = one if pred is None else (pred | one)
         return pred
 
     def lookup(self, spark: SparkSession, keys) -> DataFrame:
@@ -1332,7 +1398,7 @@ class CdcTable:
         """Manifest-only commit: new version, same data (the prior
         version's directory is referenced again — vacuum resolves data
         dirs by reference, so sharing is safe)."""
-        fs_, m_ = self._fs(spark, self._marker_path(version))
+        fs_, m_ = hadoop_fs(spark, self._marker_path(version))
         if fs_.exists(m_):
             raise ConcurrentCommitError(
                 f"version {version} of {self.path} is already committed")
@@ -1445,7 +1511,7 @@ class CdcTable:
         tags, txn map, and data size. The audit surface an operator
         checks before touching a production table."""
         man = self._latest_manifest(spark)
-        fs, d = self._fs(spark, self._data_path(man))
+        fs, d = hadoop_fs(spark, self._data_path(man))
         files = [s for s in fs.listStatus(d)] if fs.exists(d) else []
         return {
             "format": "cdc-parquet",
@@ -1930,7 +1996,7 @@ class CdcTable:
         """(name, bytes) of the parquet files directly under ``path``
         — the O(files) driver-side listing every maintenance decision
         (describe_detail, file compaction) is allowed to make."""
-        fs, d = self._fs(spark, path)
+        fs, d = hadoop_fs(spark, path)
         if not fs.exists(d):
             return []
         return [(s.getPath().getName(), int(s.getLen()))
@@ -2050,9 +2116,10 @@ class CdcTable:
         drop = [v for v in drop if v not in pinned]
         if dry_run:
             return drop
+        self._forget_views(drop)
         kept_dirs = {mans[v]["data_dir"] for v in vs if v not in drop}
         for v in drop:
-            fs, m = self._fs(spark, self._marker_path(v))
+            fs, m = hadoop_fs(spark, self._marker_path(v))
             fs.delete(m, False)
         # sweep data dirs by REFERENCE, not by dropped version: a
         # manifest-only commit (add/drop constraint) shares its
@@ -2062,7 +2129,7 @@ class CdcTable:
         # every format's vacuum: don't run concurrently with an
         # IN-FLIGHT writer, whose staging dir is indistinguishable
         # from a dead one
-        fs, root = self._fs(spark, self.path)
+        fs, root = hadoop_fs(spark, self.path)
         for status in fs.listStatus(root):
             name = status.getPath().getName()
             if name.startswith("version=") and name not in kept_dirs:
@@ -2413,7 +2480,7 @@ class PartitionedCdcTable(CdcTable):
         ``keep_staged_on_loss``) kept and handed back on the error's
         ``staged`` attribute for a fast recommit."""
         self._check_conf(prior_man)
-        fs_, m_ = self._fs(spark, self._marker_path(version))
+        fs_, m_ = hadoop_fs(spark, self._marker_path(version))
         if fs_.exists(m_):
             raise ConcurrentCommitError(
                 f"version {version} of {self.path} is already committed")
@@ -2438,7 +2505,7 @@ class PartitionedCdcTable(CdcTable):
                      F.max("_cdc_stage_ties").alias("_mt")],
             drop_cols=["_cdc_stage_ties"])
         if int(got["_mt"] or 0) > 1:
-            fs, d = self._fs(spark, target)
+            fs, d = hadoop_fs(spark, target)
             fs.delete(d, True)
             from systems_spark.operators.cdc import _check_unique_seq
             _check_unique_seq(batch, self.key_cols, self.seq_col,
@@ -2458,7 +2525,7 @@ class PartitionedCdcTable(CdcTable):
                 err.staged = {"dir_name": dir_name, "written": set(),
                               "rows": int(rows), "change_buckets": tb}
             else:
-                fs, d = self._fs(spark, target)
+                fs, d = hadoop_fs(spark, target)
                 fs.delete(d, True)
             raise
 
@@ -2474,10 +2541,10 @@ class PartitionedCdcTable(CdcTable):
         nothing. Direct marker reads — never a log listing."""
         dirs = []
         for v in range(int(v_from) + 1, int(v_to) + 1):
-            fs, m = self._fs(spark, self._marker_path(v))
+            fs, m = hadoop_fs(spark, self._marker_path(v))
             if not fs.exists(m):
                 return None  # vacuumed gap
-            man = json.loads(_fs_read_text(spark, m.toString()))
+            man = json.loads(_fs_read_text(spark, self._marker_path(v)))
             d = man.get("change_dir")
             if d is None and "batch_id" in man:
                 # pre-change_dir MOR logs named the dir by version
@@ -2491,7 +2558,7 @@ class PartitionedCdcTable(CdcTable):
                 if "restore_of" in man or "rebucket_from" in man:
                     return None  # content changed without a change file
                 continue  # maintenance commit: no live-content change
-            fs2, dp = self._fs(spark, self._dir_path(man, d))
+            fs2, dp = hadoop_fs(spark, self._dir_path(man, d))
             if not fs2.exists(dp):
                 return None  # change file vacuumed
             dirs.append(d)
@@ -2872,7 +2939,7 @@ class PartitionedCdcTable(CdcTable):
         (see CdcTable._commit)."""
         if prior_man is not None and not allow_conf_change:
             self._check_conf(prior_man)
-        fs_, m_ = self._fs(spark, self._marker_path(version))
+        fs_, m_ = hadoop_fs(spark, self._marker_path(version))
         if fs_.exists(m_):
             raise ConcurrentCommitError(
                 f"version {version} of {self.path} is already committed")
@@ -2902,14 +2969,14 @@ class PartitionedCdcTable(CdcTable):
                     err.staged = {"dir_name": dir_name,
                                   "written": written, "rows": int(rows)}
                 else:
-                    fs, d = self._fs(spark, target)
+                    fs, d = hadoop_fs(spark, target)
                     fs.delete(d, True)
             raise
 
     # -- lifecycle -----------------------------------------------------------
     def initialize(self, seed: DataFrame, seq: int = 0) -> None:
         spark = seed.sparkSession
-        fs, m = self._fs(spark, self._marker_path(-1))
+        fs, m = hadoop_fs(spark, self._marker_path(-1))
         if fs.exists(m):
             return
         snap = (seed.withColumn(self.seq_col, F.lit(int(seq)).cast("long"))
@@ -2943,7 +3010,7 @@ class PartitionedCdcTable(CdcTable):
                 "the single bucket); rebucket(n) afterwards is the one "
                 "explicit rewrite")
         source = source_path.rstrip("/")
-        fs, m = self._fs(spark, self._marker_path(-1))
+        fs, m = hadoop_fs(spark, self._marker_path(-1))
         if fs.exists(m):
             return
         if (source == self.path or source.startswith(self.path + "/")
@@ -2951,7 +3018,7 @@ class PartitionedCdcTable(CdcTable):
             raise ValueError(
                 f"adopt: {source} overlaps the table path {self.path} — "
                 f"vacuum must never be able to sweep adopted data")
-        sfs, sp = self._fs(spark, source)
+        sfs, sp = hadoop_fs(spark, source)
         if not sfs.exists(sp):
             raise ValueError(f"adopt: no parquet data at {source}")
         payload = spark.read.parquet(source)
@@ -3021,7 +3088,7 @@ class PartitionedCdcTable(CdcTable):
         return all(new_map.get(b) == base_map.get(b) for b in touched)
 
     def _drop_dir(self, spark: SparkSession, dir_name: str) -> None:
-        fs, d = self._fs(spark, f"{self.path}/{dir_name}")
+        fs, d = hadoop_fs(spark, f"{self.path}/{dir_name}")
         fs.delete(d, True)
 
     # -- the foreachBatch entry point ----------------------------------------
@@ -3440,7 +3507,7 @@ class PartitionedCdcTable(CdcTable):
         n_files = 0
         size = 0
         for p in self._bucket_paths(man, mapping):
-            fs, d = self._fs(spark, p)
+            fs, d = hadoop_fs(spark, p)
             if not fs.exists(d):
                 continue
             for s in fs.listStatus(d):
@@ -3561,9 +3628,11 @@ class PartitionedCdcTable(CdcTable):
             # these files (Delta retains CDF files with the log)
             if "change_dir" in mans[v]:
                 referenced.add(mans[v]["change_dir"])
+        if not dry_run:
+            self._forget_views(set(vs) - keep)
         for v in vs:
             if v not in keep and not dry_run:
-                fs, m = self._fs(spark, self._marker_path(v))
+                fs, m = hadoop_fs(spark, self._marker_path(v))
                 fs.delete(m, False)
         # sweep data dirs from DISK, not the marker list: a writer
         # version can outlive its marker (still referenced by a kept
@@ -3574,7 +3643,7 @@ class PartitionedCdcTable(CdcTable):
         # format's vacuum: don't run concurrently with an in-flight
         # writer, whose staging dir is indistinguishable from a dead one
         dropped = []
-        fs, root = self._fs(spark, self.path)
+        fs, root = hadoop_fs(spark, self.path)
         for status in fs.listStatus(root):
             name = status.getPath().getName()
             if not (name.startswith("version=")

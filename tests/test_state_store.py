@@ -147,3 +147,48 @@ def test_entries_and_sweep(spark, store):
 
     # age-restricted sweep: nothing is old enough -> nothing deleted
     assert store.sweep(spark, keep_tags=set(), older_than_ms=1) == []
+
+
+def _jobs(spark, fn):
+    """(Spark jobs ``fn`` started, its result), counted through a job
+    group."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"state-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "state store job budget")
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_marker_hit_runs_no_job(spark, store):
+    """The marker records the written schema, so a hit reads the data
+    with it: no footer-inference job. A marker written before it did
+    still infers, with the same rows."""
+    df = spark.range(6).selectExpr("id", "cast(id * 2 as string) AS s",
+                                   "array(id) AS a")
+    first = store.materialize(df, "t9")
+    n, hit = _jobs(spark, lambda: store.materialize(spark.range(0), "t9"))
+    assert n == 0, f"a marker hit ran {n} jobs"
+    assert hit.schema == first.schema
+    assert sorted(tuple(r) for r in hit.collect()) == sorted(
+        (i, str(2 * i), [i]) for i in range(6))
+
+    marker = store._marker(store._path(spark, "t9", None))
+    with open(marker) as f:
+        old = json.load(f)
+    old.pop("schema")
+    os.remove(marker)
+    crc = os.path.join(os.path.dirname(marker),
+                       "." + os.path.basename(marker) + ".crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    fs_write_text_atomic(spark, marker, json.dumps(old))
+    legacy = store.materialize(spark.range(0), "t9")
+    assert legacy.schema == first.schema
+    assert sorted(tuple(r) for r in legacy.collect()) == sorted(
+        (i, str(2 * i), [i]) for i in range(6))
