@@ -255,16 +255,14 @@ def test_view_memo_lifetime(spark, tmp_path):
     assert (1, "x") in _rows(restored)
 
     # vacuum forgets the versions it drops; the latest view stays valid
-    old = table.at_version(spark, -1)
-    v_old = [e["version"] for e in table._views.values()]
-    assert -1 in v_old
+    table.at_version(spark, -1)
+    assert -1 in [e["version"] for e in table._views.values()]
     dropped_versions = table.vacuum(spark, keep_last=1)
     assert -1 in dropped_versions
     assert all(e["version"] not in dropped_versions
                for e in table._views.values())
     assert table.current(spark) is restored
     assert len(_rows(table.current(spark))) == 5
-    del old
 
     # a second session gets its own frames, bound to it
     other = spark.newSession()
