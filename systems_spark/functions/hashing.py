@@ -25,6 +25,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from systems_spark.functions.sqltext import sql_literal
+
 # Prime modulus for minhash permutations h_i(x) = (a_i * x + b_i) mod P.
 # Mersenne prime 2^31-1: with a, b, x all < 2^31 every intermediate product
 # stays below 2^62, so the arithmetic is EXACT in int64 in both Spark and
@@ -37,6 +39,13 @@ _UNIFORM_MOD = 1_000_000_007  # prime; uniforms have ~1e-9 resolution
 def hash64(col: Column) -> Column:
     """Portable 60-bit hash of a string column (non-negative int64)."""
     return F.conv(F.substring(F.md5(col.cast("string")), 1, 15), 16, 10).cast("long")
+
+
+def hash64_expr(expr: str) -> str:
+    """Spark SQL text of :func:`hash64` over the SQL expression ``expr``,
+    for plans built as parsed text (one py4j round trip, not one per
+    Column node)."""
+    return f"CAST(conv(substring(md5(CAST({expr} AS STRING)), 1, 15), 16, 10) AS BIGINT)"
 
 
 def hash64_sql(expr: str) -> str:
@@ -52,6 +61,15 @@ def unit_uniform(col: Column, salt: str = "") -> Column:
     """
     h = hash64(F.concat(F.lit(salt), col.cast("string")))
     return ((h % _UNIFORM_MOD) + 1).cast("double") / float(_UNIFORM_MOD + 1)
+
+
+def unit_uniform_expr(expr: str, salt: str = "") -> str:
+    """Spark SQL text of :func:`unit_uniform` over the SQL expression
+    ``expr``: the same operations on the same types, so the same double
+    bit for bit (tests/test_hash_portability.py)."""
+    h = hash64_expr(f"concat({sql_literal(str(salt))}, CAST({expr} AS STRING))")
+    return (f"(CAST(({h} % {_UNIFORM_MOD}) + 1 AS DOUBLE) / "
+            f"{sql_literal(float(_UNIFORM_MOD + 1))})")
 
 
 def unit_uniform_sql(expr: str, salt: str = "") -> str:

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from systems_spark.functions.sqltext import quote_ident
+
 
 def dot_product(a: Column, b: Column) -> Column:
     """Σ a[i]*b[i] as double; deterministic left-to-right fold."""
@@ -76,42 +78,59 @@ def unrolls(metric: str, d: int) -> bool:
     return per is not None and d * per <= UNROLL_MAX_TERMS
 
 
-def unrolled_score(metric: str, a: str, b: str, d: int) -> Column:
-    """``metric`` of the array columns named ``a`` and ``b`` as ONE SQL
-    expression of ``d`` unrolled terms, for a ``b`` side whose non-NULL
-    vectors all have length ``d``. ``ip`` is :func:`dot_product`,
-    ``cosine`` :func:`cosine_similarity`, ``l2`` the negative squared
-    distance, each bit-identical to its higher-order form.
+def score_sql(metric: str, a: str, b: str, d: "int | None" = None) -> str:
+    """Spark SQL text of ``metric`` between the array columns named ``a``
+    and ``b``: ``ip`` is :func:`dot_product`, ``cosine``
+    :func:`cosine_similarity`, ``l2`` the negative squared distance.
 
-    Each sum is ``0.0 + t(0) + … + t(d-1)``: the same IEEE additions in the
-    same left-to-right order as ``aggregate(..., 0.0, acc + v)``, so NaN,
-    ±inf, −0.0 and NULL elements give the same result. Outside ``size(a) =
-    d AND size(b) = d`` the value is NULL, which is what the higher-order
-    form gives there too: ``zip_with`` pads the shorter array with NULLs,
+    With ``d`` None this is the higher-order ``zip_with``/``aggregate``
+    fold. With ``d`` it is the same fold unrolled into ``d`` terms, for a
+    ``b`` side whose non-NULL vectors all have length ``d``: each sum is
+    ``0.0 + t(0) + … + t(d-1)``, the same IEEE additions in the same
+    left-to-right order as ``aggregate(..., 0.0, acc + v)``, so NaN,
+    ±inf, −0.0 and NULL elements give the same result. Outside ``size(a)
+    = d AND size(b) = d`` the unrolled value is NULL, which is what the
+    fold gives there too: ``zip_with`` pads the shorter array with NULLs,
     and a NULL term makes the fold NULL (a NULL array gives NULL)."""
-    qa, qb = (f"`{c.replace('`', '``')}`" for c in (a, b))
+    qa, qb = quote_ident(a), quote_ident(b)
+    if d is None:
+        def fold(x, y, term):
+            pairs = f"zip_with({x}, {y}, (x, y) -> {term('x', 'y')})"
+            return f"aggregate({pairs}, 0.0D, (acc, v) -> acc + v)"
 
-    def x(col, i):
-        return f"double(get({col}, {i}))"
+        def norm(x):
+            return (f"sqrt(aggregate({x}, 0.0D, "
+                    f"(acc, v) -> acc + double(v) * double(v)))")
+    else:
+        def fold(x, y, term):
+            return " + ".join(["(0.0D"] + [
+                term(f"get({x}, {i})", f"get({y}, {i})")
+                for i in range(d)]) + ")"
 
-    def fold(term):
-        return " + ".join(["0.0D"] + [term(i) for i in range(d)])
+        def norm(x):
+            return f"sqrt({fold(x, x, prod)})"
 
-    def prod(c1, c2):
-        return lambda i: f"{x(c1, i)} * {x(c2, i)}"
+    def prod(x, y):
+        return f"double({x}) * double({y})"
 
-    def sq_diff(i):
-        t = f"({x(qa, i)} - {x(qb, i)})"
+    def sq_diff(x, y):
+        t = f"(double({x}) - double({y}))"
         return f"{t} * {t}"
 
     if metric == "ip":
-        body = fold(prod(qa, qb))
+        body = fold(qa, qb, prod)
     elif metric == "cosine":
-        body = (f"({fold(prod(qa, qb))}) / "
-                f"(sqrt({fold(prod(qa, qa))}) * sqrt({fold(prod(qb, qb))}))")
+        body = f"{fold(qa, qb, prod)} / ({norm(qa)} * {norm(qb)})"
     elif metric == "l2":
-        body = f"-({fold(sq_diff)})"
+        body = f"-{fold(qa, qb, sq_diff)}"
     else:
         raise ValueError(f"unknown metric {metric!r}")
-    return F.expr(f"CASE WHEN size({qa}) = {d} AND size({qb}) = {d} "
-                  f"THEN {body} END")
+    if d is None:
+        return body
+    return f"CASE WHEN size({qa}) = {d} AND size({qb}) = {d} THEN {body} END"
+
+
+def unrolled_score(metric: str, a: str, b: str, d: int) -> Column:
+    """:func:`score_sql` unrolled into ``d`` terms, as a Column: ONE SQL
+    expression, bit-identical to the higher-order form."""
+    return F.expr(score_sql(metric, a, b, d))

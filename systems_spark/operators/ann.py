@@ -29,6 +29,12 @@ Spark-first, two physical strategies (chosen per scale, same logical result):
   tunable via (n_tables, n_planes), mirroring IVF's nprobe knob.
 
 Metrics: ``ip`` (inner product, the reference default) or ``cosine``.
+
+The exact path and the shared top-k ranking are parsed SQL text
+(``selectExpr``/``where`` over ``similarity.score_sql`` and a
+``row_number()`` window), not Column trees: serving builds the plan on
+every request, and each Column node is a py4j round trip plus an eager
+analysis on the driver, while a text step is one. The plans are the same.
 """
 
 from __future__ import annotations
@@ -41,39 +47,35 @@ from typing import Optional
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from systems_spark.functions.hashing import unit_uniform
-from systems_spark.functions.similarity import (cosine_similarity, dot_product,
-                                                unrolled_score, unrolls)
+from systems_spark.functions.similarity import score_sql, unrolls
+from systems_spark.functions.sqltext import quote_ident
 from systems_spark.operators.base import Operator
 from systems_spark.pinning import prepared
+from systems_spark.sources import hadoop_fs
 
 
-def _score(metric: str, q, it):
-    if metric == "ip":
-        return dot_product(q, it)
-    if metric == "cosine":
-        return cosine_similarity(q, it)
-    if metric == "l2":
-        # NEGATIVE squared euclidean distance: monotone in true L2, so
-        # every descending-score rank below is an ascending-distance rank
-        # (FAISS METRIC_L2 also ranks by squared distance — faiss.py:194
-        # exposes the metric= knob next to the INNER_PRODUCT default)
-        return -F.aggregate(
-            F.zip_with(q, it, lambda x, y:
-                       (x.cast("double") - y.cast("double"))
-                       * (x.cast("double") - y.cast("double"))),
-            F.lit(0.0), lambda acc, v: acc + v,
-        )
-    raise ValueError(f"unknown metric {metric!r}")
+def _score(metric: str, q: str, it: str):
+    """``metric`` between the vector columns named ``q`` and ``it``. For
+    ``l2`` it is the NEGATIVE squared euclidean distance: monotone in true
+    L2, so every descending-score rank below is an ascending-distance
+    rank (FAISS METRIC_L2 also ranks by squared distance — faiss.py:194
+    exposes the metric= knob next to the INNER_PRODUCT default)."""
+    return F.expr(score_sql(metric, q, it))
 
 
 def _uniform_length(items: DataFrame, vec_col: str) -> Optional[int]:
     """The one length of every non-NULL vector in ``items``, or None if
     lengths differ (or there is none)."""
-    v = F.col(vec_col)
-    lo, hi = items.where(v.isNotNull()).select(
-        F.min(F.size(v)), F.max(F.size(v))).first()
+    v = quote_ident(vec_col)
+    lo, hi = items.where(f"{v} IS NOT NULL").selectExpr(
+        f"min(size({v}))", f"max(size({v}))").first()
     return lo if lo is not None and lo == hi else None
+
+
+def _item_side(items: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """``(_ann_id, _ann_vec)``: the item columns every strategy reads."""
+    return items.selectExpr(f"{quote_ident(id_col)} AS _ann_id",
+                            f"{quote_ident(vec_col)} AS _ann_vec")
 
 
 def _pq_subvec(vec, m: int, sub: int):
@@ -81,22 +83,12 @@ def _pq_subvec(vec, m: int, sub: int):
     return F.slice(vec, m * sub + 1, sub)
 
 
-def _subdot(a, b):
-    """Exact dot product of two float arrays via the IEEE left fold."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0), lambda acc, v: acc + v,
-    )
-
-
-def _sub_score(metric: str, a, b):
+def _sub_score(metric: str, a: str, b: str):
     """Per-subspace PQ score, ADDITIVE across subspaces (the property ADC
     needs): inner product for ip/cosine (cosine's norm is restored by the
     exact rerank), negative squared distance for l2 — summing subspace
     values yields -||q - approx||², classic L2 ADC."""
-    if metric == "l2":
-        return _score("l2", a, b)
-    return _subdot(a, b)
+    return _score("l2" if metric == "l2" else "ip", a, b)
 
 
 def _plane_component(table: int, p: int, d: int, salt: str) -> float:
@@ -258,22 +250,22 @@ class QueryANN(Operator):
 
     # ------------------------------------------------------------------
     def _items(self) -> DataFrame:
-        it = self.items_df.select(
-            F.col(self.item_id_col).alias("_ann_id"),
-            F.col(self.item_vec_col).alias("_ann_vec"),
-        )
+        it = _item_side(self.items_df, self.item_id_col, self.item_vec_col)
         return F.broadcast(it) if self.broadcast else it
 
     def _rank_topk(self, joined: DataFrame) -> DataFrame:
-        w = Window.partitionBy(self.query_id_col).orderBy(
-            F.col("ann_score").desc(), F.col("_ann_id").asc()
-        )
-        return (
-            joined.withColumn("ann_rank", F.row_number().over(w))
-            .where(F.col("ann_rank") <= self.topk)
-            .withColumnRenamed("_ann_id", "ann_id")
-            .drop("_ann_vec")
-        )
+        """Top ``topk`` rows per query of ``joined`` (``_ann_id``,
+        ``_ann_vec``, ``ann_score`` beside the query columns) by
+        descending score, ties to the lower id: one projection that
+        renames ``_ann_id``, drops ``_ann_vec`` and ranks, and one filter
+        (Catalyst turns the pair into a ``WindowGroupLimit``)."""
+        cols = ["_ann_id AS ann_id" if c == "_ann_id" else quote_ident(c)
+                for c in joined.columns if c != "_ann_vec"]
+        rank = (f"row_number() OVER (PARTITION BY "
+                f"{quote_ident(self.query_id_col)} "
+                f"ORDER BY ann_score DESC, _ann_id ASC) AS ann_rank")
+        return joined.selectExpr(*cols, rank).where(
+            f"ann_rank <= {self.topk}")
 
     def transform(self, df: DataFrame) -> DataFrame:
         if self.strategy == "exact":
@@ -285,12 +277,20 @@ class QueryANN(Operator):
             # shuffles Q×N scored rows instead. Spark's WindowGroupLimit
             # additionally caps rows at topk per query before the final
             # window (verified in tests/test_sources_plans.py).
-            q = (
-                df.repartition(F.col(self.query_id_col))
-                if self.broadcast else df
-            )
-            joined = q.crossJoin(self._items()).withColumn(
-                "ann_score", self._exact_score())
+            #
+            # The exchange takes one partition per core. AQE sizes
+            # partitions by shuffle BYTES and would coalesce a batch of a
+            # few dozen query rows into one task, which then runs all
+            # Q×N scoring while the other cores idle; a partition count
+            # given to repartition (REPARTITION_BY_NUM) is never
+            # coalesced.
+            q = df
+            if self.broadcast:
+                q = df.repartition(
+                    df.sparkSession.sparkContext.defaultParallelism,
+                    F.col(quote_ident(self.query_id_col)))
+            joined = q.crossJoin(self._items()).selectExpr(
+                "*", f"{self._exact_score()} AS ann_score")
             return self._rank_topk(joined)
         if self.strategy == "lsh":
             return self._transform_lsh(df)
@@ -302,17 +302,16 @@ class QueryANN(Operator):
             return self._transform_ivf_pq(df)
         raise ValueError(f"unknown strategy {self.strategy!r}")
 
-    def _exact_score(self):
-        """The exact path's score: unrolled over a pinned item side of one
-        short enough vector length, the higher-order fold otherwise."""
+    def _exact_score(self) -> str:
+        """SQL text of the exact path's score: unrolled over a pinned item
+        side of one short enough vector length, the higher-order fold
+        otherwise."""
         d = prepared(self.items_df, ("ann_item_length", self.item_vec_col),
                      lambda items: _uniform_length(items, self.item_vec_col),
                      pinned_only=True)
-        if d is not None and unrolls(self.metric, d):
-            return unrolled_score(self.metric, self.query_vec_col,
-                                  "_ann_vec", d)
-        return _score(self.metric, F.col(self.query_vec_col),
-                      F.col("_ann_vec"))
+        if d is not None and not unrolls(self.metric, d):
+            d = None
+        return score_sql(self.metric, self.query_vec_col, "_ann_vec", d)
 
     def _transform_pq(self, df: DataFrame) -> DataFrame:
         """Product quantization with asymmetric distance (ADC) + exact
@@ -406,7 +405,7 @@ class QueryANN(Operator):
             )
             assigned = (
                 item_subs.join(F.broadcast(codebook), on="_m")
-                .withColumn("_d", subdot(F.col("_svec"), F.col("_cvec")))
+                .withColumn("_d", subdot("_svec", "_cvec"))
                 .withColumn("_rn", F.row_number().over(w))
                 .where(F.col("_rn") == 1)
                 .select("_m", "_k", "_svec")
@@ -442,7 +441,7 @@ class QueryANN(Operator):
             ])).alias("_s"))
             .select("_ann_id", "_s._m", "_s._svec")
             .join(codebook, on="_m")
-            .withColumn("_sdot", subdot(F.col("_svec"), F.col("_cvec")))
+            .withColumn("_sdot", subdot("_svec", "_cvec"))
             .withColumn("_rn", F.row_number().over(code_w))
             .where(F.col("_rn") == 1)
             .groupBy("_ann_id")
@@ -461,7 +460,7 @@ class QueryANN(Operator):
             ])).alias("_q"))
             .select(self.query_id_col, "_q._m", "_q._qsub")
             .join(codebook, on="_m")
-            .withColumn("_qdot", subdot(F.col("_qsub"), F.col("_cvec")))
+            .withColumn("_qdot", subdot("_qsub", "_cvec"))
             .groupBy(self.query_id_col, "_m")
             .agg(F.transform(
                 F.array_sort(F.collect_list(F.struct("_k", "_qdot"))),
@@ -495,7 +494,7 @@ class QueryANN(Operator):
         # exact rerank: fetch true vectors for the shortlist only
         joined = cands.join(items, on="_ann_id").withColumn(
             "ann_score",
-            _score(self.metric, F.col(self.query_vec_col), F.col("_ann_vec")),
+            _score(self.metric, self.query_vec_col, "_ann_vec"),
         )
         return self._rank_topk(joined)
 
@@ -551,8 +550,7 @@ class QueryANN(Operator):
         per-item function of the (pinned) centroids, so standing ∪ batch
         equals a from-scratch assignment of the union, bit for bit."""
         it = (self._items() if items_df is None else
-              items_df.select(F.col(self.item_id_col).alias("_ann_id"),
-                              F.col(self.item_vec_col).alias("_ann_vec")))
+              _item_side(items_df, self.item_id_col, self.item_vec_col))
         cents = F.broadcast(self.ivf_quantizer())
         return self._ivf_cells(it, cents).select("_ann_id", "_ann_vec", "_cell")
 
@@ -569,14 +567,14 @@ class QueryANN(Operator):
         )
         probes = (
             df.crossJoin(cents)
-            .withColumn("_cdot", _score(self.metric, F.col(self.query_vec_col), F.col("_cent_vec")))
+            .withColumn("_cdot", _score(self.metric, self.query_vec_col, "_cent_vec"))
             .withColumn("_crn", F.row_number().over(probe_w))
             .where(F.col("_crn") <= self.nprobe)
             .drop("_cent_vec", "_cdot", "_crn")
             .withColumnRenamed("_cent_id", "_cell")
         )
         joined = probes.join(postings, on="_cell").withColumn(
-            "ann_score", _score(self.metric, F.col(self.query_vec_col), F.col("_ann_vec"))
+            "ann_score", _score(self.metric, self.query_vec_col, "_ann_vec")
         ).drop("_cell")
         return self._rank_topk(joined)
 
@@ -591,8 +589,7 @@ class QueryANN(Operator):
         )
         return (
             items.crossJoin(cents)
-            .withColumn("_cdot", _score(self.metric, F.col("_ann_vec"),
-                                        F.col("_cent_vec")))
+            .withColumn("_cdot", _score(self.metric, "_ann_vec", "_cent_vec"))
             .withColumn("_crn", F.row_number().over(cell_w))
             .where(F.col("_crn") == 1)
             .select("_ann_id", "_ann_vec", F.col("_cent_id").alias("_cell"),
@@ -734,7 +731,7 @@ class QueryANN(Operator):
             ])).alias("_s"))
             .select("_ann_id", "_cell", "_s._m", "_s._svec")
             .join(codebook, on="_m")
-            .withColumn("_sdot", subdot(F.col("_svec"), F.col("_cvec")))
+            .withColumn("_sdot", subdot("_svec", "_cvec"))
             .withColumn("_rn", F.row_number().over(code_w))
             .where(F.col("_rn") == 1)
             .groupBy("_ann_id", "_cell")
@@ -747,8 +744,7 @@ class QueryANN(Operator):
             F.col("_cdot").desc(), F.col("_cent_id").asc())
         probes = (
             df.select(qid, qvec).crossJoin(cents)
-            .withColumn("_cdot", _score(self.metric, F.col(qvec),
-                                        F.col("_cent_vec")))
+            .withColumn("_cdot", _score(self.metric, qvec, "_cent_vec"))
             .withColumn("_crn", F.row_number().over(probe_w))
             .where(F.col("_crn") <= nprobe))
         if self.metric == "l2":
@@ -760,8 +756,7 @@ class QueryANN(Operator):
         else:
             probes = (probes
                       .withColumn("_eq", F.col(qvec))
-                      .withColumn("_bias", _subdot(F.col(qvec),
-                                                   F.col("_cent_vec"))))
+                      .withColumn("_bias", _score("ip", qvec, "_cent_vec")))
         lut = (
             probes.select(qid, F.col("_cent_id").alias("_cell"), "_bias",
                           F.explode(F.array(*[
@@ -771,7 +766,7 @@ class QueryANN(Operator):
                           ])).alias("_q"))
             .select(qid, "_cell", "_bias", "_q._m", "_q._qsub")
             .join(codebook, on="_m")
-            .withColumn("_qdot", subdot(F.col("_qsub"), F.col("_cvec")))
+            .withColumn("_qdot", subdot("_qsub", "_cvec"))
             .groupBy(qid, "_cell", "_bias", "_m")
             .agg(F.transform(
                 F.array_sort(F.collect_list(F.struct("_k", "_qdot"))),
@@ -796,8 +791,7 @@ class QueryANN(Operator):
                  .select(qid, "_ann_id"))
         joined = (cands.join(df, on=qid).join(items, on="_ann_id")
                   .withColumn("ann_score",
-                              _score(self.metric, F.col(qvec),
-                                     F.col("_ann_vec"))))
+                              _score(self.metric, qvec, "_ann_vec")))
         return self._rank_topk(joined)
 
     def _transform_lsh(self, df: DataFrame) -> DataFrame:
@@ -814,10 +808,7 @@ class QueryANN(Operator):
         # row), replacing the previous n_tables separate joins + union —
         # one shuffle stage instead of four at identical byte volume
         it = _explode_signatures(
-            self.items_df.select(
-                F.col(self.item_id_col).alias("_ann_id"),
-                F.col(self.item_vec_col).alias("_ann_vec"),
-            ),
+            _item_side(self.items_df, self.item_id_col, self.item_vec_col),
             "_ann_vec", self.dim, self.n_planes, self.n_tables,
         )
         if self.broadcast:
@@ -828,8 +819,7 @@ class QueryANN(Operator):
         cands = q.join(it, on=["_tbl", "_sig"]).drop("_tbl", "_sig")
         cands = cands.dropDuplicates([self.query_id_col, "_ann_id"])
         joined = cands.withColumn(
-            "ann_score", _score(self.metric, F.col(self.query_vec_col), F.col("_ann_vec"))
-        )
+            "ann_score", _score(self.metric, self.query_vec_col, "_ann_vec"))
         return self._rank_topk(joined)
 
 
@@ -867,17 +857,6 @@ class QueryANN(Operator):
             self._codebook = self._pq_codebook(self._items()).localCheckpoint()
         return self
 
-    @staticmethod
-    def _artifact_fs(spark, path: str):
-        """Hadoop FileSystem handle for ``path`` — existence checks and
-        deletes must go through the same filesystem layer the parquet
-        writes use, or non-local artifact paths (hdfs://, s3a://) would
-        silently misbehave."""
-        jvm = spark._jvm
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        return fs, hpath
-
     def save_artifacts(self, path: str) -> None:
         spark = self.items_df.sparkSession
         self.items_df.write.mode("overwrite").parquet(f"{path}/items.parquet")
@@ -891,7 +870,10 @@ class QueryANN(Operator):
                 # load_artifacts trusts whatever file exists, so leaving an
                 # old centroid/codebook set behind would silently pair it
                 # with the NEW item set
-                fs, hpath = self._artifact_fs(spark, sub)
+                # existence checks and deletes go through the Hadoop
+                # filesystem layer the parquet writes use, so non-local
+                # artifact paths (hdfs://, s3a://) behave the same
+                fs, hpath = hadoop_fs(spark, sub)
                 if fs.exists(hpath):
                     fs.delete(hpath, True)
 
@@ -900,7 +882,7 @@ class QueryANN(Operator):
         for attr, name in (("_centroids", "centroids"),
                            ("_codebook", "codebook")):
             sub = f"{path}/{name}.parquet"
-            fs, hpath = self._artifact_fs(spark, sub)
+            fs, hpath = hadoop_fs(spark, sub)
             setattr(self, attr,
                     spark.read.parquet(sub) if fs.exists(hpath) else None)
 

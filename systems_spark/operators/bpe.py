@@ -39,6 +39,7 @@ from pyspark.sql import functions as F
 
 from systems_spark.functions import text as TX
 from systems_spark.operators.base import Operator
+from systems_spark.sources import hadoop_fs
 
 __all__ = ["BpeTokenizer"]
 
@@ -310,7 +311,6 @@ class BpeTokenizer(Operator):
         for attr, sub in (("_vocab_tokens", "vocab_tokens.parquet"),
                           ("_freqs", "word_freqs.parquet")):
             p = f"{path}/{sub}"
-            hpath = spark._jvm.org.apache.hadoop.fs.Path(p)
-            fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+            fs, hpath = hadoop_fs(spark, p)
             setattr(self, attr,
                     spark.read.parquet(p) if fs.exists(hpath) else None)

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.functions.sqltext import quote_ident
 from systems_spark.operators.base import Operator
 from systems_spark.pinning import prepared
 from systems_spark.schema import Schema
@@ -40,9 +41,9 @@ class EmbeddingLookup(Operator):
         self.requires = (id_col,)
 
     def _dedup(self, embeddings: DataFrame) -> DataFrame:
-        return embeddings.select(
-            F.col(self.id_col),
-            F.col(self.embedding_col).alias(self.output_col),
+        return embeddings.selectExpr(
+            quote_ident(self.id_col),
+            f"{quote_ident(self.embedding_col)} AS {quote_ident(self.output_col)}",
         ).dropDuplicates([self.id_col])
 
     def transform(self, df: DataFrame) -> DataFrame:

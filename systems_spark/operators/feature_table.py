@@ -30,6 +30,7 @@ from typing import Iterable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.functions.sqltext import quote_ident
 from systems_spark.operators.base import Operator
 from systems_spark.pinning import prepared
 from systems_spark.schema import Schema
@@ -58,8 +59,8 @@ class QueryFeatureTable(Operator):
         return [c for c in self.features_df.columns if c != self.entity_col]
 
     def _dedup(self, features: DataFrame) -> DataFrame:
-        sel = [F.col(self.entity_col)] + [
-            F.col(c).alias(f"{self.prefix}{c}" if self.prefix else c)
+        sel = [quote_ident(self.entity_col)] + [
+            f"{quote_ident(c)} AS {quote_ident(self.prefix + c)}"
             for c in self._columns()
         ]
         # one row per entity id, but which of several duplicate rows is
@@ -67,7 +68,7 @@ class QueryFeatureTable(Operator):
         # the same way. Over a pinned table the pick is fixed for the
         # pin's lifetime (the view is pinned once); over an unpinned table
         # it may differ per request. A deterministic pick is still open.
-        return features.select(*sel).dropDuplicates([self.entity_col])
+        return features.selectExpr(*sel).dropDuplicates([self.entity_col])
 
     def _feature_frame(self) -> DataFrame:
         key = ("query_feature_table", self.entity_col,

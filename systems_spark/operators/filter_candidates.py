@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.functions.sqltext import quote_ident
 from systems_spark.operators.base import Operator
 from systems_spark.schema import Schema, ColumnSchema
 
@@ -90,7 +91,7 @@ class FilterCandidatesRelational(Operator):
     def transform(self, df: DataFrame) -> DataFrame:
         # no dedup: an anti join's output does not depend on duplicate
         # rows on its right side, and Catalyst would not remove one
-        seen = self.seen_df.select(*self.on)
+        seen = self.seen_df.selectExpr(*map(quote_ident, self.on))
         if self.broadcast:
             seen = F.broadcast(seen)
         return df.join(seen, on=self.on, how="left_anti")

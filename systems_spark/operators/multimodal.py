@@ -29,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from systems_spark.operators.base import Operator
+from systems_spark.sources import hadoop_fs
 
 MEDIA_META_SCHEMA = T.StructType([
     T.StructField("media_type", T.StringType()),
@@ -171,15 +172,12 @@ def _bare_scan_total_bytes(df: DataFrame) -> "int | None":
         files = df.inputFiles()
         if not files:
             return None
-        sc = df.sparkSession.sparkContext
-        jvm = sc._jvm
-        hconf = sc._jsc.hadoopConfiguration()
         step = max(1, len(files) // _BYTE_BUDGET_MAX_FILE_STATS)
         sampled = files[::step]
         total = 0
         for f in sampled:
-            p = jvm.org.apache.hadoop.fs.Path(f)
-            total += p.getFileSystem(hconf).getFileStatus(p).getLen()
+            fs, p = hadoop_fs(df.sparkSession, f)
+            total += fs.getFileStatus(p).getLen()
         return int(total * (len(files) / len(sampled)))
     except Exception:  # plan/FS introspection is best-effort, never fatal
         return None

@@ -26,6 +26,15 @@ Spark-first redesign:
    values (reference returns original scores, :111), so no float aggregation
    appears anywhere in the operator → oracle-exact.
 
+4. **One ranking expression, as SQL text.** The sort key goes inside the
+   ``row_number() OVER (PARTITION BY request ORDER BY key, id)`` text, and
+   U is the SQL-text twin of the md5 uniform
+   (``hashing.unit_uniform_expr``). Built from Column objects, the key is
+   a few dozen client calls, each a py4j round trip plus an eager
+   analysis, and serving pays them on every request; parsed text is one
+   ``selectExpr`` and one ``where``, with the same plan and bit-identical
+   keys.
+
 Input shape: exploded rows ``(request_col, id_col, relevance_col, ...)``.
 Output: top-k rows per request with ``sample_rank`` (1-based), or per-request
 arrays ``ordered_ids``/``ordered_scores`` when ``as_arrays=True`` (the
@@ -34,10 +43,11 @@ reference's (1, k) output shape, :112-113).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from systems_spark.functions.hashing import unit_uniform
+from systems_spark.functions.hashing import unit_uniform_expr
+from systems_spark.functions.sqltext import quote_ident, sql_literal
 from systems_spark.operators.base import Operator
 from systems_spark.schema import Schema
 
@@ -55,38 +65,31 @@ class SoftmaxSampling(Operator):
         self.as_arrays = as_arrays
         self.requires = (relevance_col, input_col, request_col)
 
-    def sort_key(self) -> F.Column:
-        """-ln(U)/exp(T*s): ascending order == weighted sampling w/o replacement."""
-        u = unit_uniform(
-            F.concat_ws("|", F.col(self.request_col), F.col(self.input_col)),
-            salt=self.seed,
-        )
-        return -F.log(u) / F.exp(self.temperature * F.col(self.relevance_col))
+    def _quoted(self):
+        return (quote_ident(c) for c in (
+            self.request_col, self.input_col, self.relevance_col))
+
+    def sort_key(self) -> str:
+        """SQL text of -ln(U)/exp(T*s): ascending order == weighted
+        sampling w/o replacement."""
+        req, item, rel = self._quoted()
+        u = unit_uniform_expr(f"concat_ws('|', {req}, {item})", salt=self.seed)
+        return f"-ln({u}) / exp({sql_literal(self.temperature)} * {rel})"
 
     def transform(self, df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(self.request_col).orderBy(
-            F.col("_ss_key").asc(), F.col(self.input_col).asc()
-        )
-        ranked = (
-            df.withColumn("_ss_key", self.sort_key())
-            .withColumn("sample_rank", F.row_number().over(w))
-            .where(F.col("sample_rank") <= self.topk)
-            .drop("_ss_key")
-        )
+        req, item, rel = self._quoted()
+        ranked = df.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {req} ORDER BY "
+                 f"{self.sort_key()} ASC, {item} ASC) AS sample_rank",
+        ).where(f"sample_rank <= {self.topk}")
         if not self.as_arrays:
             return ranked
         return (
-            ranked.groupBy(self.request_col)
-            .agg(
-                F.array_sort(
-                    F.collect_list(F.struct("sample_rank", self.input_col, self.relevance_col))
-                ).alias("_pairs")
-            )
-            .select(
-                self.request_col,
-                F.col(f"_pairs.{self.input_col}").alias("ordered_ids"),
-                F.col(f"_pairs.{self.relevance_col}").alias("ordered_scores"),
-            )
+            ranked.groupBy(F.col(req))
+            .agg(F.expr(f"array_sort(collect_list(struct(sample_rank, "
+                        f"{item}, {rel})))").alias("_pairs"))
+            .selectExpr(req, f"_pairs.{item} AS ordered_ids",
+                        f"_pairs.{rel} AS ordered_scores")
         )
 
     def compute_output_schema(self, input_schema: Schema) -> Schema:

@@ -8,7 +8,9 @@ per candidate item row, optionally renaming with a prefix
 Spark-first: ``np.repeat`` over a batch is exactly a **broadcast hash join**
 on the request key — the user-features side is tiny relative to candidates,
 so ``F.broadcast`` pins the no-shuffle plan (candidates stream through
-map-side; at 100 TB the candidate side never moves).
+map-side; at 100 TB the candidate side never moves). The feature side's
+projection is one parsed SQL ``selectExpr``: serving builds it on every
+request, and a Column per renamed feature is a py4j round trip each.
 """
 
 from __future__ import annotations
@@ -18,6 +20,7 @@ from typing import Iterable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.functions.sqltext import quote_ident
 from systems_spark.operators.base import Operator
 from systems_spark.schema import Schema
 
@@ -45,12 +48,10 @@ class UnrollFeatures(Operator):
         self.requires = (request_col,)
 
     def transform(self, df: DataFrame) -> DataFrame:
-        feats = self.features_df.select(
-            self.request_col,
-            *[
-                F.col(c).alias(f"{self.prefix}{c}" if self.prefix else c)
-                for c in self.unroll_cols
-            ],
+        feats = self.features_df.selectExpr(
+            quote_ident(self.request_col),
+            *[f"{quote_ident(c)} AS {quote_ident(self.prefix + c)}"
+              for c in self.unroll_cols],
         )
         return df.join(F.broadcast(feats), on=self.request_col, how="inner")
 

@@ -30,6 +30,7 @@ from hashlib import md5
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from systems_spark.sources import hadoop_fs
 from systems_spark.streaming.sinks import _manifest_schema
 
 __all__ = ["z_value", "z_value_sql", "zorder_layout",
@@ -396,9 +397,7 @@ def layout_fingerprint(spark, path: str) -> str:
     changes the fingerprint, which is exactly the staleness signal a
     stats index needs. A driver-side listing, bounded by the FILE
     count: the same listing every table format's planner does."""
-    jvm = spark._jvm
-    p = jvm.org.apache.hadoop.fs.Path(path)
-    fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
+    fs, p = hadoop_fs(spark, path)
     it = fs.listFiles(p, True)
     entries = []
     while it.hasNext():

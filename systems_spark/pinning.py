@@ -54,6 +54,12 @@ __all__ = ["pin", "prepared", "unpin"]
 _PREPARED: dict = {}
 _PREPARED_LOCK = threading.RLock()
 _MISSING = object()
+# source frame -> (pin id, JVM RDD) of a materialized pin, so a hit sends no
+# py4j command (resolving the pin reads the analyzed plan, its class, the
+# RDD, its storage level and the application id: about ten). Only pins are
+# kept: a frame that is not one yet (a reliable checkpoint before its first
+# action) is resolved again on its next call. unpin() drops the entry.
+_PIN_OF: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
 def _has_checkpoint_dir(df: DataFrame) -> bool:
@@ -104,16 +110,33 @@ def _pin_id(df: DataFrame, rdd) -> tuple:
 def _materialized_rdd(df: DataFrame):
     """The JVM RDD of ``df`` when ``df`` is exactly a materialized pin: its
     plan root is a ``LogicalRDD`` with a storage level (``localCheckpoint``)
-    or a checkpoint. Else None: a frame built with ``createDataFrame`` also
-    has a ``LogicalRDD`` root, but neither."""
+    or reliable checkpoint files. Else None: a frame built with
+    ``createDataFrame`` also has a ``LogicalRDD`` root, but neither, and
+    so has a local checkpoint that :func:`unpin` released (it still
+    counts as checkpointed, but its blocks are gone)."""
     rdd = _pin_rdd(df)
     try:
         if rdd is not None and (rdd.getStorageLevel().isValid()
-                                or rdd.isCheckpointed()):
+                                or rdd.getCheckpointFile().isDefined()):
             return rdd
     except Exception:  # noqa: BLE001 - introspection must never break a plan
         pass
     return None
+
+
+def _pin_of(df: DataFrame):
+    """``(pin id, JVM RDD)`` when ``df`` is a materialized pin, else None;
+    memoized per frame object for pins."""
+    hit = _PIN_OF.get(df)
+    if hit is not None:
+        return hit
+    rdd = _materialized_rdd(df)
+    if rdd is None:
+        return None
+    hit = (_pin_id(df, rdd), rdd)
+    with _PREPARED_LOCK:
+        _PIN_OF[df] = hit
+    return hit
 
 
 def prepared(source: DataFrame, key, build, pinned_only: bool = False):
@@ -135,15 +158,19 @@ def prepared(source: DataFrame, key, build, pinned_only: bool = False):
     ``build`` never runs: for a value only worth learning once per pin (a
     scalar ``build`` runs its job on every call).
 
+    A hit sends no py4j command: the source's pin identity is memoized
+    per frame object.
+
     Lifetime: :func:`unpin` on the source releases its views' storage. When
     the source frame object is garbage collected its entries leave the
     memo, and Spark's context cleaner frees each view's blocks once no
     plan references the view any more (a result frame still being read
     keeps it alive)."""
-    rdd = _materialized_rdd(source)
-    if rdd is None:
+    pinned = _pin_of(source)
+    if pinned is None:
         return None if pinned_only else build(source)
-    memo = _pin_id(source, rdd) + (key,)
+    pin_id, rdd = pinned
+    memo = pin_id + (key,)
     out = _PREPARED.get(memo, _MISSING)  # a dict read is atomic: no lock
     if out is not _MISSING:
         return out
@@ -181,9 +208,13 @@ def unpin(df: DataFrame) -> None:
     if rdd is None:
         return
     try:
-        if _PREPARED:  # nothing prepared: no memo scan, no application id
+        if _PREPARED or _PIN_OF:  # nothing memoized: no application id
             pin_id = _pin_id(df, rdd)
             with _PREPARED_LOCK:
+                # every frame object of this pin resolves it again
+                for src in [s for s, (p, _) in _PIN_OF.items()
+                            if p == pin_id]:
+                    del _PIN_OF[src]
                 views = [_PREPARED.pop(m) for m in list(_PREPARED)
                          if m[:2] == pin_id]
             for view in views:

@@ -43,7 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from systems_spark.operators.cdc import quote_ident, sql_literal
+from systems_spark.functions.sqltext import quote_ident, sql_literal
 from systems_spark.sources import _fs_read_text, hadoop_fs
 
 _COMMIT_DIR = "_commits"
@@ -1096,7 +1096,7 @@ class CdcTable:
         trip for any number of keys, where a Column tree costs several
         per literal (a 50-key lookup spent about 230 of its 320 round
         trips there). Key values with no SQL text form
-        (:func:`~systems_spark.operators.cdc.sql_literal`: timestamps,
+        (:func:`~systems_spark.functions.sqltext.sql_literal`: timestamps,
         bytes, ...) build the same predicate as a Column tree."""
         lits = [[sql_literal(v) for v in t] for t in key_tuples]
         if any(x is None for t in lits for x in t):

@@ -51,6 +51,34 @@ def checkpoint_dir(spark, tmp_path):
     getattr(sc, "checkpointDir_$eq")(prev)  # the Scala var's setter
 
 
+class Py4jCounter:
+    """Counts the py4j commands the driver sends while active."""
+
+    def __init__(self, spark):
+        self.client = spark.sparkContext._gateway._gateway_client
+        self.n = 0
+
+    def __enter__(self):
+        inner = self.client.send_command
+
+        def counted(*args, **kwargs):
+            self.n += 1
+            return inner(*args, **kwargs)
+
+        self.client.send_command = counted
+        return self
+
+    def __exit__(self, *exc):
+        del self.client.send_command  # back to the class's method
+
+
+@pytest.fixture
+def py4j_commands(spark):
+    """``py4j_commands()`` is a context manager whose ``n`` counts the
+    py4j commands sent inside it: a driver round-trip budget."""
+    return lambda: Py4jCounter(spark)
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

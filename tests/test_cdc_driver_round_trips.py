@@ -26,27 +26,6 @@ PAY = "k long, s string, v long"
 CH = PAY + ", seq long, op string"
 
 
-class _Py4jCounter:
-    """Counts the py4j commands the driver sends while active."""
-
-    def __init__(self, spark):
-        self.client = spark.sparkContext._gateway._gateway_client
-        self.n = 0
-
-    def __enter__(self):
-        inner = self.client.send_command
-
-        def counted(*args, **kwargs):
-            self.n += 1
-            return inner(*args, **kwargs)
-
-        self.client.send_command = counted
-        return self
-
-    def __exit__(self, *exc):
-        del self.client.send_command  # back to the class's method
-
-
 def _batch(spark, tick):
     rows = [(k, f"u{tick}", k, 10 + tick, "update")
             for k in range(tick, 200, 7)]
@@ -55,7 +34,8 @@ def _batch(spark, tick):
     return spark.createDataFrame(rows, CH)
 
 
-def test_flat_commit_and_repeated_lookup_py4j_budget(spark, tmp_path):
+def test_flat_commit_and_repeated_lookup_py4j_budget(spark, tmp_path,
+                                                     py4j_commands):
     """A flat commit sends at most 200 py4j commands and a lookup build
     at an unchanged version at most 20: about twice the 93 and 10
     measured with the merge and the key filter as SQL text, the cached
@@ -68,10 +48,10 @@ def test_flat_commit_and_repeated_lookup_py4j_budget(spark, tmp_path):
     keys = list(range(0, 500, 10))
     for tick in range(3):
         batch = _batch(spark, tick)
-        with _Py4jCounter(spark) as commit:
+        with py4j_commands() as commit:
             table(batch, tick)
         table.lookup(spark, keys).collect()  # builds the version's view
-        with _Py4jCounter(spark) as lookup:
+        with py4j_commands() as lookup:
             df = table.lookup(spark, keys)
         rows = df.collect()
     assert commit.n <= 200, f"flat commit sent {commit.n} py4j commands"

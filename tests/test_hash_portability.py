@@ -20,10 +20,12 @@ from systems_spark.functions import text as TX
 from systems_spark.functions.hashing import (
     MERSENNE_31,
     hash64,
+    hash64_expr,
     hash64_sql,
     minhash_permuted,
     minhash_permuted_sql,
     unit_uniform,
+    unit_uniform_expr,
     unit_uniform_sql,
 )
 
@@ -84,3 +86,29 @@ def test_minhash_permutation_math(h, a, b):
     assert 0 <= expect < MERSENNE_31
     # int64 safety: the largest intermediate fits in 63 bits
     assert a * (h % MERSENNE_31) + b < (1 << 63)
+
+
+@settings(max_examples=10, deadline=None)
+@given(st.lists(st.tuples(st.one_of(NASTY, st.none()),
+                          st.one_of(st.integers(-(1 << 63), (1 << 63) - 1),
+                                    st.none())), min_size=1, max_size=30),
+       NASTY)
+def test_sql_text_hashes_equal_the_column_forms(spark, samples, salt):
+    """The Spark SQL text twins ``hash64_expr`` and ``unit_uniform_expr``
+    equal the Column forms bit for bit, over string and long keys, NULLs
+    and salts with quotes, backslashes and non-ASCII characters."""
+    import struct
+
+    df = spark.createDataFrame(
+        [(i, s, n) for i, (s, n) in enumerate(samples)],
+        "i long, s string, n long")
+    cols = []
+    for c in ("s", "n"):
+        cols += [hash64(F.col(c)), F.expr(hash64_expr(c)),
+                 unit_uniform(F.col(c), salt=salt),
+                 F.expr(unit_uniform_expr(c, salt=salt))]
+    for r in df.select(*cols).collect():
+        for col, text in zip(r[::2], r[1::2]):
+            if isinstance(col, float):
+                col, text = (struct.pack("<d", x) for x in (col, text))
+            assert col == text, (r, salt)

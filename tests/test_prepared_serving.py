@@ -265,3 +265,28 @@ def test_prepared_builds_once_under_threads_and_only_over_pins(spark):
         assert len(calls) == 1
     finally:
         unpin(src)
+
+
+def test_a_prepared_hit_sends_no_py4j_command(spark, py4j_commands):
+    """A hit resolves the source's pin from a memo kept per frame object,
+    so it sends no py4j command. After ``unpin(source)`` the same frame
+    is no pin any more: every call builds again, lazily."""
+    src = pin(_users(spark, n=10), eager=True)
+    calls = []
+
+    def build(df):
+        calls.append(df)
+        return df.select("user_id")
+
+    try:
+        view = pinning.prepared(src, "hit", build)
+        with py4j_commands() as hit:
+            again = pinning.prepared(src, "hit", build)
+        assert hit.n == 0, f"a hit sent {hit.n} py4j commands"
+        assert again is view and len(calls) == 1
+    finally:
+        unpin(src)
+    lazy = [pinning.prepared(src, "hit", build) for _ in range(2)]
+    assert len(calls) == 3
+    assert lazy[0] is not lazy[1]
+    assert all(pinning._materialized_rdd(df) is None for df in lazy)

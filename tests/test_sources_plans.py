@@ -560,7 +560,9 @@ def test_ann_exact_ranking_shuffles_queries_not_scores(spark):
     cross join (Q query rows), never after scoring (Q×N rows) — the
     ranking window's distribution requirement is satisfied by
     pre-clustering the query side. Also asserts Spark's WindowGroupLimit
-    partial top-k kicked in (caps per-partition rows at topk pre-window)."""
+    partial top-k kicked in (caps per-partition rows at topk pre-window).
+    The exchange takes a partition count (one per core), which AQE
+    never coalesces, so the scoring stage runs on every core."""
     from pyspark.sql import functions as F
 
     from systems_spark.operators.ann import QueryANN
@@ -576,7 +578,7 @@ def test_ann_exact_ranking_shuffles_queries_not_scores(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
     assert "WindowGroupLimit" in plan, plan
     # the one exchange is the query-side REPARTITION, not a window shuffle
-    assert "REPARTITION_BY_COL" in plan, plan
+    assert "REPARTITION_BY_NUM" in plan, plan
 
 
 def test_salted_group_count_equals_plain(spark, tables):

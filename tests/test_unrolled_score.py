@@ -1,7 +1,8 @@
 """The unrolled similarity kernel (functions/similarity.py::unrolled_score)
 is bit-identical to the higher-order folds it replaces in exact QueryANN,
 NaN, ±inf, −0.0, NULL elements, NULL and empty arrays and a query of the
-wrong length included, and agrees with DuckDB's list_inner_product."""
+wrong length included, and agrees with DuckDB's list_inner_product. The
+SQL-text folds (``score_sql`` without a length) equal the Column folds."""
 
 import math
 import os
@@ -17,8 +18,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from systems_spark.functions.similarity import (cosine_similarity,
                                                 dot_product, dot_product_sql,
-                                                unrolled_score)
-from systems_spark.operators.ann import _score
+                                                score_sql, unrolled_score)
 
 SCHEMA = "i int, q array<float>, v array<float>"
 
@@ -44,6 +44,18 @@ FLOAT32 = st.one_of(
     FINITE,
     st.sampled_from([0.0, -0.0, math.nan, math.inf, -math.inf, 1e-45]),
     st.none())
+
+
+def _l2_fold(q, v):
+    """Negative squared distance as a Column-tree fold: the reference."""
+    return -F.aggregate(
+        F.zip_with(q, v, lambda x, y: (x.cast("double") - y.cast("double"))
+                   * (x.cast("double") - y.cast("double"))),
+        F.lit(0.0), lambda acc, t: acc + t)
+
+
+def _text_fold(metric):
+    return F.expr(score_sql(metric, "q", "v"))
 
 
 def _random(seed, n):
@@ -76,10 +88,11 @@ def test_unrolled_scores_match_the_folds_on_embedding_like_vectors(spark):
     q, v = F.col("q"), F.col("v")
     for d in (16, 64):
         part = df.where(F.size("q") == d)
-        assert _outcome(part, *(unrolled_score(m, "q", "v", d)
-                                for m in ("ip", "cosine", "l2"))) == \
-            _outcome(part, dot_product(q, v), cosine_similarity(q, v),
-                     _score("l2", q, v))
+        want = _outcome(part, dot_product(q, v), cosine_similarity(q, v),
+                        _l2_fold(q, v))
+        for score in (lambda m: unrolled_score(m, "q", "v", d), _text_fold):
+            assert _outcome(part, *(score(m)
+                                    for m in ("ip", "cosine", "l2"))) == want
 
 
 @st.composite
@@ -117,9 +130,12 @@ def test_unrolled_scores_are_bit_identical_to_the_folds(spark, case):
     df = spark.createDataFrame(rows, SCHEMA)
     q, v = F.col("q"), F.col("v")
     # ip and l2 in one job; cosine apart, since a zero vector makes it raise
-    got = _outcome(df, unrolled_score("ip", "q", "v", d),
-                   unrolled_score("l2", "q", "v", d))
-    assert got == _outcome(df, dot_product(q, v), _score("l2", q, v)), \
+    want = _outcome(df, dot_product(q, v), _l2_fold(q, v))
+    assert _outcome(df, unrolled_score("ip", "q", "v", d),
+                    unrolled_score("l2", "q", "v", d)) == want, (d, rows)
+    assert _outcome(df, _text_fold("ip"), _text_fold("l2")) == want, \
         (d, rows)
-    got = _outcome(df, unrolled_score("cosine", "q", "v", d))
-    assert got == _outcome(df, cosine_similarity(q, v)), (d, rows)
+    want = _outcome(df, cosine_similarity(q, v))
+    assert _outcome(df, unrolled_score("cosine", "q", "v", d)) == want, \
+        (d, rows)
+    assert _outcome(df, _text_fold("cosine")) == want, (d, rows)
